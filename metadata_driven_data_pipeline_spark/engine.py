@@ -13,7 +13,9 @@ Rebuild differences (SURVEY §3.1/§4):
 - the annotated validation DataFrame is cached once; sink counts come from
   ``observe()`` metrics materialized by the write itself — the
   read→validate→write lineage executes ONCE per batch instead of 3+ times;
-- consolidation writes via a staging path (no read-overwrite-same-path).
+- consolidation replaces its output through the crash-safe staging swap of
+  ``sinks/swap.py`` (no read-overwrite-same-path; a crash leaves the old or
+  the new output, never neither).
 
 At 100 TB: the per-batch loop stays (ordered at-least-once semantics are the
 contract), but each batch is a partition-pruned scan; independent dataflows

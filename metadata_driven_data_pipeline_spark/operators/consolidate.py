@@ -14,8 +14,14 @@ Deliberate fixes over the reference (SURVEY §2.8 hazards):
 
 - **staging-path overwrite**: the reference overwrite-reads the same JSON
   files it is rewriting (consolidator.py:83 read → 130 write), unsafe under
-  Spark lazy evaluation. We write to ``<output>/.staging-<token>`` then
-  atomically swap directories.
+  Spark lazy evaluation. We write through ``sinks/swap.replace``: a
+  sibling staging directory, then the crash-safe rename-aside swap (a
+  crash leaves the old or the new output, never neither; the next run's
+  ``recover`` rolls an interrupted swap back).
+- **narrow existence probe**: the reference's bare ``except`` treats any
+  read error on the existing output as "first run" and rewrites it from
+  the batches alone. Here only an empty ``<output>/*.<fmt>`` glob counts
+  as absent; every other error propagates and the output stays intact.
 - **deterministic ties**: ``order_by`` accepts a list; ties beyond the list
   fall back to a stable tiebreak over all remaining columns when
   ``deterministic=True`` (the reference's single-column ordering is
@@ -29,11 +35,12 @@ output is the only materialization.
 
 from __future__ import annotations
 
-import uuid
 from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from metadata_driven_data_pipeline_spark.sinks import swap
 
 
 def dedup_keep_latest(
@@ -68,27 +75,16 @@ def dedup_keep_latest(
     )
 
 
-def _swap_into_place(spark: SparkSession, staging: str, output_path: str) -> None:
-    """Atomically replace output_path with staging (Hadoop FS rename)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    out = Path(output_path)
-    fs = out.getFileSystem(conf)
-    if fs.exists(out):
-        fs.delete(out, True)
-    fs.rename(Path(staging), out)
-
-
-def write_consolidated(
-    df: DataFrame, spark: SparkSession, output_path: str, fmt: str = "json"
-) -> None:
-    """Write via a staging directory then swap (fixes the read-overwrite-
-    same-path hazard of consolidator.py:83/130)."""
-    staging = output_path.rstrip("/") + f".staging-{uuid.uuid4().hex[:12]}"
-    df.write.format(fmt).mode("overwrite").save(staging)
-    _swap_into_place(spark, staging, output_path)
+def _has_output(spark: SparkSession, output_path: str, fmt: str) -> bool:
+    """True when ``<output_path>/*.<fmt>`` matches a file. Only a null or
+    empty glob means "no consolidated output yet"; any other error
+    propagates."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        output_path.rstrip("/") + f"/*.{fmt}"
+    )
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.globStatus(pattern)
+    return found is not None and len(found) > 0
 
 
 def consolidate_ok_records(
@@ -113,7 +109,7 @@ def consolidate_ok_records(
     if not dedup_config.get("enabled", False):
         df_all = read(input_pattern)
         record_count = df_all.count()
-        write_consolidated(df_all, spark, output_path, fmt)
+        swap.replace(df_all, output_path, fmt)
         return {
             "status": "success",
             "deduplication_enabled": False,
@@ -126,16 +122,14 @@ def consolidate_ok_records(
     order_direction = dedup_config.get("order_direction", "DESC")
     deterministic = bool(dedup_config.get("deterministic", False))
 
-    # Probe for an existing consolidated output (reference: consolidator.py:77-89;
-    # we scope the except to analysis/IO errors instead of a bare except).
+    # Roll back a swap a crash interrupted, then probe for an existing
+    # consolidated output (reference: consolidator.py:77-89).
+    swap.recover(spark, output_path)
     df_existing = None
     existing_count = 0
-    try:
+    if _has_output(spark, output_path, fmt):
         df_existing = read(output_path.rstrip("/") + f"/*.{fmt}")
         existing_count = df_existing.count()
-    except Exception:
-        df_existing = None
-        existing_count = 0
 
     df_batches = read(input_pattern)
     batch_count = df_batches.count()
@@ -146,7 +140,7 @@ def consolidate_ok_records(
             combined, key_column, order_by, order_direction, deterministic
         )
         total_after = df_dedup.count()
-        write_consolidated(df_dedup, spark, output_path, fmt)
+        swap.replace(df_dedup, output_path, fmt)
         return {
             "status": "success",
             "consolidation_mode": "incremental",
@@ -164,7 +158,7 @@ def consolidate_ok_records(
         df_batches, key_column, order_by, order_direction, deterministic
     )
     total_after = df_dedup.count()
-    write_consolidated(df_dedup, spark, output_path, fmt)
+    swap.replace(df_dedup, output_path, fmt)
     return {
         "status": "success",
         "consolidation_mode": "full",

@@ -12,10 +12,7 @@ it unconditionally.
 
 from __future__ import annotations
 
-import math
-from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -37,62 +34,3 @@ def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def _list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) for every data file under ``path`` (Hadoop FS listing;
-    skips _SUCCESS/hidden files)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(path)
-    fs = root.getFileSystem(conf)
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        out.append((st.getPath().toString(), st.getLen()))
-    return out
-
-
-def compact_files(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    target_file_bytes: int = 128 * 1024 * 1024,
-    options: dict[str, Any] | None = None,
-) -> dict[str, int]:
-    """Small-file compaction: rewrite a directory of many small files into
-    ``ceil(total_bytes / target_file_bytes)`` files, via a staging path +
-    atomic swap (same pattern as consolidation — never read-overwrite the
-    live path).
-
-    The 100 TB maintenance op: streaming/incremental sinks accrete
-    per-micro-batch files whose per-file open/footer cost eventually
-    dominates scans; periodic compaction to ~128 MB restores scan
-    efficiency. ``coalesce`` (not ``repartition``) merges partitions
-    without a shuffle — each output file is written by one task reading
-    whole input files.
-
-    Returns {files_before, files_after, bytes_total}.
-    """
-    from metadata_driven_data_pipeline_spark.operators.consolidate import (
-        write_consolidated,
-    )
-
-    files = _list_data_files(spark, path)
-    total = sum(sz for _, sz in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    reader = spark.read.format(fmt)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    df = reader.load(path).coalesce(n_out)
-    write_consolidated(df, spark, path, fmt=fmt)
-    after = _list_data_files(spark, path)
-    return {
-        "files_before": len(files),
-        "files_after": len(after),
-        "bytes_total": total,
-    }

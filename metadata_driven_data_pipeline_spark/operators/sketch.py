@@ -293,8 +293,8 @@ def bloom_probe(
       crosses the driver, never corpus rows), broadcasts once (~8 MB
       at m=2^25 vs a ~100 MB 1M-row hash relation), and an
       Arrow-vectorized pandas UDF does the bit lookups on positions
-      computed JVM-side.  Measured on tools/probe_bloom.py; no shuffle
-      of the probed frame either way.
+      computed JVM-side.  Measured with tools/probe_bloom.py at commit
+      5a5a0bc (BASELINE.md); no shuffle of the probed frame either way.
     """
     if impl == "bitarray":
         import numpy as np
@@ -378,7 +378,8 @@ def bloom_prefilter_dedup(
     SEMI-joins the index against it, so the index is scanned map-side
     but NEVER shuffled — the plain anti-join shuffles every index row
     per batch, which is exactly what a billions-row index can't afford
-    (tools/probe_bloom.py measures the crossover).  Candidate volume is
+    (BASELINE.md records the crossover, measured with
+    tools/probe_bloom.py at commit 5a5a0bc).  Candidate volume is
     bounded by dup_rate·batch + fp_rate·batch; if a pathological batch
     made it huge, Spark's broadcast limit fails fast rather than
     silently degrading.
@@ -390,8 +391,9 @@ def bloom_prefilter_dedup(
     past the cap it falls through to the semi scan); ``"auto"`` =
     derive the cap from the stored index's byte size at call time
     (``index_path`` required). The r5 probe calibration
-    (tools/probe_bloom.py, BASELINE.md): the IN predicate's cost grows
-    ~linearly with list size (~0.5 ms/key of plan+codegen at local[32])
+    (BASELINE.md; tools/probe_bloom.py at commit 5a5a0bc): the IN
+    predicate's cost grows ~linearly with list size (~0.5 ms/key of
+    plan+codegen at local[32])
     while the semi scan's cost grows with INDEX size, so the crossover
     is ~1k candidates on a 64 MB index and ~5k on a 640 MB one —
     ``cap = clamp(index_bytes / 96 KiB, 1024, 65536)`` tracks both

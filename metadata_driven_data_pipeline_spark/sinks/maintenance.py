@@ -8,19 +8,21 @@ object-store request rates). Compaction rewrites a table into
 ``ceil(total_bytes / target_bytes)`` right-sized files.
 
 Uses the Hadoop FileSystem API (via the session's JVM) for sizing, so it
-works on any configured scheme (file://, s3a://, ...), and the same
-staging-path + atomic-swap discipline as the consolidation writer (never
-read-overwrite-in-place — the reference's hazard, SURVEY §2.8).
+works on any configured scheme (file://, s3a://, ...), and replaces the
+table through :func:`.swap.replace`, the same crash-safe staging swap as
+the consolidation writer (never read-overwrite-in-place — the
+reference's hazard, SURVEY §2.8).
 """
 
 from __future__ import annotations
 
 import math
-import shutil
 import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from metadata_driven_data_pipeline_spark.sinks import swap
 
 
 def table_file_stats(spark: SparkSession, path: str) -> dict:
@@ -54,19 +56,14 @@ def compact_small_files(
 
     Plan: one read → ``repartition(n)`` (round-robin — even output sizes)
     or ``repartitionByRange(n, sort_by)`` when sorting → staging write →
-    atomic swap. Returns before/after file stats.
+    crash-safe swap. Returns before/after file stats.
 
     Scale shape: exactly one shuffle of the data (any compaction must
     move every byte once); no driver-side row handling. Run it from the
     same scheduler slot as consolidation — it is idempotent and safe to
     re-run (the swap is all-or-nothing).
     """
-    from metadata_driven_data_pipeline_spark.sinks.swap import (
-        atomic_swap,
-        recover_swap,
-    )
-
-    recover_swap(path)
+    swap.recover(spark, path)
     before = table_file_stats(spark, path)
     n_files = max(1, math.ceil(before["bytes"] / max(1, target_bytes)))
     df = spark.read.format(fmt).load(path)
@@ -76,9 +73,7 @@ def compact_small_files(
         ).sortWithinPartitions(*sort_by)
     else:
         out = df.repartition(n_files)
-    staging = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    out.write.format(fmt).mode("overwrite").save(staging)
-    atomic_swap(path, staging)
+    swap.replace(out, path, fmt)
     after = table_file_stats(spark, path)
     return {"before": before, "after": after, "target_files": n_files}
 
@@ -194,5 +189,5 @@ def merge_upsert(
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", prev
         )
-    shutil.rmtree(staging, ignore_errors=True)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
     return {"partitions_rewritten": rewritten, "rows_written": rows}

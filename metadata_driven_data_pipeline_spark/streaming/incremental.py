@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from metadata_driven_data_pipeline_spark.sinks import swap
+
 
 def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
     """Normalize an event-time column to TIMESTAMP (with timezone).
@@ -197,24 +199,6 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str | None = None) -> N
     q.awaitTermination()
 
 
-def _output_exists(spark, path: str) -> bool:
-    """Explicit existence check via the Hadoop FileSystem of the path's
-    scheme (the merge_upsert bootstrap pattern, sinks/maintenance.py).
-
-    foreachBatch merges must distinguish "first batch, no table yet"
-    from "table exists but the read failed": a blanket try/except around
-    the read would silently discard ALL accumulated state on a transient
-    failure (corrupt file, permissions, FS hiccup) and overwrite it with
-    the current batch only — silent data loss in a monitor.  With the
-    explicit check, a real read error propagates, fails the micro-batch
-    before the checkpoint commits, and the stream retries from intact
-    state."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def _committed_batch(existing: DataFrame) -> int | None:
     """Highest batch id already folded into a stored monitor grid (the
     ``last_batch_id`` column every grid row carries), or None for
@@ -239,18 +223,16 @@ def _merge_additive_grid(
     ``last_batch_id`` watermark every grid row carries — additive
     counters are NOT idempotent under foreachBatch's at-least-once
     re-delivery), then commit grid + watermark together via the
-    crash-safe rename-aside swap (sinks/swap.py)."""
-    import uuid
+    crash-safe rename-aside swap (sinks/swap.py).
 
-    from metadata_driven_data_pipeline_spark.sinks.swap import (
-        atomic_swap,
-        recover_swap,
-    )
-
+    "No grid yet" is an explicit existence check, never a caught read
+    error: a failed read of the stored grid propagates and fails the
+    micro-batch before the checkpoint commits, instead of silently
+    replacing the accumulated grid with this batch alone."""
     spark = batch_grid.sparkSession
-    recover_swap(output_path)
+    swap.recover(spark, output_path)
     grid = batch_grid
-    if _output_exists(spark, output_path):
+    if swap.exists(spark, output_path):
         existing = spark.read.format(fmt).load(output_path)
         committed = _committed_batch(existing)
         if committed is not None and committed >= batch_id:
@@ -262,9 +244,7 @@ def _merge_additive_grid(
             .agg(F.sum("cnt").alias("cnt"))
         )
     grid = grid.withColumn("last_batch_id", F.lit(batch_id))
-    staging = f"{output_path}__staging_{uuid.uuid4().hex[:8]}"
-    grid.write.format(fmt).mode("overwrite").save(staging)
-    atomic_swap(output_path, staging)
+    swap.replace(grid, output_path, fmt)
 
 
 def run_upsert_consolidated(
@@ -288,20 +268,14 @@ def run_upsert_consolidated(
     production path is a format with merge support; this keeps the
     parity-level file-based contract.
     """
-    import uuid
-
     from metadata_driven_data_pipeline_spark.operators.consolidate import (
         dedup_keep_latest,
-    )
-    from metadata_driven_data_pipeline_spark.sinks.swap import (
-        atomic_swap,
-        recover_swap,
     )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        recover_swap(output_path)
-        if _output_exists(spark, output_path):
+        swap.recover(spark, output_path)
+        if swap.exists(spark, output_path):
             existing = spark.read.format(fmt).load(output_path)
             unioned = existing.unionByName(batch_df)
         else:
@@ -309,9 +283,7 @@ def run_upsert_consolidated(
         merged = dedup_keep_latest(
             unioned, key_columns, order_by, deterministic=True
         )
-        staging = f"{output_path}__staging_{uuid.uuid4().hex[:8]}"
-        merged.write.format(fmt).mode("overwrite").save(staging)
-        atomic_swap(output_path, staging)
+        swap.replace(merged, output_path, fmt)
 
     q = (
         df.writeStream.foreachBatch(merge)

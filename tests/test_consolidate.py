@@ -139,3 +139,88 @@ def test_ko_never_consolidated(spark, tmp_path):
     _write_batches(spark, root)
     results = consolidate_data(spark, {"consolidation": consolidation_config(root)})
     assert results["ko_records"]["status"] == "skipped"
+
+
+def _add_batch_3(spark, root):
+    spark.createDataFrame(
+        [Row(policy_number="P2", batch_date="2025-12-03", v="b3")]
+    ).write.mode("overwrite").json(f"{root}/batch-2025-12-03/output")
+
+
+def test_crash_between_renames_recovers_incremental(spark, tmp_path):
+    """A crash after the swap renamed the output aside and before the new
+    one landed leaves only ``output__prev``; the next run must roll it
+    back and consolidate incrementally, not restart from the batches."""
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    consolidate_ok_records(spark, cfg)
+    out = f"{root}/consolidated/output"
+    os.rename(out, out + "__prev")
+    _add_batch_3(spark, root)
+
+    result = consolidate_ok_records(spark, cfg)
+    assert result["consolidation_mode"] == "incremental"
+    assert result["existing_consolidated_records"] == 3
+    assert os.listdir(f"{root}/consolidated") == ["output"]
+    rows = {r["policy_number"]: r["v"] for r in spark.read.json(out).collect()}
+    assert rows == {"P1": "b2", "P2": "b3", "P3": "b2"}
+
+
+def test_existing_output_read_error_propagates(spark, tmp_path, monkeypatch):
+    """Only "not found" means no consolidated output yet: a failing read
+    of the existing output must fail the run and leave it intact instead
+    of silently rewriting it from the batches alone."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    consolidate_ok_records(spark, cfg)
+    _add_batch_3(spark, root)
+    out = f"{root}/consolidated/output"
+
+    real_load = DataFrameReader.load
+
+    def failing_load(self, path=None, *args, **kwargs):
+        if isinstance(path, str) and path.startswith(out):
+            raise OSError("injected read failure")
+        return real_load(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "load", failing_load)
+    with pytest.raises(OSError, match="injected read failure"):
+        consolidate_ok_records(spark, cfg)
+    monkeypatch.undo()
+
+    rows = {r["policy_number"]: r["v"] for r in spark.read.json(out).collect()}
+    assert rows == {"P1": "b2", "P2": "b1", "P3": "b2"}
+    assert os.listdir(f"{root}/consolidated") == ["output"]
+
+
+def test_monitor_grid_on_file_uri(spark, tmp_path):
+    """The replace primitive runs on the Hadoop FS of the path's scheme,
+    so a streaming monitor whose output is a ``file://`` URI accumulates
+    like a bare path."""
+    from metadata_driven_data_pipeline_spark.operators.sketch import cms_build
+    from metadata_driven_data_pipeline_spark.streaming.incremental import (
+        cms_monitor_merge_batch,
+    )
+
+    out = "file://" + str(tmp_path / "grid")
+    b0 = spark.createDataFrame(
+        [Row(doc_id=1, text="the cat sat"), Row(doc_id=2, text="the dog")]
+    )
+    b1 = spark.createDataFrame([Row(doc_id=3, text="the bird")])
+    cms_monitor_merge_batch(b0, 0, out, depth=2, width=64)
+    cms_monitor_merge_batch(b1, 1, out, depth=2, width=64)
+
+    got = {
+        (r.depth, r.bucket): (r.cnt, r.last_batch_id)
+        for r in spark.read.parquet(out).collect()
+    }
+    want = {
+        (r.depth, r.bucket): (r.cnt, 1)
+        for r in cms_build(b0.unionByName(b1), depth=2, width=64).collect()
+    }
+    assert got == want
+    assert os.listdir(tmp_path) == ["grid"]

@@ -50,36 +50,35 @@ def test_roundtrip(spark, tmp_path, fmt, extra):
 class TestCompaction:
     def test_compact_small_files(self, spark, tmp_path):
         """Many tiny files -> few files, identical rows, same live path."""
-        from metadata_driven_data_pipeline_spark.operators.partitioning import (
-            _list_data_files,
-            compact_files,
+        from metadata_driven_data_pipeline_spark.sinks.maintenance import (
+            compact_small_files,
+            table_file_stats,
         )
 
         out = str(tmp_path / "accreted")
         df = spark.range(10000).withColumnRenamed("id", "v")
         df.repartition(40).write.mode("overwrite").parquet(out)
-        before = _list_data_files(spark, out)
-        assert len(before) == 40
-        total = sum(sz for _, sz in before)
+        before = table_file_stats(spark, out)
+        assert before["files"] == 40
 
-        stats = compact_files(spark, out, target_file_bytes=total)
-        assert stats["files_before"] == 40
-        assert stats["files_after"] <= 2
+        stats = compact_small_files(spark, out, target_bytes=before["bytes"])
+        assert stats["before"]["files"] == 40
+        assert stats["after"]["files"] <= 2
         back = spark.read.parquet(out)
         assert back.count() == 10000
         assert back.agg({"v": "sum"}).first()[0] == sum(range(10000))
 
     def test_compact_respects_target_size(self, spark, tmp_path):
-        from metadata_driven_data_pipeline_spark.operators.partitioning import (
-            _list_data_files,
-            compact_files,
+        from metadata_driven_data_pipeline_spark.sinks.maintenance import (
+            compact_small_files,
+            table_file_stats,
         )
 
         out = str(tmp_path / "sized")
         spark.range(20000).repartition(30).write.mode("overwrite").parquet(out)
-        total = sum(sz for _, sz in _list_data_files(spark, out))
-        stats = compact_files(spark, out, target_file_bytes=total // 4 + 1)
-        assert 3 <= stats["files_after"] <= 5
+        total = table_file_stats(spark, out)["bytes"]
+        stats = compact_small_files(spark, out, target_bytes=total // 4 + 1)
+        assert 3 <= stats["after"]["files"] <= 5
 
 
 def test_permissive_corrupt_rows_survive_and_route_ko(spark, tmp_path):

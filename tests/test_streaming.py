@@ -691,29 +691,25 @@ def test_swap_crash_window_recovers_accumulated_grid(spark, tmp_path):
     assert not os.path.exists(out + "__prev")
 
 
-def test_atomic_swap_primitives(tmp_path):
+def test_atomic_swap_primitives(spark, tmp_path):
     import os
 
-    from metadata_driven_data_pipeline_spark.sinks.swap import (
-        atomic_swap,
-        recover_swap,
-    )
+    from metadata_driven_data_pipeline_spark.sinks import swap
 
-    path, staging = str(tmp_path / "t"), str(tmp_path / "t__s")
-    os.makedirs(path)
-    open(os.path.join(path, "old.txt"), "w").write("old")
-    os.makedirs(staging)
-    open(os.path.join(staging, "new.txt"), "w").write("new")
-    atomic_swap(path, staging)
-    assert os.listdir(path) == ["new.txt"]
-    assert not os.path.exists(staging)
-    assert not os.path.exists(path + "__prev")
+    def rows():
+        return sorted(r.v for r in spark.read.parquet(path).collect())
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("old",)], "v string").write.parquet(path)
+    swap.replace(spark.createDataFrame([("new",)], "v string"), path, "parquet")
+    assert rows() == ["new"]
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no staging, no __prev
     # recover is a no-op when the target is present
-    assert recover_swap(path) is False
+    assert swap.recover(spark, path) is False
     # ... and restores __prev when the target vanished mid-swap
     os.rename(path, path + "__prev")
-    assert recover_swap(path) is True
-    assert os.listdir(path) == ["new.txt"]
+    assert swap.recover(spark, path) is True
+    assert rows() == ["new"]
 
 
 def test_ngram_model_monitor_equals_batch_model_and_scores(spark, tmp_path):
