@@ -15,7 +15,11 @@ Rebuild differences (SURVEY §3.1/§4):
   read→validate→write lineage executes ONCE per batch instead of 3+ times;
 - consolidation replaces its output through the crash-safe staging swap of
   ``sinks/swap.py`` (no read-overwrite-same-path; a crash leaves the old or
-  the new output, never neither).
+  the new output, never neither). It keeps its own watermark of folded
+  input files, so a run reads the existing output plus only the batch
+  files not yet folded, and a run with none does nothing; a batch whose
+  manifest commit landed before a crash is still folded by the next run,
+  no-op or not, because the watermark is not "this run's batches".
 
 At 100 TB: the per-batch loop stays (ordered at-least-once semantics are the
 contract), but each batch is a partition-pruned scan; independent dataflows
@@ -265,6 +269,7 @@ class Engine:
                     if self.manifest_path:
                         write_manifest(manifest, self.manifest_path)
 
+            t0 = RunLog.now()
             consolidation_result = consolidate_data(self.spark, self.metadata)
             ok_info = {
                 ("consolidation_status" if k == "status" else k): v
@@ -273,7 +278,7 @@ class Engine:
             }
             stage["sub_stages"].append(
                 RunLog.sub_stage(
-                    "consolidation", "consolidation", RunLog.now(), "success", **ok_info
+                    "consolidation", "consolidation", t0, "success", **ok_info
                 )
             )
             self.log.end_stage(stage, "success")

@@ -95,3 +95,31 @@ def replace(df: DataFrame, path: str, fmt: str) -> None:
     _check(fs.rename(Path(staging), Path(path)), "rename", staging, path)
     if had_old:
         _check(fs.delete(Path(prev), True), "delete", prev)
+
+
+def read_text(spark: SparkSession, path: str) -> str | None:
+    """UTF-8 content of the file at ``path``, or None when it does not
+    exist. Any other error propagates."""
+    fs, Path = _fs(spark, path)
+    if not fs.exists(Path(path)):
+        return None
+    stream = fs.open(Path(path))
+    try:
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+    finally:
+        stream.close()
+    return bytes(data).decode("utf-8")
+
+
+def publish_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write ``text`` to ``path`` as one step: into ``path.tmp`` first,
+    then a rename, so a reader sees the whole file or none. ``path``
+    must not exist yet (the rename never overwrites)."""
+    fs, Path = _fs(spark, path)
+    tmp = path + ".tmp"
+    out = fs.create(Path(tmp), True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+    _check(fs.rename(Path(tmp), Path(path)), "rename", tmp, path)

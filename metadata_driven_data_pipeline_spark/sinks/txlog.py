@@ -91,6 +91,7 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -5069,14 +5070,13 @@ def _cdc_contract_errors():
     runtime exception raised by ``assert_true`` during the merge's
     staging write) back into the ValueError the keyed-replication
     contract promises, preserving the message text the tests and
-    callers match on. Everything else propagates untouched."""
+    callers match on. Only that error class is translated: any other
+    exception propagates untouched, whatever its message says."""
     try:
         yield
-    except ValueError:
-        raise
-    except Exception as e:
+    except SparkRuntimeException as e:
         m = re.search(r"replicate: (?:duplicate|NULL) key[^\n]*", str(e))
-        if m is not None:
+        if e.getCondition() == "USER_RAISED_EXCEPTION" and m is not None:
             raise ValueError(m.group(0)) from e
         raise
 
@@ -6251,7 +6251,8 @@ def _mv_minmax_rescan(
     mm: dict,
     rescan_src,
     stats: dict | None,
-    cand_bounds: tuple = (None, None),
+    *,
+    cand_bounds: tuple,
 ) -> DataFrame:
     """MIN/MAX delete handling for :func:`_apply_mv_feed` (r11, VERDICT
     r10 #2): tag each delta group with ``__mv_rescan`` and, for the

@@ -1,9 +1,11 @@
 """Consolidation semantics (reference pipeline/consolidator.py; SURVEY §2.8):
 keep-latest window dedup, full vs incremental modes, staging-path overwrite,
-KO never consolidated."""
+KO never consolidated, and the folded-files watermark."""
 
+import glob
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -224,3 +226,273 @@ def test_monitor_grid_on_file_uri(spark, tmp_path):
     }
     assert got == want
     assert os.listdir(tmp_path) == ["grid"]
+
+
+# -- folded-files watermark ------------------------------------------------
+
+
+def _rows(spark, path):
+    return {
+        (r.policy_number, r.batch_date, r.v) for r in spark.read.json(path).collect()
+    }
+
+
+def _snapshot(path):
+    """name -> (size, mtime) of every file in ``path``."""
+    return {
+        n: (os.stat(f"{path}/{n}").st_size, os.stat(f"{path}/{n}").st_mtime_ns)
+        for n in os.listdir(path)
+    }
+
+
+def _overwrite_local(path, text):
+    """Rewrite a Spark-written local file in place, dropping its checksum
+    sibling so the local Hadoop FS reads the new bytes."""
+    with open(path, "w") as f:
+        f.write(text)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_noop_call_is_up_to_date_and_runs_no_job(spark, tmp_path):
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    sc = spark.sparkContext
+    fold_group, noop_group = (f"cons-{uuid.uuid4().hex[:8]}" for _ in range(2))
+    out = f"{root}/consolidated/output"
+    try:
+        sc.setJobGroup(fold_group, "consolidation that folds")
+        consolidate_ok_records(spark, cfg)
+        before = _snapshot(out)
+        sc.setJobGroup(noop_group, "consolidation with nothing new")
+        result = consolidate_ok_records(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert result["consolidation_mode"] == "up_to_date"
+    assert result["files_folded"] == 0
+    assert result["total_records_after"] == 3
+    assert sc.statusTracker().getJobIdsForGroup(fold_group)
+    assert sc.statusTracker().getJobIdsForGroup(noop_group) == []
+    assert _snapshot(out) == before
+
+
+def test_rewritten_batch_file_is_folded_again(spark, tmp_path):
+    """A file rewritten in place keeps its path but changes length and
+    modification time, so it is new to the watermark."""
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    consolidate_ok_records(spark, cfg)
+    b2 = f"{root}/batch-2025-12-02/output"
+    part = next(
+        f"{b2}/{n}" for n in os.listdir(b2)
+        if n.endswith(".json") and '"P3"' in open(f"{b2}/{n}").read()
+    )
+    _overwrite_local(
+        part,
+        '{"policy_number":"P3","batch_date":"2025-12-04","v":"b2r"}\n'
+        '{"policy_number":"P4","batch_date":"2025-12-04","v":"b2r"}\n',
+    )
+
+    result = consolidate_ok_records(spark, cfg)
+    assert result["consolidation_mode"] == "incremental"
+    assert result["files_folded"] == 1
+    assert result["per_batch_records"] == 2
+    assert _rows(spark, f"{root}/consolidated/output") == {
+        ("P1", "2025-12-02", "b2"), ("P2", "2025-12-01", "b1"),
+        ("P3", "2025-12-04", "b2r"), ("P4", "2025-12-04", "b2r"),
+    }
+
+
+@pytest.mark.parametrize("change", ["marker_deleted", "order_direction"])
+def test_missing_or_stale_marker_refolds_everything(spark, tmp_path, change):
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    consolidate_ok_records(spark, cfg)
+    out = f"{root}/consolidated/output"
+    if change == "marker_deleted":
+        os.remove(f"{out}/_consolidated")
+    else:
+        cfg["ok_records"]["deduplication"]["order_direction"] = "ASC"
+    _add_batch_3(spark, root)
+
+    result = consolidate_ok_records(spark, cfg)
+    dedup = cfg["ok_records"]["deduplication"]
+    batches = spark.read.json(cfg["ok_records"]["input_pattern"])
+    data_files = [
+        p for p in glob.glob(cfg["ok_records"]["input_pattern"]) if os.path.getsize(p)
+    ]
+    assert result["files_folded"] == len(data_files)
+    want = {
+        (r.policy_number, r.batch_date, r.v)
+        for r in dedup_keep_latest(
+            batches, "policy_number", "batch_date", dedup["order_direction"]
+        ).collect()
+    }
+    assert _rows(spark, out) == want
+
+
+def test_corrupt_marker_raises_and_keeps_output(spark, tmp_path):
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    cfg = consolidation_config(root)
+    consolidate_ok_records(spark, cfg)
+    out = f"{root}/consolidated/output"
+    _overwrite_local(f"{out}/_consolidated", '{"files": [')
+    _add_batch_3(spark, root)
+    before = _snapshot(out)
+
+    with pytest.raises(ValueError, match="corrupt consolidation marker"):
+        consolidate_ok_records(spark, cfg)
+    assert _snapshot(out) == before
+    assert os.listdir(f"{root}/consolidated") == ["output"]
+    assert _rows(spark, out) == {
+        ("P1", "2025-12-02", "b2"), ("P2", "2025-12-01", "b1"),
+        ("P3", "2025-12-02", "b2"),
+    }
+
+
+def test_directory_glob_matches_file_glob(spark, tmp_path):
+    """``batch-*/output`` folds the same files as ``batch-*/output/*.json``:
+    ``_``/``.`` names are skipped even when non-empty (an object-store
+    committer writes a JSON manifest into ``_SUCCESS``)."""
+    root = str(tmp_path)
+    _write_batches(spark, root)
+    _overwrite_local(
+        f"{root}/batch-2025-12-01/output/_SUCCESS",
+        '{"policy_number":"PX","batch_date":"2099-01-01","v":"manifest"}\n',
+    )
+    by_file = consolidation_config(root)
+    by_dir = consolidation_config(root)
+    by_dir["ok_records"]["input_pattern"] = f"{root}/batch-*/output"
+    by_dir["ok_records"]["output_path"] = f"{root}/consolidated_by_dir/output"
+
+    a = consolidate_ok_records(spark, by_file)
+    b = consolidate_ok_records(spark, by_dir)
+    assert a["files_folded"] == b["files_folded"]
+    assert b["total_records_before"] == 4
+    assert _rows(spark, by_dir["ok_records"]["output_path"]) == _rows(
+        spark, by_file["ok_records"]["output_path"]
+    )
+
+
+def test_partitioned_batch_output_is_rejected(spark, tmp_path):
+    """Folding a partitioned batch output file by file would drop its
+    partition column, so a ``k=v`` directory under a match raises."""
+    root = str(tmp_path)
+    spark.createDataFrame(
+        [Row(policy_number="P1", batch_date="2025-12-01", v="b1")]
+    ).write.partitionBy("v").json(f"{root}/batch-2025-12-01/output")
+    cfg = consolidation_config(root)
+    cfg["ok_records"]["input_pattern"] = f"{root}/batch-*/output"
+    with pytest.raises(ValueError, match="partition directory"):
+        consolidate_ok_records(spark, cfg)
+
+
+# -- through the engine ----------------------------------------------------
+
+
+def _engine_metadata(root):
+    return {
+        "processing_mode": "incremental",
+        "batch_config": {
+            "input_pattern": f"{root}/input/batch-{{date}}/*.jsonl",
+            "date_format": "%Y-%m-%d",
+        },
+        "dataflows": [
+            {
+                "name": "ingest",
+                "sources": [
+                    {
+                        "name": "raw",
+                        "path": f"{root}/input/batch-{{date}}/*.jsonl",
+                        "format": "json",
+                    }
+                ],
+                "transformations": [
+                    {
+                        "name": "dated",
+                        "type": "add_fields",
+                        "params": {
+                            "input": "raw",
+                            "addFields": [
+                                {"name": "batch_date", "function": "batch_date"}
+                            ],
+                        },
+                    }
+                ],
+                "sinks": [
+                    {
+                        "input": "dated",
+                        "name": "ok",
+                        "path": f"{root}/batch-{{date}}/output",
+                        "format": "json",
+                        "saveMode": "overwrite",
+                    }
+                ],
+            }
+        ],
+        "consolidation": consolidation_config(root),
+    }
+
+
+def _land(root, date, rows):
+    os.makedirs(f"{root}/input/batch-{date}")
+    with open(f"{root}/input/batch-{date}/input_1.jsonl", "w") as f:
+        for key, v in rows:
+            f.write(json.dumps({"policy_number": key, "v": v}) + "\n")
+
+
+def test_consolidation_substage_times_the_fold(spark, tmp_path):
+    from metadata_driven_data_pipeline_spark.engine import Engine
+
+    root = str(tmp_path)
+    _land(root, "2025-12-01", [("P1", "a"), ("P2", "a")])
+    log = Engine(spark, _engine_metadata(root), run_id="t1").run()
+    subs = log["stages"][0]["sub_stages"]
+    cons = next(s for s in subs if s["name"] == "consolidation")
+    last_sink = [s for s in subs if s["stage_type"] == "sink"][-1]
+    assert cons["consolidation_mode"] == "full"
+    assert cons["files_folded"] >= 1 and cons["total_records_after"] == 2
+    assert cons["duration_seconds"] > 0
+    assert cons["started_at"] >= last_sink["completed_at"]
+
+
+def test_crash_after_manifest_commit_is_folded_by_noop_run(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 2's manifest commit lands, then consolidation crashes. The
+    next run's batch watermark rejects every batch, and it must still
+    fold batch 2."""
+    from metadata_driven_data_pipeline_spark import engine
+    from metadata_driven_data_pipeline_spark.manifest import read_manifest
+
+    root = str(tmp_path)
+    md = _engine_metadata(root)
+    manifest = f"{root}/state/manifest.json"
+    _land(root, "2025-12-01", [("P1", "a"), ("P2", "a")])
+    engine.Engine(spark, md, run_id="r1", manifest_path=manifest).run()
+    _land(root, "2025-12-02", [("P1", "b"), ("P3", "b")])
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before consolidation")
+
+    monkeypatch.setattr(engine, "consolidate_data", crash)
+    with pytest.raises(RuntimeError, match="crash before consolidation"):
+        engine.Engine(spark, md, run_id="r2", manifest_path=manifest).run()
+    monkeypatch.undo()
+    assert read_manifest(manifest)["last_processed_batch"] == "2025-12-02"
+
+    log = engine.Engine(spark, md, run_id="r3", manifest_path=manifest).run()
+    subs = {s["name"]: s for s in log["stages"][0]["sub_stages"]}
+    assert subs["watermark_filter"]["rejected_batches"] == [
+        "2025-12-01", "2025-12-02"
+    ]
+    assert subs["consolidation"]["consolidation_mode"] != "up_to_date"
+    assert _rows(spark, f"{root}/consolidated/output") == {
+        ("P1", "2025-12-02", "b"), ("P2", "2025-12-01", "a"),
+        ("P3", "2025-12-02", "b"),
+    }

@@ -115,3 +115,18 @@ def test_ivf_maintain_null_key_fast_path(spark, tmp_path, monkeypatch):
     cents = sim.ivf_centroids(4, 2)
     with pytest.raises(ValueError, match="non-NULL keys"):
         sim.maintain_ivf_index(spark, src, idx, 4, cents)
+
+
+def test_cdc_contract_errors_translates_only_the_assert_true_error():
+    """Only the in-plan ``assert_true`` error (a SparkRuntimeException of
+    condition USER_RAISED_EXCEPTION) becomes the contract ValueError; any
+    other exception whose text merely contains the contract message
+    propagates unchanged."""
+    from pyspark.errors import SparkRuntimeException
+
+    msg = "replicate: duplicate key in ['k'] at source commit range (0, 1]"
+    for exc in (RuntimeError(msg), SparkRuntimeException(message=msg)):
+        with pytest.raises(type(exc)) as info:
+            with txlog._cdc_contract_errors():
+                raise exc
+        assert info.value is exc
