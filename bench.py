@@ -405,6 +405,19 @@ def run_series(
     }
 
 
+def _cpu_count(cpus: str) -> int | None:
+    """The core count a ``local[<cpus>]`` master pins, or None when
+    ``cpus`` is not a plain number (``*``: every core of the host)."""
+    return int(cpus) if cpus.strip().isdigit() else None
+
+
+def _control_anchor(cpus: str) -> float | None:
+    """Pinned quiet control total for this core count; a non-numeric
+    ``SPARK_GRAFT_CPUS`` has no anchor (inflation is reported as None)."""
+    n = _cpu_count(cpus)
+    return CONTROL_BASELINE_TOTALS.get(str(n)) if n is not None else None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -416,7 +429,10 @@ def main() -> None:
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 32)))
+        .config(
+            "spark.sql.shuffle.partitions",
+            str(max(_cpu_count(cpus) or os.cpu_count() or 32, 32)),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -467,7 +483,7 @@ def main() -> None:
     ctrl = run_series(spark, list(CONTROL), sf_dir, reps, qs=CONTROL)
     # per-core anchor (r12, VERDICT r11 #7): inflation is only meaningful
     # against a baseline pinned at the SAME core count
-    anchor = CONTROL_BASELINE_TOTALS.get(str(int(cpus)))
+    anchor = _control_anchor(cpus)
     control_inflation = (
         round(ctrl["total"] / anchor, 4) if anchor else None
     )
@@ -608,12 +624,16 @@ def _emit(full: dict, series: list[str] = ()) -> None:
     def _bump():
         state["level"] = min(2, state["level"] + 1)
 
-    ladder = [
-        (lambda k=k: slim.pop(k, None))
-        for k in [f"{n}_quiet" for n in series]
-        + [f"{n}_total" for n in series]
-        + ["reps", "value_min_sum", "value_normalized"]
-    ] + [_bump, _bump]
+    ladder = (
+        [_bump]
+        + [
+            (lambda k=k: slim.pop(k, None))
+            for k in [f"{n}_quiet" for n in series]
+            + [f"{n}_total" for n in series]
+            + ["reps", "value_min_sum", "value_normalized"]
+        ]
+        + [_bump]
+    )
     line = _line(state["level"])
     for action in ladder:
         if len(line) <= _SLIM_LINE_CAP:
@@ -623,9 +643,14 @@ def _emit(full: dict, series: list[str] = ()) -> None:
     if len(line) > _SLIM_LINE_CAP:
         print(
             f"WARN: slim bench line still {len(line)} bytes after "
-            "dropping optional fields",
+            "dropping optional fields; printing metric/value/unit only "
+            "(the per-query map is in BENCH_RESULT.json)",
             file=sys.stderr,
             flush=True,
+        )
+        line = json.dumps(
+            {k: full.get(k) for k in ("metric", "value", "unit")},
+            separators=(",", ":"),
         )
     print(line, flush=True)
 

@@ -528,13 +528,13 @@ def maintain_ivf_index(
     in sync with a txlog embeddings table by consuming its row-level
     change feed — new/changed vectors are assigned to the TRAINED
     coarse centroids and upserted, deleted vectors tombstone out, all
-    through the same chunked exactly-once MERGE loop as
-    ``txlog.replicate`` (txn watermark cursor, zero-net chunks advance
-    via a schema-only bootstrap + metadata commit). The alternative —
-    rebuilding :func:`ivf_build_index` from scratch — rescans the whole
-    corpus per refresh; this is O(changed vectors) per chunk, the only
-    shape that works when the corpus is 100 TB and the nightly delta is
-    gigabytes. Centroids are pinned by the caller (train once with
+    through the same chunk driver as ``txlog.replicate`` (txn
+    watermark cursor, zero-net chunks advance via a schema-only
+    bootstrap + metadata commit) with its own projecting applier.
+    The alternative — rebuilding :func:`ivf_build_index` from scratch —
+    rescans the whole corpus per refresh; this is O(changed vectors)
+    per chunk, the only shape that works when the corpus is 100 TB and
+    the nightly delta is gigabytes. Centroids are pinned by the caller (train once with
     :func:`train_ivf_centroids`; re-training re-partitions every cell,
     which IS a rebuild by definition). Read the index back for
     :func:`ivf_topk` with :func:`read_ivf_index`. Invariant (pinned in
@@ -555,98 +555,77 @@ def maintain_ivf_index(
 
     if app_id is None:
         app_id = f"ivf-index:{_os.path.abspath(source_root)}"
-    cursor = max(0, txlog.load_snapshot(index_root).txns.get(app_id, 0))
-    start = cursor
-    applied = empty = 0
-    for feed, end in txlog.iter_row_changes(
-        spark, source_root, cursor, max_versions=max_versions
-    ):
-        ctx = f"ivf source commit range ({cursor}, {end}]"
-        # emptiness + id bounds from commit metadata where decidable
-        # (r11, guide §1.2 — same job fusion as txlog.replicate): the
-        # NULL/dup contract rides IN-PLAN on __tomb, which both batch
-        # filters below always evaluate
-        facts = txlog._chunk_facts(feed, [id_col])
-        # contract-error translation covers the whole chunk-apply block
-        # (r12, ADVICE r11): the in-plan guard can fire on the cache fill
-        # or any probe, not only inside merge
-        with txlog._aqe_cached_batches(spark), txlog._cdc_contract_errors():
-            batch = txlog._net_changes(
-                feed, [id_col], guard_ctx=ctx if facts is not None else None
-            ).cache()
-            try:
-                is_empty, lo, hi = facts or txlog._validate_net_batch(
-                    batch, [id_col], ctx
-                )
-                if is_empty:
-                    empty += 1
-                    txlog._bootstrap_for_watermark(
-                        index_root,
-                        StructType(
-                            [
-                                StructField(
-                                    id_col, batch.schema[id_col].dataType, True
-                                ),
-                                StructField("_cv", ArrayType(DoubleType()), True),
-                                StructField("_cn", DoubleType(), True),
-                                StructField("_cell", IntegerType(), True),
-                            ]
-                        ),
-                    )
-                    txlog._advance_txn(index_root, app_id, end)
-                    cursor = end
-                    continue
-                ups = batch.filter(~F.col("__tomb")).select(id_col, emb_col)
-                assigned = ivf_build_index(
-                    ups,
-                    dim,
-                    id_col=id_col,
-                    emb_col=emb_col,
-                    centroids=centroids,
-                    # the chunk batch is already wide (net-change window
-                    # shuffle + scoped AQE cache sizing) — widen here
-                    # costs a plan probe per chunk and re-exchanges a
-                    # chunk-sized frame for nothing (r12)
-                    widen_input=False,
-                ).select(
-                    id_col,
-                    F.col("__cv").alias("_cv"),
-                    F.col("__cn").alias("_cn"),
-                    F.col("__cell").alias("_cell"),
-                    F.lit(False).alias("__tomb"),
-                )
-                tombs = batch.filter(F.col("__tomb")).select(
-                    id_col,
-                    F.lit(None).cast("array<double>").alias("_cv"),
-                    F.lit(None).cast("double").alias("_cn"),
-                    F.lit(None).cast("int").alias("_cell"),
-                    F.lit(True).alias("__tomb"),
-                )
-                txlog.merge(
-                    spark,
-                    assigned.unionByName(tombs),
+
+    def apply(feed, batch_id: int, ctx: str) -> bool:
+        # cached even on the metadata-facts path: the net batch feeds
+        # both the upsert and the tombstone leg below, and both filter
+        # on __tomb, which carries the in-plan key contract guard
+        with txlog._keyed_net_batch(
+            spark, feed, [id_col], ctx, cache=True
+        ) as (batch, is_empty, lo, hi):
+            if is_empty:
+                txlog._advance_watermark(
                     index_root,
-                    [id_col],
-                    order_col=None,
-                    when_matched_delete="__tomb",
-                    txn=(app_id, end),
-                    # assigned ∪ tombs partitions the validated net batch
-                    # by __tomb, so its keys stay exactly the batch's
-                    # (unique, non-NULL, bounds from the validate
-                    # aggregate or commit metadata)
-                    _validated_bounds=(lo, hi),
+                    StructType(
+                        [
+                            StructField(
+                                id_col, batch.schema[id_col].dataType, True
+                            ),
+                            StructField("_cv", ArrayType(DoubleType()), True),
+                            StructField("_cn", DoubleType(), True),
+                            StructField("_cell", IntegerType(), True),
+                        ]
+                    ),
+                    app_id,
+                    batch_id,
                 )
-                applied += 1
-            finally:
-                batch.unpersist()
-        cursor = end
-    return {
-        "app_id": app_id,
-        "from_version": start,
-        "to_version": cursor,
-        "chunks_applied": applied,
-        "chunks_empty": empty,
-    }
+                return False
+            ups = batch.filter(~F.col("__tomb")).select(id_col, emb_col)
+            assigned = ivf_build_index(
+                ups,
+                dim,
+                id_col=id_col,
+                emb_col=emb_col,
+                centroids=centroids,
+                # the chunk batch is already wide (net-change window
+                # shuffle + scoped AQE cache sizing) — widen here
+                # costs a plan probe per chunk and re-exchanges a
+                # chunk-sized frame for nothing (r12)
+                widen_input=False,
+            ).select(
+                id_col,
+                F.col("__cv").alias("_cv"),
+                F.col("__cn").alias("_cn"),
+                F.col("__cell").alias("_cell"),
+                F.lit(False).alias("__tomb"),
+            )
+            tombs = batch.filter(F.col("__tomb")).select(
+                id_col,
+                F.lit(None).cast("array<double>").alias("_cv"),
+                F.lit(None).cast("double").alias("_cn"),
+                F.lit(None).cast("int").alias("_cell"),
+                F.lit(True).alias("__tomb"),
+            )
+            txlog.merge(
+                spark,
+                assigned.unionByName(tombs),
+                index_root,
+                [id_col],
+                order_col=None,
+                when_matched_delete="__tomb",
+                txn=(app_id, batch_id),
+                # assigned ∪ tombs partitions the validated net batch
+                # by __tomb, so its keys stay exactly the batch's
+                # (unique, non-NULL, bounds from the validate
+                # aggregate or commit metadata)
+                _validated_bounds=(lo, hi),
+            )
+            return True
+
+    return txlog._consume_chunks(
+        spark, source_root, index_root, app_id, max_versions, apply,
+        label="ivf ",
+    )
 
 
 def read_ivf_index(spark, index_root: str) -> DataFrame:

@@ -58,6 +58,9 @@ def test_mv_tracks_mixed_history(spark, tmp_path):
     txlog.append(spark, df.repartition(3), src)  # v1
     r = txlog.maintain_aggregate(spark, src, tgt, ["g"], AGGS)
     assert r["chunks_applied"] == 1
+    assert set(txlog.load_snapshot(tgt).txns) == {
+        f"txlog-mv:{os.path.abspath(src)}"
+    }
     _assert_equal(spark, src, tgt)
     # DV update of a slice (group sums shift), then a delete
     txlog.update(
@@ -136,6 +139,46 @@ def test_mv_rejects_unsupported_kinds_and_null_groups(spark, tmp_path):
         txlog.maintain_aggregate(spark, src, tgt, ["g"], AGGS)
 
 
+@pytest.mark.parametrize("lane", ["batch", "stream", "snapshot"])
+@pytest.mark.parametrize(
+    "group_cols, aggs, match",
+    [
+        (["g"], {"m": ("median", "v")}, "supported aggregates"),
+        (["g"], {"_mv_count": ("count", "*")}, "reserved"),
+        (["_nn_s"], {"s": ("sum", "v")}, "collide"),
+        (["g"], {"a": ("avg", "v"), "_avg_cnt_a": ("sum", "v")}, "collide"),
+    ],
+    ids=["median", "mv_count", "nn_clash", "avg_clash"],
+)
+def test_mv_lanes_reject_the_same_arguments_before_any_job(
+    spark, tmp_path, lane, group_cols, aggs, match
+):
+    """All three aggregate-view lanes run one argument check first: the
+    source does not exist, so only the check can raise, and no Spark
+    job may run."""
+    src, tgt = _mk(tmp_path, "missing_src"), _mk(tmp_path, "mv_tgt")
+    calls = {
+        "batch": lambda: txlog.maintain_aggregate(
+            spark, src, tgt, group_cols, aggs
+        ),
+        "stream": lambda: txlog.maintain_aggregate_stream(
+            spark, src, tgt, group_cols, aggs, _mk(tmp_path, "ckpt")
+        ),
+        "snapshot": lambda: txlog.maintain_aggregate_from_snapshot(
+            spark, None, None, tgt, group_cols, aggs, 1
+        ),
+    }
+    sc = spark.sparkContext
+    group = f"mv-args-{lane}-{os.path.basename(str(tmp_path))}"
+    try:
+        sc.setJobGroup(group, "aggregate-view argument check")
+        with pytest.raises(ValueError, match=match):
+            calls[lane]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_declarative_maintain_aggregate_verb(spark, tmp_path):
     import json
 
@@ -182,6 +225,9 @@ def test_mv_stream_converges_and_resumes(spark, tmp_path):
     txlog.maintain_aggregate_stream(
         spark, src, tgt, ["g"], AGGS, ckpt, max_versions=1
     )
+    assert set(txlog.load_snapshot(tgt).txns) == {
+        f"txlog-mv-stream:{os.path.abspath(src)}"
+    }
     _assert_equal(spark, src, tgt)
     # idempotent restart; then catch-up over a zero-net + data commit
     v0 = txlog.load_snapshot(tgt).version

@@ -502,6 +502,9 @@ def test_scd2_history_intervals_and_as_of(spark, tmp_path):
     txlog.optimize(spark, src, target_bytes=64 * 1024 * 1024)  # v5 zero-net
     r = txlog.apply_changes_scd2(spark, src, tgt, ["k"], max_versions=2)
     assert r["chunks_applied"] == 2 and r["chunks_empty"] == 1
+    assert set(txlog.load_snapshot(tgt).txns) == {
+        f"txlog-scd2:{os.path.abspath(src)}"
+    }
     assert r["to_version"] == txlog.load_snapshot(src).version  # incl. zero-net
     hist = txlog.read_table(spark, tgt)
     # a twice-changed key holds adjacent intervals; updated key 10:
@@ -672,6 +675,9 @@ def test_scd2_stream_converges_and_resumes(spark, tmp_path):
     ckpt = _mk(spark, tmp_path, "scd2st_ckpt")
     _scd2_source(spark, src)
     txlog.apply_changes_scd2_stream(spark, src, tgt, ["k"], ckpt, max_versions=2)
+    assert set(txlog.load_snapshot(tgt).txns) == {
+        f"txlog-scd2-stream:{os.path.abspath(src)}"
+    }
     hist = txlog.read_table(spark, tgt)
     cur = hist.filter(F.col("_scd2_end").isNull()).drop("_scd2_start", "_scd2_end")
     s = txlog.read_table(spark, src)

@@ -282,6 +282,9 @@ def test_scd2_from_snapshots_equals_cdc_history(spark, tmp_path):
         txlog.apply_changes_scd2_from_snapshot(
             spark, snap, snap_hist, ["k"], ver
         )
+    assert set(txlog.load_snapshot(snap_hist).txns) == {
+        "txlog-scd2-snapshot"
+    }
     a = txlog.read_table(spark, cdc_hist)
     b = txlog.read_table(spark, snap_hist)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
@@ -311,6 +314,7 @@ def test_maintain_aggregate_from_snapshot(spark, tmp_path):
         spark, s1, s2, tgt, ["g"], aggs, 2
     )
     assert r["applied"]
+    assert set(txlog.load_snapshot(tgt).txns) == {"txlog-mv-snapshot"}
     view = {
         r["g"]: (r["n"], r["sum_v"], r["max_v"])
         for r in txlog.read_table(spark, tgt).collect()
@@ -527,6 +531,9 @@ def test_maintain_ivf_index_equals_rebuild(spark, sf_dir, tmp_path):
     txlog.append(spark, a, src)  # v1
     r = sim.maintain_ivf_index(spark, src, idx, dim, cents, max_versions=1)
     assert r["chunks_applied"] == 1
+    assert set(txlog.load_snapshot(idx).txns) == {
+        f"ivf-index:{os.path.abspath(src)}"
+    }
     txlog.append(spark, b, src)  # v2
     txlog.delete(spark, src, [("vec_id", "<", 50)])  # v3
     r = sim.maintain_ivf_index(spark, src, idx, dim, cents, max_versions=1)

@@ -568,6 +568,9 @@ def test_replicate_keyed_table_end_to_end(spark, tmp_path):
     _mixed_history(spark, src)  # 6 commits incl. delete/DV-update/optimize
     rep = txlog.replicate(spark, src, tgt, ["k"], max_versions=2)
     assert rep["chunks_applied"] >= 2
+    assert set(txlog.load_snapshot(tgt).txns) == {
+        f"txlog-replicate:{os.path.abspath(src)}"
+    }
     assert rep["to_version"] == txlog.load_snapshot(src).version
     assert _rows(txlog.read_table(spark, tgt)) == _rows(
         txlog.read_table(spark, src)
