@@ -35,6 +35,38 @@ maps the primitive to each object store's conditional create (S3
 design carries over unchanged; only this one primitive is
 store-specific, and the race tests run against the seam.
 
+Optimistic concurrency: every commit runs one driver, :func:`_transact`.
+An attempt loads the latest snapshot, plans against it (staging any
+data files), and claims ``version + 1``. A lost claim reloads and
+re-claims with the files already staged, unless a commit in between
+made the plan STALE — then it replans from the new snapshot (the staged
+files are orphaned for :func:`vacuum`). A plan made against snapshot
+``base`` is stale only when the log moved past ``base`` and at least
+one of these holds:
+
+1. the CHECK constraint set changed — the staged rows were validated
+   under the old set (ADVICE r10 #3);
+2. the physical names the batch columns stage under drifted — a
+   concurrent overwrite resets column-mapping history, and the staged
+   files would read back as NULL (ADVICE r7 #1);
+3. an identity watermark the plan assigned ids from moved — the staged
+   ids may collide with the winner's;
+4. the ENTRY of a file the plan removes changed — entry identity, not
+   presence: a deletion-vector delete swaps an entry in place (same
+   path, new mask), and committing over it would resurrect its masked
+   rows (or lose its mask; ADVICE r6);
+5. a new file may match the plan's predicate — its rows belong in the
+   rewrite (under WHEN NOT MATCHED BY SOURCE every new file does).
+
+Anything else — a disjoint append, a swap on a file the plan does not
+touch — just re-claims. One budget (``_MAX_COMMIT_RETRIES``) counts
+every attempt, lost claim or replan. Every commit carries the CURRENT
+schema, not the plan-time one, so a concurrent schema-evolving append
+is never reverted. :func:`commit_staged` cannot replan (its files were
+written by finished executor tasks), so a stale plan raises there.
+Metadata-only commits run the same driver with nothing staged; their
+own per-claim checks live in their payload builders.
+
 Reads are SNAPSHOT-ISOLATED: a reader folds the log once into a pinned
 file list; concurrent commits create new versions without perturbing any
 file the reader holds (files are immutable; removal only unlinks them
@@ -89,7 +121,8 @@ import os
 import re
 import uuid
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -102,12 +135,13 @@ DATA_DIR = "data"
 DV_DIR = "_dv"  # deletion-vector sidecars, one directory per DV commit
 CHECKPOINT_INTERVAL = 10
 _STATS_DISTRIBUTED_THRESHOLD = 64
-# Optimistic-commit retry budget. Losing a version race costs one
-# metadata reload + rebuild (data files are reused), so the cap is
-# generous: under N concurrent writers a claimant can lose many races
-# in a row when descheduled (observed: 20 straight losses with 6
-# writers on a loaded box), and giving up turns ordinary contention
-# into a user-visible failure. Paired with jittered backoff below.
+# Optimistic-commit attempt budget: ONE count per commit covering every
+# attempt, whether it lost the version race (one metadata reload; staged
+# files are reused) or replanned a stale plan. The cap is generous: under
+# N concurrent writers a claimant can lose many races in a row when
+# descheduled (observed: 20 straight losses with 6 writers on a loaded
+# box), and giving up turns ordinary contention into a user-visible
+# failure. Paired with jittered backoff in _transact.
 _MAX_COMMIT_RETRIES = 200
 
 
@@ -1205,42 +1239,136 @@ def _apply_partition_entry(add: dict, pvals: dict) -> None:
         )
 
 
-def _commit_loop(
+def _stage_adds(
+    spark,
+    df: DataFrame,
     root: str,
-    build_payload,
-    check_conflict=None,
+    schema: StructType | None,
+    partition_by: list[str] | None = None,
+    op: str | None = None,
+) -> list[dict]:
+    """Stage ``df`` under the physical column names of the table
+    ``schema`` (``None``: a new generation, staged under its logical
+    names) and return the files' add entries. ``partition_by`` (logical
+    names, validated for ``op``) lays the files out ``key=value`` under
+    the physical names, each entry recording its directory's values."""
+    pdf = _to_physical_df(df, schema)
+    if not partition_by:
+        return _collect_adds(spark, root, _stage_files(spark, pdf, root))
+    pmap = _logical_to_physical(schema) if schema is not None else {}
+    _check_partition_by(partition_by, df.columns, op, pmap)
+    staged = _stage_files(spark, pdf, root, [pmap.get(c, c) for c in partition_by])
+    adds = _collect_adds(spark, root, staged)
+    for add, path in zip(adds, staged):
+        _apply_partition_entry(add, _partition_values_of(root, path, pdf.schema))
+    return adds
+
+
+@dataclass
+class _Plan:
+    """What one planning pass staged against snapshot ``base``, and what
+    a concurrent commit must leave alone for it to stay valid
+    (:meth:`stale`). Metadata-only commits fill in only ``claim``."""
+
+    base: Snapshot
+    adds: list = field(default_factory=list)  # data files this plan wrote
+    # files added without being written (an entry swapped onto a new
+    # deletion-vector mask, clone/convert adoptions): no rows_written
+    linked: list = field(default_factory=list)
+    remove: list = field(default_factory=list)
+    # a NEW file this accepts invalidates the plan; None: none does
+    may_match: Callable[[dict], bool] | None = None
+    columns: list | None = None  # batch columns staged under base's mapping
+    id_assigned: list = field(default_factory=list)  # ids assigned from base
+    # per-claim payload fields (schema, checks), or None to skip the commit
+    claim: Callable[[Snapshot], dict | None] | None = None
+    report: dict = field(default_factory=dict)  # merged into the result
+
+    def stale(self, cur: Snapshot) -> bool:
+        """The one conflict rule ("Optimistic concurrency" in the module
+        docstring)."""
+        base = self.base
+        if cur.version == base.version:
+            return False
+        return (
+            cur.constraints != base.constraints
+            or (
+                self.columns is not None
+                and _staging_map(cur, self.columns)
+                != _staging_map(base, self.columns)
+            )
+            or _identity_drifted(cur, base, self.id_assigned)
+            or any(cur.files.get(p) != base.files.get(p) for p in self.remove)
+            or (
+                self.may_match is not None
+                and any(
+                    p not in base.files and self.may_match(e)
+                    for p, e in cur.files.items()
+                )
+            )
+        )
+
+
+def _transact(
+    root: str,
+    op: str,
+    plan: Callable[[Snapshot], "_Plan | dict"],
+    snap: Snapshot | None = None,
+    txn: tuple[str, int] | None = None,
 ) -> dict:
-    """Optimistic-concurrency commit: claim ``latest+1``; on losing the
-    race, reload and either re-claim (append-style, no conflict
-    possible) or let ``check_conflict(snapshot)`` demand a rebuild by
-    returning True (merge/overwrite-style). Lost claims back off with
-    capped exponential jitter so N concurrent writers fan out instead
-    of livelocking in tight claim spins (backoff only shapes TIMING —
-    commit content stays deterministic)."""
+    """The optimistic-concurrency commit driver (the rule is in the
+    module docstring). ``plan(cur)`` stages against snapshot ``cur`` and
+    returns a :class:`_Plan`, or a finished result dict (a no-op, a
+    bootstrap through :func:`append`). The first attempt plans against
+    the caller's ``snap`` when given — safe because the claim is
+    put-if-absent at ``snap.version + 1`` and a lost claim reloads.
+    ``txn=(app_id, batch_id)`` at or below the app's watermark skips.
+    Lost claims back off with capped exponential jitter so N concurrent
+    writers fan out instead of livelocking in tight claim spins (backoff
+    only shapes TIMING — commit content stays deterministic)."""
     import random
     import time as _time
 
+    staged = None
     for attempt in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if check_conflict is not None and check_conflict(snap):
-            return {"conflict": True, "snapshot": snap}
-        version = snap.version + 1
-        payload = build_payload(snap, version)
-        if payload is None:  # idempotent skip (txn replay)
-            return {"version": snap.version, "skipped": True}
+        cur = snap if attempt == 0 and snap is not None else load_snapshot(root)
+        if txn is not None and cur.txns.get(txn[0], -1) >= txn[1]:
+            return {"version": cur.version, "skipped": True}  # replay
+        if staged is None or staged.stale(cur):
+            staged = plan(cur)
+            if isinstance(staged, dict):
+                return staged
+        fields = staged.claim(cur) if staged.claim is not None else {}
+        if fields is None:
+            return {"version": cur.version, "skipped": True}
+        version = cur.version + 1
+        payload = {
+            "version": version,
+            "op": op,
+            "schema": cur.schema_json,
+            "add": staged.adds + staged.linked,
+            "remove": staged.remove,
+            # explicit ids that entered through the staged files advance
+            # the identity watermark (stats max; the fold only advances)
+            "identity_high": _identity_high_from_adds(staged.adds, staged.base),
+            "txn": {"app_id": txn[0], "batch_id": txn[1]} if txn else None,
+            **fields,
+        }
         # in-commit timestamp (AS OF), monotonized in version order
-        payload.setdefault("ts", _stamp_ts(root, snap))
+        payload["ts"] = _stamp_ts(root, cur)
         if _try_claim(root, version, payload):
             _maybe_checkpoint(root, version)
             return {
                 "version": version,
                 "skipped": False,
-                "rows_written": sum(a["rows"] for a in payload["add"]),
+                "rows_written": sum(a["rows"] for a in staged.adds),
                 "files_added": len(payload["add"]),
                 "files_removed": len(payload["remove"]),
-            }
+            } | staged.report
         _time.sleep(random.uniform(0, min(0.1, 0.002 * (2 ** min(attempt, 6)))))
-    raise RuntimeError(f"txlog commit contention: {_MAX_COMMIT_RETRIES} retries at {root}")
+    raise RuntimeError(
+        f"txlog {op} contention: {_MAX_COMMIT_RETRIES} attempts at {root}"
+    )
 
 
 def _schema_compatible(
@@ -1425,19 +1553,13 @@ def sync_identity(root: str) -> dict:
     if not snap.identity:
         raise ValueError(f"no identity columns at {root}")
     highs = _identity_high_from_adds(list(snap.files.values()), snap)
-
-    def build(cur: Snapshot, version: int):
-        return {
-            "version": version,
-            "op": "sync_identity",
-            "schema": cur.schema_json,
-            "add": [],
-            "remove": [],
-            "identity_high": highs,
-            "txn": None,
-        }
-
-    return _commit_loop(root, build) | {"identity_high": highs}
+    res = _transact(
+        root,
+        "sync_identity",
+        lambda cur: _Plan(cur, claim=lambda c: {"identity_high": highs}),
+        snap,
+    )
+    return res | {"identity_high": highs}
 
 
 def _record_constraint(root: str, name: str, expr: str) -> dict:
@@ -1449,18 +1571,10 @@ def _record_constraint(root: str, name: str, expr: str) -> dict:
     commit shape through here (:func:`add_constraint` keeps its own
     build for the validate-on-drift path), so a change to the shape
     can't silently skip one of them."""
-
-    def build(cur: Snapshot, v: int):
-        return {
-            "version": v,
-            "op": "add_constraint",
-            "schema": cur.schema_json,
-            "add": [],
-            "remove": [],
-            "constraint": {"name": name, "expr": expr},
-        }
-
-    return _commit_loop(root, build)
+    fields = {"constraint": {"name": name, "expr": expr}}
+    return _transact(
+        root, "add_constraint", lambda cur: _Plan(cur, claim=lambda c: fields)
+    )
 
 
 def _constraints_referencing(constraints: dict, column: str) -> list[str]:
@@ -1514,7 +1628,7 @@ def add_constraint(
 
     _validate(snap.version)
 
-    def build(cur: Snapshot, version: int):
+    def build(cur: Snapshot) -> dict:
         if name in cur.constraints:
             raise ValueError(
                 f"constraint {name!r} concurrently added at {root}"
@@ -1525,16 +1639,12 @@ def add_constraint(
             # it (ADVICE r10 #3 — otherwise a writer that staged before
             # our commit could land violating rows under the constraint)
             _validate(cur.version)
-        return {
-            "version": version,
-            "op": "add_constraint",
-            "schema": cur.schema_json,
-            "add": [],
-            "remove": [],
-            "constraint": {"name": name, "expr": expr},
-        }
+        return {"constraint": {"name": name, "expr": expr}}
 
-    return _commit_loop(root, build) | {"name": name, "expr": expr}
+    res = _transact(
+        root, "add_constraint", lambda cur: _Plan(cur, claim=build), snap
+    )
+    return res | {"name": name, "expr": expr}
 
 
 def drop_constraint(root: str, name: str) -> dict:
@@ -1544,17 +1654,12 @@ def drop_constraint(root: str, name: str) -> dict:
     if name not in snap.constraints:
         raise ValueError(f"no constraint {name!r} at {root}")
 
-    def build(cur: Snapshot, version: int):
-        return {
-            "version": version,
-            "op": "drop_constraint",
-            "schema": cur.schema_json,
-            "add": [],
-            "remove": [],
-            "drop_constraint": name,
-        }
-
-    return _commit_loop(root, build) | {"name": name}
+    fields = {"drop_constraint": name}
+    res = _transact(
+        root, "drop_constraint", lambda cur: _Plan(cur, claim=lambda c: fields),
+        snap,
+    )
+    return res | {"name": name}
 
 
 def append(
@@ -1567,8 +1672,8 @@ def append(
 ) -> dict:
     """Atomic append. With ``txn=(app_id, batch_id)``, an already-
     committed batch is skipped — exactly-once under at-least-once
-    ``foreachBatch`` replay. Appends never conflict: losing a version
-    race just re-claims the next number (staged files are reused).
+    ``foreachBatch`` replay. Concurrency: "Optimistic concurrency" in
+    the module docstring (an append has no predicate).
 
     ``merge_schema=True`` evolves the table schema in the same commit:
     batch columns the table lacks are added as nullable fields (historic
@@ -1584,98 +1689,48 @@ def append(
     physical: the schema is unchanged, later batches may partition
     differently or not at all, and ``optimize``/``merge`` rewrites fold
     the columns back into the data files."""
-    df_in = df  # pristine batch: a restage retry must RE-derive
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap0 = load_snapshot(root)
-        if txn is not None and snap0.txns.get(txn[0], -1) >= txn[1]:
-            return {"version": snap0.version, "skipped": True}
-        df = _apply_generated(df_in, snap0)
-        df, id_assigned = _apply_identity(df, snap0)
+
+    def plan(cur: Snapshot) -> _Plan:
+        # every replan re-derives generated/identity columns from the
+        # pristine batch under the new snapshot
+        batch = _apply_generated(df, cur)
+        batch, id_assigned = _apply_identity(batch, cur)
         # pre-validate against the current snapshot BEFORE staging any
         # data: schema mismatches (incl. the column-mapping shadow guard)
-        # fail fast instead of after a wasted write; build() re-checks
-        # per claim
-        _schema_compatible(
-            snap0.schema_json, df.schema, merge_schema, snap0.retired
-        )
-        # stage under PHYSICAL column names (identity unless the table
+        # fail fast instead of after a wasted write; the claim re-checks
+        _schema_compatible(cur.schema_json, batch.schema, merge_schema, cur.retired)
+        # staged under PHYSICAL column names (identity unless the table
         # has renamed columns) — safe against concurrent RENAMES because
-        # physical names are frozen at column birth, but NOT against a
-        # concurrent overwrite(), which resets column-mapping history:
-        # build() detects that drift and this loop re-stages (ADVICE r7
-        # #1 — without the check the new generation would silently read
-        # the staged files' old physical names as NULL)
-        smap = _staging_map(snap0, df.columns)
-        pdf = _to_physical_df(
-            _check_constraints(df, snap0.constraints), snap0.schema
+        # physical names are frozen at column birth; a concurrent
+        # overwrite() resetting column-mapping history is the mapping
+        # drift the conflict rule replans on (ADVICE r7 #1)
+        adds = _stage_adds(
+            spark,
+            _check_constraints(batch, cur.constraints),
+            root,
+            cur.schema,
+            partition_by,
+            "append",
         )
-        if partition_by:
-            pmap = (
-                _logical_to_physical(snap0.schema)
-                if snap0.schema_json
-                else {}
-            )
-            _check_partition_by(partition_by, df.columns, "append", pmap)
-            ppart = [pmap.get(c, c) for c in partition_by]
-        else:
-            ppart = None
-        staged = _stage_files(spark, pdf, root, ppart)
-        adds = _collect_adds(spark, root, staged)
-        if ppart:
-            for add, path in zip(adds, staged):
-                _apply_partition_entry(
-                    add, _partition_values_of(root, path, pdf.schema)
-                )
-        id_high = _identity_high_from_adds(adds, snap0)
-
-        conflicted = False
-
-        def build(snap: Snapshot, version: int):
-            nonlocal conflicted
-            if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-                return None
-            if _staging_map(snap, df.columns) != smap:
-                conflicted = True  # mapping drifted since staging
-                return None
-            if id_assigned and _identity_drifted(snap, snap0, id_assigned):
-                # a concurrent commit advanced the identity watermark we
-                # assigned from — the staged ids may collide; restage
-                conflicted = True
-                return None
-            if snap.constraints != snap0.constraints:
-                # a concurrent add/drop_constraint landed after we staged:
-                # the staged files were validated under the OLD constraint
-                # set — replan so the batch is re-checked under the new one
-                # (ADVICE r10 #3: a constraints-set change is a conflict,
-                # same as a schema/file conflict)
-                conflicted = True
-                return None
-            return {
-                "version": version,
-                "op": "append",
+        return _Plan(
+            cur,
+            adds=adds,
+            columns=batch.columns,
+            id_assigned=id_assigned,
+            claim=lambda c: {
                 "schema": _schema_compatible(
-                    snap.schema_json, df.schema, merge_schema, snap.retired
-                ),
-                "add": adds,
-                "remove": [],
-                "identity_high": id_high,
-                "txn": (
-                    {"app_id": txn[0], "batch_id": txn[1]} if txn else None
-                ),
-            }
+                    c.schema_json, batch.schema, merge_schema, c.retired
+                )
+            },
+        )
 
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            return res
-        # conflicted: staged files orphaned (vacuum sweeps); re-stage
-        # under the new snapshot's mapping
-    raise RuntimeError(f"txlog append contention at {root}")
+    return _transact(root, "append", plan, txn=txn)
 
 
 def _staging_map(snap: Snapshot, columns) -> dict:
     """{batch column: physical name it would be staged under} for the
-    given snapshot — the commit-time drift check compares this against
-    the map captured at staging time."""
+    given snapshot — the conflict rule compares it at the claim
+    snapshot against the plan's base (mapping drift)."""
     full = _logical_to_physical(snap.schema) if snap.schema_json else {}
     return {c: full.get(c, c) for c in columns}
 
@@ -1690,59 +1745,46 @@ def overwrite(
     set). Readers see the old table until the instant the commit lands.
     ``partition_by`` lays the new generation out Hive-partitioned —
     same per-file metadata as :func:`append`'s partitioned lane."""
-    if partition_by:
-        _check_partition_by(partition_by, df.columns, "overwrite")
-    # constraints are table PROPERTIES: they survive the data replace,
-    # so the replacement generation must satisfy them too — and its
-    # schema must still carry every column a constraint references (an
-    # overwrite that drops such a column would brick every later write
-    # with an unresolved-column error, ADVICE r10 #2)
-    snap0 = load_snapshot(root)
-    df = _apply_generated(df, snap0)
-    df, _ = _apply_identity(df, snap0)
-    cons0 = snap0.constraints
-    if cons0 and snap0.schema_json is not None:
-        for col in snap0.schema.fieldNames():
-            if col in df.columns:
+
+    def plan(cur: Snapshot) -> _Plan:
+        batch = _apply_generated(df, cur)
+        # identity races with a replaced generation cannot coexist: this
+        # commit removes every prior file (and the high watermark only
+        # ever ADVANCES, so ids the table once used are never re-issued)
+        batch, _ = _apply_identity(batch, cur)
+        # constraints are table PROPERTIES: they survive the data replace,
+        # so the replacement generation must satisfy them too — and its
+        # schema must still carry every column a constraint references (an
+        # overwrite that drops such a column would brick every later write
+        # with an unresolved-column error, ADVICE r10 #2)
+        for col in cur.schema.fieldNames() if cur.constraints else ():
+            if col in batch.columns:
                 continue
-            refs = _constraints_referencing(cons0, col)
+            refs = _constraints_referencing(cur.constraints, col)
             if refs:
                 raise ValueError(
                     f"overwrite: the replacement schema drops column "
                     f"{col!r}, which CHECK constraint(s) {refs} "
                     "reference — drop them first (drop_constraint)"
                 )
-    staged = _stage_files(
-        spark,
-        _check_constraints(df, cons0),
-        root,
-        partition_by,
-    )
-    adds = _collect_adds(spark, root, staged)
-    if partition_by:
-        for add, path in zip(adds, staged):
-            _apply_partition_entry(
-                add, _partition_values_of(root, path, df.schema)
-            )
+        adds = _stage_adds(
+            spark,
+            _check_constraints(batch, cur.constraints),
+            root,
+            None,
+            partition_by,
+            "overwrite",
+        )
+        return _Plan(
+            cur,
+            adds=adds,
+            claim=lambda c: {
+                "schema": batch.schema.json(),
+                "remove": sorted(c.files),
+            },
+        )
 
-    id_high = _identity_high_from_adds(adds, snap0)
-
-    def build(snap: Snapshot, version: int):
-        return {
-            "version": version,
-            "op": "overwrite",
-            "schema": df.schema.json(),
-            "add": adds,
-            "remove": sorted(snap.files),
-            # the high watermark only ever ADVANCES (max fold): even a
-            # whole-table replace never re-issues ids the table once
-            # used — identity races with a replaced generation cannot
-            # coexist because this commit removes every prior file
-            "identity_high": id_high,
-            "txn": None,
-        }
-
-    return _commit_loop(root, build)
+    return _transact(root, "overwrite", plan)
 
 
 def replace_where(
@@ -1774,8 +1816,8 @@ def replace_where(
     raises BEFORE staging anything. ``partition_by`` lays the new files
     out Hive-partitioned (same lane as :func:`append`). First-ever
     commit (no table yet) bootstraps like a plain append after the same
-    scope validation. Conflicts (a concurrent commit removed one of our
-    files or added a may-match file) replan exactly like delete/merge."""
+    scope validation. Concurrency: "Optimistic concurrency" in the
+    module docstring (its predicate is ``where``)."""
     for _, op, _v in where:
         if op not in _OPS:
             raise ValueError(f"unsupported replace_where op: {op}")
@@ -1783,7 +1825,8 @@ def replace_where(
         raise ValueError("replace_where requires a predicate; use overwrite")
     # generated columns materialize BEFORE the scope check: a backfill
     # scoped on a generated (derived-partition) column may omit it
-    df = _apply_generated(df, load_snapshot(root))
+    snap0 = load_snapshot(root)
+    df = _apply_generated(df, snap0)
     cond = _where_column(where)
     # scope check: one aggregate over the batch, no driver-side rows.
     # NULL predicate rows do NOT satisfy the scope (tri-valued logic) —
@@ -1796,107 +1839,56 @@ def replace_where(
             "insert rows inside its scope"
         )
 
-    df_in = df  # pristine batch: a restage retry re-derives identity
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if snap.schema_json is None:
+    def plan(cur: Snapshot):
+        if cur.schema_json is None:
             # bootstrap: the validated batch IS the table
             return append(spark, df, root, partition_by=partition_by) | {
                 "rows_deleted": 0,
                 "files_dropped": 0,
                 "files_rewritten": 0,
             }
-        df, id_assigned = _apply_identity(df_in, snap)
-        _schema_compatible(snap.schema_json, df.schema, False, snap.retired)
-        smap = _staging_map(snap, df.columns)
-        pm = _logical_to_physical(snap.schema)
+        # a replan re-derives identity from the pristine batch
+        batch, id_assigned = _apply_identity(df, cur)
+        _schema_compatible(cur.schema_json, batch.schema, False, cur.retired)
+        pm = _logical_to_physical(cur.schema)
         pwhere = [(pm.get(c, c), op, v) for c, op, v in where]
-
-        def may_match(entry: dict) -> bool:
-            return all(_file_may_match(entry, c, op, v) for c, op, v in pwhere)
-
-        drops, rewrites, rows_dropped = _split_by_predicate(snap, pwhere)
-
-        # stage the new data (physical names; optional key=value layout)
-        pdf = _to_physical_df(
-            _check_constraints(df, snap.constraints), snap.schema
+        drops, rewrites, rows_dropped = _split_by_predicate(cur, pwhere)
+        adds = _stage_adds(
+            spark,
+            _check_constraints(batch, cur.constraints),
+            root,
+            cur.schema,
+            partition_by,
+            "replace_where",
         )
-        if partition_by:
-            _check_partition_by(partition_by, df.columns, "replace_where", pm)
-            ppart = [pm.get(c, c) for c in partition_by]
-        else:
-            ppart = None
-        staged = _stage_files(spark, pdf, root, ppart)
-        adds = _collect_adds(spark, root, staged)
-        if ppart:
-            for add, path in zip(adds, staged):
-                _apply_partition_entry(
-                    add, _partition_values_of(root, path, pdf.schema)
-                )
         rows_rewritten_away = 0
         if rewrites:
-            existing = _read_files(
-                spark, root, snap.schema, snap.files, rewrites
+            existing = _read_files(spark, root, cur.schema, cur.files, rewrites)
+            kept = _stage_adds(
+                spark, existing.filter(cond.isNull() | ~cond), root, cur.schema
             )
-            kept = existing.filter(cond.isNull() | ~cond)
-            staged2 = _stage_files(
-                spark, _to_physical_df(kept, snap.schema), root
-            )
-            adds2 = _collect_adds(spark, root, staged2)
             # _read_files already applied any DV masks, so the rewrite
             # counted LIVE rows in — subtract live rows, not physical
-            before = sum(_live_rows(snap.files[p]) for p in rewrites)
-            rows_rewritten_away = before - sum(a["rows"] for a in adds2)
-            adds = adds + adds2
-        removed = drops + rewrites
-        id_high = _identity_high_from_adds(adds, snap)
-
-        conflicted = False
-
-        def build(cur: Snapshot, version: int):
-            nonlocal conflicted
-            if _staging_map(cur, df.columns) != smap:
-                conflicted = True  # mapping drift: restage (see append)
-                return None
-            if id_assigned and _identity_drifted(cur, snap, id_assigned):
-                conflicted = True  # ids assigned from a stale watermark
-                return None
-            if cur.constraints != snap.constraints:
-                conflicted = True  # re-validate under the new set (r10 #3)
-                return None
-            if cur.version != snap.version:
-                for p in removed:
-                    # ENTRY identity, not presence: a concurrent DV
-                    # delete swaps an entry in place (same path, new
-                    # mask) — replacing over it would resurrect its
-                    # masked rows in our rewrite
-                    if cur.files.get(p) != snap.files.get(p):
-                        conflicted = True
-                        return None
-                for p, e in cur.files.items():
-                    if p not in snap.files and may_match(e):
-                        conflicted = True
-                        return None
-            return {
-                "version": version,
-                "op": "replace_where",
-                # current schema, not plan-time: see merge()
-                "schema": cur.schema_json,
-                "add": adds,
-                "remove": removed,
-                "identity_high": id_high,
-                "txn": None,
-            }
-
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            return res | {
+            before = sum(_live_rows(cur.files[p]) for p in rewrites)
+            rows_rewritten_away = before - sum(a["rows"] for a in kept)
+            adds = adds + kept
+        return _Plan(
+            cur,
+            adds=adds,
+            remove=drops + rewrites,
+            may_match=lambda e: all(
+                _file_may_match(e, c, op, v) for c, op, v in pwhere
+            ),
+            columns=batch.columns,
+            id_assigned=id_assigned,
+            report={
                 "rows_deleted": rows_dropped + rows_rewritten_away,
                 "files_dropped": len(drops),
                 "files_rewritten": len(rewrites),
-            }
-        # conflicted: staged files left for vacuum; replan
-    raise RuntimeError(f"txlog replace_where contention at {root}")
+            },
+        )
+
+    return _transact(root, "replace_where", plan, snap0)
 
 
 def commit_staged(
@@ -1950,122 +1942,121 @@ def commit_staged(
             for f in schema.fields
         ]
     )
+    smap = (
+        None
+        if overwrite or staged_phys is None
+        else {c: staged_phys.get(c, c) for c in schema.fieldNames()}
+    )
     snap0 = load_snapshot(root)
-    if txn is not None and snap0.txns.get(txn[0], -1) >= txn[1]:
-        # at-least-once replay of an already-committed batch: skip
-        # BEFORE any validation work — a session-less replay into a
-        # constrained table must no-op, not refuse (and a with-session
-        # replay must not pay a validation scan for a skipped commit);
-        # build() re-checks per claim, so a commit racing in between
-        # still can't double-apply
-        return {"version": snap0.version, "skipped": True}
-    if snap0.schema_json is not None and snap0.generated:
-        missing_gen = [
-            c for c in sorted(snap0.generated) if c not in schema.fieldNames()
-        ]
-        if missing_gen:
-            raise ValueError(
-                f"txlog commit_staged at {root}: the write omits "
-                f"generated column(s) {missing_gen}, which the "
-                "staged-file lane cannot compute after the files are "
-                "written — include them in the written DataFrame (their "
-                "gen_* constraints will verify the values) or ingest "
-                "via append()"
-            )
-    if snap0.schema_json is not None and snap0.identity:
-        missing_id = [
-            c for c in sorted(snap0.identity) if c not in schema.fieldNames()
-        ]
-        if missing_id:
-            raise ValueError(
-                f"txlog commit_staged at {root}: the write omits "
-                f"identity column(s) {missing_id}, which cannot be "
-                "assigned after the files are written — provide values "
-                "or ingest via append()"
-            )
-    if snap0.constraints and staged:
-        if spark is None:
-            raise ValueError(
-                f"txlog commit_staged at {root}: the table has CHECK "
-                "constraints but no active session is available to "
-                "validate the staged files — refusing to commit "
-                "unvalidated rows"
-            )
-        legs = spark.read.schema(phys_schema).option(
-            "basePath", os.path.join(root, DATA_DIR)
-        ).parquet(*staged)
-        logical = legs.select(
-            *[
-                F.col(pf.name).alias(f.name)
-                for pf, f in zip(phys_schema.fields, schema.fields)
-            ]
-        )
-        viol = [
-            ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
-            for e in snap0.constraints.values()
-        ]
-        any_bad = logical.filter(
-            viol[0] if len(viol) == 1 else F.greatest(*viol)
-        )
-        if any_bad.limit(1).count():
-            for name in sorted(snap0.constraints):
-                e = snap0.constraints[name]
-                if logical.filter(
-                    ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
-                ).limit(1).count():
-                    raise ValueError(
-                        f"txlog CHECK constraint {name!r} violated by "
-                        f"staged write at {root}: {e}"
-                    )
-    adds = _collect_adds(spark, root, staged)
-    for add in adds:
-        _apply_partition_entry(
-            add,
-            _partition_values_of(
-                root, os.path.join(root, add["path"]), phys_schema
-            ),
-        )
 
-    def build(snap: Snapshot, version: int):
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return None
-        if snap.constraints != snap0.constraints:
-            # validated above under snap0's constraint set; a concurrent
-            # add/drop_constraint means the staged rows were never
-            # checked under the NEW set — and unlike append(), the
-            # job's tasks are done, so there is nothing to re-stage
+    # The driver skips an at-least-once replay of an already-committed
+    # batch BEFORE planning — a session-less replay into a constrained
+    # table must no-op, not refuse (and a with-session replay must not
+    # pay a validation scan for a skipped commit). The staged files
+    # cannot be re-staged (the job's tasks are done), so whatever makes
+    # this plan stale — a constraint change or a mapping drift — raises
+    # here when the driver calls it again.
+    def plan(cur: Snapshot) -> _Plan:
+        if cur.constraints != snap0.constraints:
+            # validated below under snap0's constraint set: the staged
+            # rows were never checked under the NEW set
             raise ValueError(
                 f"txlog commit_staged at {root}: the table's CHECK "
                 "constraints changed between staging and commit — "
                 "re-run the write"
             )
-        if not overwrite and staged_phys is not None:
-            cur = _staging_map(snap, schema.fieldNames())
-            if cur != {c: staged_phys.get(c, c) for c in schema.fieldNames()}:
+        if smap is not None and _staging_map(cur, smap) != smap:
+            raise ValueError(
+                f"txlog commit_staged at {root}: the table's "
+                "column-mapping changed between staging and commit "
+                "(a concurrent overwrite reset it) — the staged "
+                "files' in-file column names no longer match; "
+                "re-run the write"
+            )
+        if cur.schema_json is not None and cur.generated:
+            missing_gen = [
+                c for c in sorted(cur.generated) if c not in schema.fieldNames()
+            ]
+            if missing_gen:
                 raise ValueError(
-                    f"txlog commit_staged at {root}: the table's "
-                    "column-mapping changed between staging and commit "
-                    "(a concurrent overwrite reset it) — the staged "
-                    "files' in-file column names no longer match; "
-                    "re-run the write"
+                    f"txlog commit_staged at {root}: the write omits "
+                    f"generated column(s) {missing_gen}, which the "
+                    "staged-file lane cannot compute after the files are "
+                    "written — include them in the written DataFrame (their "
+                    "gen_* constraints will verify the values) or ingest "
+                    "via append()"
                 )
-        return {
-            "version": version,
-            "op": "overwrite" if overwrite else "append",
-            "schema": (
-                schema.json()
+        if cur.schema_json is not None and cur.identity:
+            missing_id = [
+                c for c in sorted(cur.identity) if c not in schema.fieldNames()
+            ]
+            if missing_id:
+                raise ValueError(
+                    f"txlog commit_staged at {root}: the write omits "
+                    f"identity column(s) {missing_id}, which cannot be "
+                    "assigned after the files are written — provide values "
+                    "or ingest via append()"
+                )
+        if cur.constraints and staged:
+            if spark is None:
+                raise ValueError(
+                    f"txlog commit_staged at {root}: the table has CHECK "
+                    "constraints but no active session is available to "
+                    "validate the staged files — refusing to commit "
+                    "unvalidated rows"
+                )
+            legs = spark.read.schema(phys_schema).option(
+                "basePath", os.path.join(root, DATA_DIR)
+            ).parquet(*staged)
+            logical = legs.select(
+                *[
+                    F.col(pf.name).alias(f.name)
+                    for pf, f in zip(phys_schema.fields, schema.fields)
+                ]
+            )
+            viol = [
+                ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
+                for e in cur.constraints.values()
+            ]
+            any_bad = logical.filter(
+                viol[0] if len(viol) == 1 else F.greatest(*viol)
+            )
+            if any_bad.limit(1).count():
+                for name in sorted(cur.constraints):
+                    e = cur.constraints[name]
+                    if logical.filter(
+                        ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
+                    ).limit(1).count():
+                        raise ValueError(
+                            f"txlog CHECK constraint {name!r} violated by "
+                            f"staged write at {root}: {e}"
+                        )
+        adds = _collect_adds(spark, root, staged)
+        for add in adds:
+            _apply_partition_entry(
+                add,
+                _partition_values_of(
+                    root, os.path.join(root, add["path"]), phys_schema
+                ),
+            )
+        return _Plan(
+            cur,
+            adds=adds,
+            columns=None if smap is None else list(smap),
+            claim=lambda c: (
+                {"schema": schema.json(), "remove": sorted(c.files)}
                 if overwrite
-                else _schema_compatible(
-                    snap.schema_json, schema, merge_schema, snap.retired
-                )
+                else {
+                    "schema": _schema_compatible(
+                        c.schema_json, schema, merge_schema, c.retired
+                    )
+                }
             ),
-            "add": adds,
-            "remove": sorted(snap.files) if overwrite else [],
-            "identity_high": _identity_high_from_adds(adds, snap0),
-            "txn": {"app_id": txn[0], "batch_id": txn[1]} if txn else None,
-        }
+        )
 
-    return _commit_loop(root, build)
+    return _transact(
+        root, "overwrite" if overwrite else "append", plan, snap0, txn
+    )
 
 
 def rename_column(root: str, old: str, new: str) -> dict:
@@ -2084,7 +2075,7 @@ def rename_column(root: str, old: str, new: str) -> dict:
     schema evolution that tries to ADD a column named ``old`` raises
     too — historic files still carry data under that physical name."""
 
-    def build(snap: Snapshot, version: int):
+    def build(snap: Snapshot) -> dict:
         schema = snap.schema
         if schema is None:
             raise ValueError(f"not a txlog table (no commits): {root}")
@@ -2125,16 +2116,10 @@ def rename_column(root: str, old: str, new: str) -> dict:
                 )
             else:
                 fields.append(f)
-        return {
-            "version": version,
-            "op": "rename_column",
-            "schema": StructType(fields).json(),
-            "add": [],
-            "remove": [],
-            "txn": None,
-        }
+        return {"schema": StructType(fields).json()}
 
-    return _commit_loop(root, build) | {"renamed": [old, new]}
+    res = _transact(root, "rename_column", lambda cur: _Plan(cur, claim=build))
+    return res | {"renamed": [old, new]}
 
 
 def drop_column(root: str, name: str) -> dict:
@@ -2145,7 +2130,7 @@ def drop_column(root: str, name: str) -> dict:
     name raises instead of silently resurrecting the old files' data
     under the new column."""
 
-    def build(snap: Snapshot, version: int):
+    def build(snap: Snapshot) -> dict:
         schema = snap.schema
         if schema is None:
             raise ValueError(f"not a txlog table (no commits): {root}")
@@ -2167,16 +2152,12 @@ def drop_column(root: str, name: str) -> dict:
             )
         kept = [f for f in schema.fields if f.name != name]
         return {
-            "version": version,
-            "op": "drop_column",
             "schema": StructType(kept).json(),
-            "add": [],
-            "remove": [],
             "retired": [_physical_name(schema[name])],
-            "txn": None,
         }
 
-    return _commit_loop(root, build) | {"dropped": name}
+    res = _transact(root, "drop_column", lambda cur: _Plan(cur, claim=build))
+    return res | {"dropped": name}
 
 
 _CONVERT_MANIFEST = "_convert-manifest.json"
@@ -2400,21 +2381,18 @@ def convert_to_txlog(spark: SparkSession, root: str) -> dict:
         for add, mv in zip(adds, plan["moves"]):
             _apply_partition_entry(add, mv.get("partition") or {})
 
-        def build(s: Snapshot, version: int):
+        def build(s: Snapshot) -> dict | None:
             if s.version != 0:
                 # a concurrent resumer of the same manifest won the
                 # commit race — converting twice would duplicate rows
                 return None
-            return {
-                "version": version,
-                "op": "convert",
-                "schema": plan["schema"],
-                "add": adds,
-                "remove": [],
-                "txn": None,
-            }
+            return {"schema": plan["schema"]}
 
-        res = _commit_loop(root, build)
+        # the adopted files are renamed into place, not written: they
+        # are linked, so the commit reports no rows_written
+        res = _transact(
+            root, "convert", lambda cur: _Plan(cur, linked=adds, claim=build), snap
+        )
     else:  # crash landed between the commit and the manifest cleanup
         res = {"version": snap.version, "skipped": False}
     try:
@@ -2835,9 +2813,9 @@ def merge(
     clauses already express per-column control, so evolution there is
     deliberately rejected rather than half-supported).
 
-    Optimistic concurrency: losing the version race to a commit whose
-    files overlap ours (or whose stats are unknown) rebuilds the merge
-    from the new snapshot; a disjoint concurrent append just re-claims.
+    Concurrency: "Optimistic concurrency" in the module docstring (the
+    predicate is the batch key range, or every file under
+    ``when_not_matched_by_source_delete``).
     """
     conditional = (
         when_matched is not None
@@ -2911,6 +2889,7 @@ def merge(
             merge_schema,
             conditional,
             _validated_bounds,
+            _gsnap,
         )
     finally:
         if _own_persist:
@@ -2932,10 +2911,12 @@ def _merge_apply(
     merge_schema: bool,
     conditional: bool,
     _validated_bounds: tuple | None = None,
+    snap: Snapshot | None = None,
 ) -> dict:
     """Body of :func:`merge` after clause validation, generated-column
     application and batch persistence (split out so the persist scope
-    is a plain try/finally).
+    is a plain try/finally). ``snap`` is the snapshot :func:`merge`
+    already loaded; the first plan reuses it.
 
     ``_validated_bounds=(lo, hi)`` (r11, internal): the caller
     certifies the batch is KEY-UNIQUE with non-NULL keys (it already
@@ -2997,16 +2978,8 @@ def _merge_apply(
     else:
         wnm_col = F.coalesce(wnm.cast("boolean"), F.lit(False))
 
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            # at-least-once replay of an already-committed batch
-            return {
-                "version": snap.version,
-                "skipped": True,
-                "files_rewritten": 0,
-            }
-        if snap.schema_json is None:
+    def plan(cur: Snapshot):
+        if cur.schema_json is None:
             # bootstrap: first batch IS the table (tombstones that win
             # their key's keep-latest ordering insert nothing); __-prefix
             # marker columns are dropped, mirroring the table-schema
@@ -3033,17 +3006,13 @@ def _merge_apply(
                     when_not_matched_insert,
                     wnm_col,
                 )
-                return append(spark, merged0, root, txn=txn) | {
-                    "files_rewritten": 0
-                }
+                return append(spark, merged0, root, txn=txn)
             tagged = updates.withColumn("__del", del_col)
             if order_col is not None:
                 tagged = dedup_keep_latest(tagged, key_cols, order_col)
             # order_col None: the batch is key-unique (checked above)
             deduped = tagged.filter(~F.col("__del")).select(*data_cols)
-            return append(spark, deduped, root, txn=txn) | {
-                "files_rewritten": 0
-            }
+            return append(spark, deduped, root, txn=txn)
 
         if merge_schema:
             # widen the table schema with the batch's new columns (same
@@ -3056,12 +3025,12 @@ def _merge_apply(
             work_schema = StructType.fromJson(
                 json.loads(
                     _schema_compatible(
-                        snap.schema_json, batch_data, True, snap.retired
+                        cur.schema_json, batch_data, True, cur.retired
                     )
                 )
             )
         else:
-            work_schema = snap.schema
+            work_schema = cur.schema
 
         # footer stats are keyed by PHYSICAL names (what the files store)
         pkey = _logical_to_physical(work_schema).get(key, key)
@@ -3077,29 +3046,31 @@ def _merge_apply(
         if wnm_col is not None:
             # not-matched-by-source: ANY row's key might be absent from
             # the batch, so every live file must be examined — pruning
-            # is structurally impossible for this clause
-            candidates = sorted(snap.files)
+            # is structurally impossible for this clause (and every
+            # concurrently added file conflicts: its keys might be
+            # unmatched and due for deletion)
+            may_match = lambda e: True  # noqa: E731
+            candidates = sorted(cur.files)
         else:
-            candidates = sorted(
-                p for p, e in snap.files.items() if overlaps(e)
-            )
+            may_match = overlaps
+            candidates = sorted(p for p, e in cur.files.items() if overlaps(e))
         if conditional:
             existing = (
-                _read_files(spark, root, snap.schema, snap.files, candidates)
+                _read_files(spark, root, cur.schema, cur.files, candidates)
                 if candidates
-                else spark.createDataFrame([], snap.schema)
+                else spark.createDataFrame([], cur.schema)
             )
             merged = _conditional_merged(
                 spark,
                 existing,
                 updates,
                 key_cols,
-                snap.schema,
+                cur.schema,
                 _parse_matched_clauses(
                     when_matched,
                     when_matched_update,
                     when_matched_delete,
-                    snap.schema,
+                    cur.schema,
                 ),
                 when_not_matched_insert,
                 wnm_col,
@@ -3116,7 +3087,7 @@ def _merge_apply(
             upd = upd.select(*work_schema.fieldNames(), "__del")
             if candidates:
                 existing = _read_files(
-                    spark, root, work_schema, snap.files, candidates
+                    spark, root, work_schema, cur.files, candidates
                 )
                 # update rows win order_col ties: tag precedence before the
                 # keep-latest window; a key whose winning row is a tombstone
@@ -3152,76 +3123,33 @@ def _merge_apply(
                 if order_col is not None:
                     merged = dedup_keep_latest(merged, key_cols, order_col)
                 merged = merged.filter(~F.col("__del")).drop("__del")
-        staged = _stage_files(
+        adds = _stage_adds(
             spark,
-            _to_physical_df(
-                _check_constraints(merged, snap.constraints), work_schema
-            ),
+            _check_constraints(merged, cur.constraints),
             root,
+            work_schema,
         )
-        adds = _collect_adds(spark, root, staged)
-
-        conflicted = False
-
-        def build(cur: Snapshot, version: int):
-            nonlocal conflicted
-            if txn is not None and cur.txns.get(txn[0], -1) >= txn[1]:
-                return None  # concurrent replay of the same batch won
-            if cur.constraints != snap.constraints:
-                # merged rows were validated under the plan-time
-                # constraint set — a concurrent add/drop_constraint
-                # forces a replan under the new one (ADVICE r10 #3)
-                conflicted = True
-                return None
-            if cur.version != snap.version:
-                # someone committed since we planned: safe only if the
-                # new state still contains exactly our candidate files
-                # and no new file overlaps the batch key range (under a
-                # not-matched-by-source clause EVERY new file matters —
-                # its keys might be unmatched and due for deletion)
-                for p in candidates:
-                    # ENTRY identity, not presence: a concurrent DV
-                    # delete swaps an entry in place (same path, new
-                    # mask) — merging over the stale read would
-                    # resurrect its masked rows
-                    if cur.files.get(p) != snap.files.get(p):
-                        conflicted = True
-                        return None
-                for p, e in cur.files.items():
-                    if p not in snap.files and (
-                        wnm_col is not None or overlaps(e)
-                    ):
-                        conflicted = True
-                        return None
-            return {
-                "version": version,
-                "op": "merge",
-                # carry the CURRENT schema forward, not the plan-time one:
-                # a concurrent schema-evolving append that passed the
-                # conflict check must not be silently reverted — and under
-                # merge_schema, union it with the batch's widened schema
-                "schema": (
-                    _schema_compatible(
-                        cur.schema_json, work_schema, True, cur.retired
+        return _Plan(
+            cur,
+            adds=adds,
+            remove=candidates,
+            may_match=may_match,
+            # under merge_schema, union the CURRENT schema with the
+            # batch's widened one
+            claim=(
+                lambda c: {
+                    "schema": _schema_compatible(
+                        c.schema_json, work_schema, True, c.retired
                     )
-                    if merge_schema
-                    else cur.schema_json
-                ),
-                "add": adds,
-                "remove": candidates,
-                # explicit ids that entered through the batch advance
-                # the identity watermark like any other lane (stats max)
-                "identity_high": _identity_high_from_adds(adds, snap),
-                "txn": (
-                    {"app_id": txn[0], "batch_id": txn[1]} if txn else None
-                ),
-            }
+                }
+            )
+            if merge_schema
+            else None,
+            report={"files_rewritten": len(candidates)},
+        )
 
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            return res | {"files_rewritten": len(candidates)}
-        # conflicted: orphaned staged files left for vacuum; replan
-    raise RuntimeError(f"txlog merge contention at {root}")
+    # a replayed batch (skipped by the driver) rewrote nothing
+    return {"files_rewritten": 0} | _transact(root, "merge", plan, snap, txn)
 
 
 def _file_all_match(entry: dict, col: str, op: str, value) -> bool:
@@ -3313,32 +3241,25 @@ def delete(
     files and drop the reference; :func:`vacuum` reclaims unreferenced
     sidecars.
 
-    Optimistic concurrency mirrors :func:`merge`: a concurrent commit
-    that removed OR REPLACED one of our candidates (a DV delete swaps
-    the entry in place — presence alone is not enough) or added a
-    may-match file forces a replan; disjoint appends just re-claim the
-    next version."""
+    Concurrency: "Optimistic concurrency" in the module docstring (its
+    predicate is ``where``)."""
     for _, op, _v in where:
         if op not in _OPS:
             raise ValueError(f"unsupported delete op: {op}")
     if not where:
         raise ValueError("delete requires a predicate; use overwrite to empty")
 
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if snap.schema_json is None:
+    def plan(cur: Snapshot):
+        if cur.schema_json is None:
             raise ValueError(f"not a txlog table (no commits): {root}")
 
         # footer stats are keyed by PHYSICAL names (what the files store)
-        pm = _logical_to_physical(snap.schema)
+        pm = _logical_to_physical(cur.schema)
         pwhere = [(pm.get(c, c), op, v) for c, op, v in where]
-
-        def may_match(entry: dict) -> bool:
-            return all(_file_may_match(entry, c, op, v) for c, op, v in pwhere)
-
-        drops, rewrites, rows_dropped = _split_by_predicate(snap, pwhere)
+        drops, rewrites, rows_dropped = _split_by_predicate(cur, pwhere)
 
         adds: list[dict] = []
+        masked: list[dict] = []
         rows_rewritten_away = 0
         touched: list[str] = rewrites
         if rewrites and deletion_vectors:
@@ -3347,88 +3268,56 @@ def delete(
             # over LOGICAL names, positions come from _metadata.
             # DELETE masks rows where the predicate is TRUE (NULL kept)
             new_pos = (
-                _dv_positioned_rows(spark, root, snap, rewrites)
+                _dv_positioned_rows(spark, root, cur, rewrites)
                 .filter(_where_column(where))
                 .select("rel", "pos")
             )
-            old = _dv_positions(spark, root, snap.files, rewrites)
+            old = _dv_positions(spark, root, cur.files, rewrites)
             if old is not None:
                 old = old.filter(F.col("rel").isin(rewrites))
             touched = []
             for rel, n, ne in _write_dv(
-                spark, root, snap.files, rewrites, new_pos, old
+                spark, root, cur.files, rewrites, new_pos, old
             ):
                 if ne is None:
                     # mask reached every physical row — drop the file
                     drops.append(rel)
-                    rows_dropped += _live_rows(snap.files[rel])
+                    rows_dropped += _live_rows(cur.files[rel])
                     continue
-                adds.append(ne)
+                masked.append(ne)
                 touched.append(rel)
                 rows_rewritten_away += n
         elif rewrites:
-            existing = _read_files(
-                spark, root, snap.schema, snap.files, rewrites
-            )
+            existing = _read_files(spark, root, cur.schema, cur.files, rewrites)
             # DELETE removes rows where the predicate is TRUE; NULL rows
             # (tri-valued: ~NULL is NULL, which filter() drops) are KEPT
             cond = _where_column(where)
-            kept = existing.filter(cond.isNull() | ~cond)
-            staged = _stage_files(
-                spark, _to_physical_df(kept, snap.schema), root
+            adds = _stage_adds(
+                spark, existing.filter(cond.isNull() | ~cond), root, cur.schema
             )
-            adds = _collect_adds(spark, root, staged)
-            before = sum(_live_rows(snap.files[p]) for p in rewrites)
+            before = sum(_live_rows(cur.files[p]) for p in rewrites)
             rows_rewritten_away = before - sum(a["rows"] for a in adds)
         removed = drops + touched
+        report = {
+            "rows_deleted": rows_dropped + rows_rewritten_away,
+            "files_dropped": len(drops),
+            "files_rewritten": 0 if deletion_vectors else len(rewrites),
+            "files_masked": len(touched) if deletion_vectors else 0,
+        }
         if not removed:
-            return {
-                "version": snap.version,
-                "skipped": True,
-                "rows_deleted": 0,
-                "files_dropped": 0,
-                "files_rewritten": 0,
-                "files_masked": 0,
-            }
+            return {"version": cur.version, "skipped": True} | report
+        return _Plan(
+            cur,
+            adds=adds,
+            linked=masked,
+            remove=removed,
+            may_match=lambda e: all(
+                _file_may_match(e, c, op, v) for c, op, v in pwhere
+            ),
+            report=report,
+        )
 
-        conflicted = False
-
-        def build(cur: Snapshot, version: int):
-            nonlocal conflicted
-            if cur.version != snap.version:
-                for p in removed:
-                    # ENTRY identity, not presence: a concurrent DV
-                    # delete swaps an entry in place (same path, new
-                    # mask) — committing our plan over it would lose
-                    # its mask or double ours
-                    if cur.files.get(p) != snap.files.get(p):
-                        conflicted = True
-                        return None
-                for p, e in cur.files.items():
-                    if p not in snap.files and may_match(e):
-                        conflicted = True
-                        return None
-            return {
-                "version": version,
-                "op": "delete",
-                # current schema, not plan-time: see merge()
-                "schema": cur.schema_json,
-                "add": adds,
-                "remove": removed,
-                "txn": None,
-            }
-
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            masked = len(touched) if deletion_vectors else 0
-            return res | {
-                "rows_deleted": rows_dropped + rows_rewritten_away,
-                "files_dropped": len(drops),
-                "files_rewritten": 0 if deletion_vectors else len(rewrites),
-                "files_masked": masked,
-            }
-        # conflicted: staged files/sidecars (if any) left for vacuum; replan
-    raise RuntimeError(f"txlog delete contention at {root}")
+    return _transact(root, "delete", plan)
 
 
 def update(
@@ -3466,9 +3355,8 @@ def update(
     :func:`merge`); it also may not introduce new columns (schema
     evolution is :func:`append` ``merge_schema``'s job).
 
-    Concurrency: identical to :func:`delete` — entry-identity conflict
-    on every touched file, may-match check on concurrently added files,
-    replan on conflict."""
+    Concurrency: "Optimistic concurrency" in the module docstring (its
+    predicate is ``where``)."""
     for _, op, _v in where:
         if op not in _OPS:
             raise ValueError(f"unsupported update op: {op}")
@@ -3480,32 +3368,31 @@ def update(
     if not set:
         raise ValueError("update requires at least one SET column")
 
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if snap.schema_json is None:
+    def plan(cur: Snapshot):
+        if cur.schema_json is None:
             raise ValueError(f"not a txlog table (no commits): {root}")
-        names = snap.schema.fieldNames()
+        names = cur.schema.fieldNames()
         unknown = [c for c in set if c not in names]
         if unknown:
             raise ValueError(
                 f"update SET: {unknown} not in table schema {names}"
             )
 
-        pm = _logical_to_physical(snap.schema)
+        pm = _logical_to_physical(cur.schema)
         pwhere = [(pm.get(c, c), op, v) for c, op, v in where]
 
         def may_match(entry: dict) -> bool:
             return all(_file_may_match(entry, c, op, v) for c, op, v in pwhere)
 
         touched = [
-            rel for rel in sorted(snap.files) if may_match(snap.files[rel])
+            rel for rel in sorted(cur.files) if may_match(cur.files[rel])
         ]
         # partition columns ride in directory metadata, not row data —
         # SET on one would strand the row in the wrong directory
         part_cols = {
             c
             for rel in touched
-            for c in (snap.files[rel].get("partition") or {})
+            for c in (cur.files[rel].get("partition") or {})
         }
         bad = [c for c in set if pm.get(c, c) in part_cols]
         if bad:
@@ -3515,7 +3402,7 @@ def update(
                 "directories; use merge() (delete+insert) instead"
             )
         noop = {
-            "version": snap.version,
+            "version": cur.version,
             "skipped": True,
             "rows_updated": 0,
             "files_rewritten": 0,
@@ -3525,14 +3412,14 @@ def update(
             return noop
 
         cond = _where_column(where)
-        adds: list[dict] = []
+        masked: list[dict] = []
         removed: list[str] = []
         rows_updated = 0
         if deletion_vectors:
             # read matched rows WITH positions, once: they become (a)
             # the new-position mask and (b) the updated rows to append
-            mdf = _dv_positioned_rows(spark, root, snap, touched)
-            old = _dv_positions(spark, root, snap.files, touched)
+            mdf = _dv_positioned_rows(spark, root, cur, touched)
+            old = _dv_positions(spark, root, cur.files, touched)
             if old is not None:
                 old = old.filter(F.col("rel").isin(touched))
                 # exclude rows an earlier delete already masked — the
@@ -3547,40 +3434,32 @@ def update(
                     for c in names
                 ]
             )
-            staged = _stage_files(
+            adds = _stage_adds(
                 spark,
-                _to_physical_df(
-                    _check_constraints(updated, snap.constraints),
-                    snap.schema,
-                ),
+                _check_constraints(updated, cur.constraints),
                 root,
+                cur.schema,
             )
-            new_adds = _collect_adds(spark, root, staged)
-            masked: list[str] = []
             for rel, n, ne in _write_dv(
-                spark, root, snap.files, touched, mdf.select("rel", "pos"), old
+                spark, root, cur.files, touched, mdf.select("rel", "pos"), old
             ):
                 rows_updated += n
                 removed.append(rel)
                 if ne is not None:  # else every physical row was replaced
-                    adds.append(ne)
-                    masked.append(rel)
+                    masked.append(ne)
             if rows_updated == 0:
                 # predicate matched nothing live: drop the staged files
-                for p in staged:
+                for a in adds:
                     try:
-                        os.unlink(p)
+                        os.unlink(os.path.join(root, a["path"]))
                     except FileNotFoundError:
                         pass
                 return noop
-            adds.extend(new_adds)
             report = {"files_rewritten": 0, "files_masked": len(masked)}
         else:
-            existing = _read_files(
-                spark, root, snap.schema, snap.files, touched
-            )
-            n_matched = existing.filter(cond).count()
-            if n_matched == 0:
+            existing = _read_files(spark, root, cur.schema, cur.files, touched)
+            rows_updated = existing.filter(cond).count()
+            if rows_updated == 0:
                 return noop
             rewritten = existing.select(
                 *[
@@ -3590,49 +3469,24 @@ def update(
                     for c in names
                 ]
             )
-            staged = _stage_files(
+            adds = _stage_adds(
                 spark,
-                _to_physical_df(
-                    _check_constraints(rewritten, snap.constraints),
-                    snap.schema,
-                ),
+                _check_constraints(rewritten, cur.constraints),
                 root,
+                cur.schema,
             )
-            adds = _collect_adds(spark, root, staged)
             removed = list(touched)
-            rows_updated = n_matched
             report = {"files_rewritten": len(touched), "files_masked": 0}
+        return _Plan(
+            cur,
+            adds=adds,
+            linked=masked,
+            remove=removed,
+            may_match=may_match,
+            report={"rows_updated": rows_updated} | report,
+        )
 
-        conflicted = False
-
-        def build(cur: Snapshot, version: int):
-            nonlocal conflicted
-            if cur.constraints != snap.constraints:
-                conflicted = True  # re-validate under the new set (r10 #3)
-                return None
-            if cur.version != snap.version:
-                for p in removed:
-                    if cur.files.get(p) != snap.files.get(p):
-                        conflicted = True
-                        return None
-                for p, e in cur.files.items():
-                    if p not in snap.files and may_match(e):
-                        conflicted = True
-                        return None
-            return {
-                "version": version,
-                "op": "update",
-                "schema": cur.schema_json,
-                "add": adds,
-                "remove": removed,
-                "txn": None,
-            }
-
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            return res | {"rows_updated": rows_updated} | report
-        # conflicted: staged files/sidecars left for vacuum; replan
-    raise RuntimeError(f"txlog update contention at {root}")
+    return _transact(root, "update", plan)
 
 
 # ---------------------------------------------------------------- optimize
@@ -3705,13 +3559,12 @@ def optimize(
     (``within_partitions=False``) remains the deliberate GLOBAL
     re-cluster, which folds partition columns back into the data files.
 
-    Optimistic concurrency: a concurrent APPEND between plan and claim
-    is safe (its files simply aren't compacted this pass), but a
-    concurrent commit that REMOVED a selected plan-time file (delete/
-    merge/another optimize) is a conflict — the compacted copy still
-    contains the removed rows, so committing would resurrect deleted
-    data and duplicate merge-rewritten keys (ADVICE r6, high). Like
-    merge() and delete(), optimize replans from the new snapshot."""
+    Concurrency: "Optimistic concurrency" in the module docstring.
+    optimize has no predicate: a concurrent append is safe (its files
+    simply aren't compacted this pass), while a concurrent commit that
+    removed or swapped a selected file (delete/merge/another optimize)
+    forces a replan — the compacted copy would resurrect deleted data
+    and duplicate merge-rewritten keys (ADVICE r6, high)."""
     import math
 
     if small_file_bytes is not None and zorder_by:
@@ -3729,10 +3582,11 @@ def optimize(
             "optimize: within_partitions only modifies zorder_by "
             "(plain compaction is always partition-aware)"
         )
-    for _ in range(_MAX_COMMIT_RETRIES):
-        snap = load_snapshot(root)
-        if snap.schema_json is None:
+
+    def plan(cur: Snapshot):
+        if cur.schema_json is None:
             return {"version": 0, "skipped": True}
+
         def _mask_debt(e: dict) -> bool:
             # rewrite-worthy regardless of size: the DV mask covers more
             # than mask_fraction of the file's physical rows, so every
@@ -3747,18 +3601,18 @@ def optimize(
         if small_file_bytes is not None and not zorder_by:
             candidates = [
                 p
-                for p, e in snap.files.items()
+                for p, e in cur.files.items()
                 if e.get("bytes", 0) < small_file_bytes or _mask_debt(e)
             ]
         else:
-            candidates = list(snap.files)
+            candidates = list(cur.files)
         # group by partition VALUE: compaction must never mix rows of
         # different partitions into one output file (un-clustering).
         # Group key = sorted (physical col, value) pairs; flat files
         # share the () group.
         by_value: dict[tuple, list[str]] = {}
         for p in candidates:
-            part = snap.files[p].get("partition") or {}
+            part = cur.files[p].get("partition") or {}
             sig = tuple(sorted((k, json.dumps(v)) for k, v in part.items()))
             by_value.setdefault(sig, []).append(p)
         if small_file_bytes is not None:
@@ -3769,21 +3623,21 @@ def optimize(
                 s: ps
                 for s, ps in by_value.items()
                 if len(ps) >= 2
-                or any(_mask_debt(snap.files[p]) for p in ps)
+                or any(_mask_debt(cur.files[p]) for p in ps)
             }
         selected = sorted(p for ps in by_value.values() for p in ps)
         if (
             small_file_bytes is not None
             and len(selected) < 2
-            and not any(_mask_debt(snap.files[p]) for p in selected)
+            and not any(_mask_debt(cur.files[p]) for p in selected)
         ):
             return {
-                "version": snap.version,
+                "version": cur.version,
                 "skipped": True,
-                "files_before": len(snap.files),
+                "files_before": len(cur.files),
                 "files_selected": len(selected),
             }
-        total = sum(snap.files[p].get("bytes", 0) for p in selected)
+        total = sum(cur.files[p].get("bytes", 0) for p in selected)
         n_files = max(1, math.ceil(total / max(1, target_bytes)))
         if zorder_by:
             from metadata_driven_data_pipeline_spark.sinks.layout import (
@@ -3803,14 +3657,11 @@ def optimize(
                 )
 
         if zorder_by and not within_partitions:
-            df = _read_files(spark, root, snap.schema, snap.files, selected)
+            df = _read_files(spark, root, cur.schema, cur.files, selected)
             df = _cluster(
                 df, lambda k: k.repartitionByRange(n_files, F.col("__zkey"))
             )
-            staged = _stage_files(
-                spark, _to_physical_df(df, snap.schema), root
-            )
-            adds = _collect_adds(spark, root, staged)
+            adds = _stage_adds(spark, df, root, cur.schema)
         else:
             # one rewrite job per partition-key LAYOUT (flat files are
             # the () layout): within a layout, hash-repartitioning on
@@ -3818,14 +3669,14 @@ def optimize(
             # partition value in exactly one output file with its
             # key=value directory and tight min==max stats regenerated
             rmap = {
-                v: k for k, v in _logical_to_physical(snap.schema).items()
+                v: k for k, v in _logical_to_physical(cur.schema).items()
             }
             # layout key preserves the stored key ORDER (= directory
             # nesting order), matching _read_files' per-layout legs and
             # reproducing the original key=value nesting on rewrite
             by_layout: dict[tuple, list[str]] = {}
             for p in selected:
-                part = snap.files[p].get("partition") or {}
+                part = cur.files[p].get("partition") or {}
                 by_layout.setdefault(tuple(part), []).append(p)
             adds = []
             for pkeys in sorted(by_layout):
@@ -3833,19 +3684,14 @@ def optimize(
                 if pkeys:
                     logical = [rmap.get(k, k) for k in pkeys]
 
-                    def _rewrite_parted(files_sel, shaper, keys=pkeys):
+                    def _rewrite_parted(files_sel, shaper):
                         df = _read_files(
-                            spark, root, snap.schema, snap.files, files_sel
+                            spark, root, cur.schema, cur.files, files_sel
                         )
-                        pdf = _to_physical_df(shaper(df), snap.schema)
-                        staged = _stage_files(spark, pdf, root, list(keys))
-                        grp_adds = _collect_adds(spark, root, staged)
-                        for add, path in zip(grp_adds, staged):
-                            _apply_partition_entry(
-                                add,
-                                _partition_values_of(root, path, pdf.schema),
-                            )
-                        return grp_adds
+                        return _stage_adds(
+                            spark, shaper(df), root, cur.schema, logical,
+                            "optimize",
+                        )
 
                     # split this layout's files by partition VALUE: a
                     # value whose selected bytes exceed target_bytes is
@@ -3860,7 +3706,7 @@ def optimize(
                     # hot-value count, never by partition count.
                     vals: dict[tuple, list[str]] = {}
                     for p in grp:
-                        part = snap.files[p]["partition"]
+                        part = cur.files[p]["partition"]
                         vs = tuple(json.dumps(part[k]) for k in pkeys)
                         vals.setdefault(vs, []).append(p)
                     def _hot_shape(df: DataFrame, n: int) -> DataFrame:
@@ -3890,7 +3736,7 @@ def optimize(
                     for vs in sorted(vals):
                         vfiles = sorted(vals[vs])
                         vbytes = sum(
-                            snap.files[p].get("bytes", 0) for p in vfiles
+                            cur.files[p].get("bytes", 0) for p in vfiles
                         )
                         if vbytes > target_bytes:
                             n_val = max(
@@ -3907,7 +3753,7 @@ def optimize(
                             cold.extend(vfiles)
                     if cold:
                         cold_bytes = sum(
-                            snap.files[p].get("bytes", 0) for p in cold
+                            cur.files[p].get("bytes", 0) for p in cold
                         )
                         n_grp = max(
                             1, math.ceil(cold_bytes / max(1, target_bytes))
@@ -3920,13 +3766,13 @@ def optimize(
                         )
                 else:
                     grp_bytes = sum(
-                        snap.files[p].get("bytes", 0) for p in grp
+                        cur.files[p].get("bytes", 0) for p in grp
                     )
                     n_grp = max(
                         1, math.ceil(grp_bytes / max(1, target_bytes))
                     )
                     df = _read_files(
-                        spark, root, snap.schema, snap.files, grp
+                        spark, root, cur.schema, cur.files, grp
                     )
                     if zorder_by:
                         # flat files have no layout to preserve: the
@@ -3939,46 +3785,23 @@ def optimize(
                         )
                     else:
                         df = df.repartition(n_grp)
-                    staged = _stage_files(
-                        spark, _to_physical_df(df, snap.schema), root
-                    )
-                    adds.extend(_collect_adds(spark, root, staged))
+                    adds.extend(_stage_adds(spark, df, root, cur.schema))
 
-        conflicted = False
-
-        def build(cur: Snapshot, version: int):
-            nonlocal conflicted
-            for p in selected:
-                # ENTRY identity, not presence: a selected plan-time
-                # file removed under us means our adds are a compacted
-                # copy of stale state, and a concurrent DV delete that
-                # swapped the entry in place (same path, new mask)
-                # means the compacted copy resurrects masked rows
-                if cur.files.get(p) != snap.files.get(p):
-                    conflicted = True
-                    return None
-            return {
-                "version": version,
-                "op": "optimize",
-                # current schema, not plan-time: see merge()
-                "schema": cur.schema_json,
-                "add": adds,
-                # remove the selected set only — a concurrent append
-                # between plan and claim keeps its files uncompacted,
-                # and unselected right-sized files are never touched
-                "remove": selected,
-                "txn": None,
-            }
-
-        res = _commit_loop(root, build)
-        if not res.get("skipped") or not conflicted:
-            return res | {
-                "files_before": len(snap.files),
+        return _Plan(
+            cur,
+            adds=adds,
+            # remove the selected set only — a concurrent append between
+            # plan and claim keeps its files uncompacted, and unselected
+            # right-sized files are never touched
+            remove=selected,
+            report={
+                "files_before": len(cur.files),
                 "files_selected": len(selected),
                 "target_files": n_files,
-            }
-        # conflicted: staged files left for vacuum; replan from new state
-    raise RuntimeError(f"txlog optimize contention at {root}")
+            },
+        )
+
+    return _transact(root, "optimize", plan)
 
 
 def restore(
@@ -4024,11 +3847,9 @@ def restore(
 
     _verify_files()
 
-    def build(cur: Snapshot, v: int):
+    def build(cur: Snapshot) -> dict:
         _verify_files()  # re-check per claim attempt: vacuum may have run
         return {
-            "version": v,
-            "op": "restore",
             "schema": target.schema_json,
             # re-add any path whose ENTRY differs from the current one
             # (not just absent paths): a deletion-vector delete above
@@ -4043,10 +3864,9 @@ def restore(
             # restore the target's retired set too (fold REPLACES on
             # op=restore): see load_snapshot — ADVICE r7 #2
             "retired": sorted(target.retired),
-            "txn": None,
         }
 
-    res = _commit_loop(root, build)
+    res = _transact(root, "restore", lambda cur: _Plan(cur, claim=build))
     return res | {"restored_to": version}
 
 
@@ -4208,18 +4028,14 @@ def clone_table(
 
     mode = "deep" if deep else "shallow"
 
-    def build(cur: Snapshot, v: int):
+    def build(cur: Snapshot) -> dict:
         if cur.schema_json is not None or cur.files or cur.version != 0:
             raise ValueError(
                 f"clone destination {dst_root} is already a txlog table "
                 f"(v{cur.version}) — clone only creates new tables"
             )
         return {
-            "version": v,
-            "op": "clone",
             "schema": src.schema_json,
-            "add": entries,
-            "remove": [],
             "retired": sorted(src.retired),
             "generated": src.generated,
             "identity": src.identity,
@@ -4228,10 +4044,14 @@ def clone_table(
                 "version": src.version,
                 "mode": mode,
             },
-            "txn": None,
         }
 
-    res = _commit_loop(dst_root, build)
+    # the clone references the source's files (deep: copies of them) —
+    # linked, not staged, so the commit reports no rows_written
+    res = _transact(
+        dst_root, "clone", lambda cur: _Plan(cur, linked=entries, claim=build),
+        cur0,
+    )
     for name in sorted(src.constraints):
         _record_constraint(dst_root, name, src.constraints[name])
     return res | {
@@ -5228,21 +5048,12 @@ def create_table(
             "and identity"
         )
 
-    def build(cur: Snapshot, version: int):
+    def build(cur: Snapshot) -> dict | None:
         if cur.schema_json is not None:
             return None  # table exists — bootstrap is a no-op
-        return {
-            "version": version,
-            "op": "create",
-            "schema": schema.json(),
-            "add": [],
-            "remove": [],
-            "generated": gen,
-            "identity": idy,
-            "txn": None,
-        }
+        return {"schema": schema.json(), "generated": gen, "identity": idy}
 
-    res = _commit_loop(root, build)
+    res = _transact(root, "create", lambda cur: _Plan(cur, claim=build))
     if gen and not res.get("skipped"):
         # enforcement rides the existing CHECK-constraint machinery —
         # committed directly (the table is empty; nothing to validate).
@@ -5272,22 +5083,12 @@ def _advance_watermark(
     commit) so the watermark has somewhere to live even before the
     first row-carrying feed (VERDICT r10 #4). Idempotent: a replayed or
     stale batch_id is a no-op skip."""
-    if load_snapshot(root).schema_json is None:
+    snap = load_snapshot(root)
+    if snap.schema_json is None:
         create_table(root, schema)
-
-    def build(cur: Snapshot, version: int):
-        if cur.txns.get(app_id, -1) >= batch_id:
-            return None
-        return {
-            "version": version,
-            "op": "txn",
-            "schema": cur.schema_json,
-            "add": [],
-            "remove": [],
-            "txn": {"app_id": app_id, "batch_id": batch_id},
-        }
-
-    _commit_loop(root, build)
+        snap = None
+    # the plan is an empty _Plan: the commit carries only the watermark
+    _transact(root, "txn", _Plan, snap, (app_id, batch_id))
 
 
 # ------------------------------------------------------------ CDC consumers

@@ -620,6 +620,7 @@ def test_restore_rolls_back_as_new_commit(spark, tmp_path):
     txlog.overwrite(spark, _mk(spark, [(9, "oops")]), root)  # bad deploy
     rep = txlog.restore(spark, root, version=2)
     assert rep["restored_to"] == 2 and rep["version"] == 4
+    assert rep["rows_written"] == 0  # pure metadata: no data file written
     assert _rows(txlog.read_table(spark, root)) == [(1, "a"), (2, "b")]
     # the bad state is still readable at its version (auditable)
     assert _rows(txlog.read_table(spark, root, version=3)) == [(9, "oops")]

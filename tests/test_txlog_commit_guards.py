@@ -72,6 +72,66 @@ def test_append_restages_on_concurrent_overwrite_mapping_reset(
     assert names == {"k", "value"}
 
 
+def test_overwrite_replans_on_concurrent_constraint(
+    spark, tmp_path, monkeypatch
+):
+    """add_constraint landing between overwrite's staging and its claim:
+    the replacement rows were validated under the OLD constraint set, so
+    the overwrite must replan under the new one — where the in-plan
+    check rejects the violating row — instead of committing rows that
+    violate a constraint the table now carries."""
+    root = str(tmp_path / "t")
+    txlog.append(spark, _mk(spark, [(1, "a")]), root)
+
+    real_claim = txlog._try_claim
+    fired = {}
+
+    def claim_with_race(r, version, payload):
+        if not fired and payload.get("op") == "overwrite":
+            fired["x"] = True
+            txlog.add_constraint(spark, root, "no_bad", "v <> 'bad'")
+            return False  # the constraint commit won this version
+        return real_claim(r, version, payload)
+
+    monkeypatch.setattr(txlog, "_try_claim", claim_with_race)
+    with pytest.raises(Exception, match="no_bad"):
+        txlog.overwrite(spark, _mk(spark, [(2, "bad")]), root)
+    monkeypatch.undo()
+
+    assert _rows(txlog.read_table(spark, root)) == [(1, "a")]
+    assert "no_bad" in txlog.load_snapshot(root).constraints
+
+
+def test_uncontended_commit_folds_the_log_once(spark, tmp_path, monkeypatch):
+    """An uncontended commit plans against the snapshot it claims from:
+    one log fold per merge, append and optimize."""
+    root = str(tmp_path / "t")
+    txlog.append(spark, _mk(spark, [(1, "a"), (2, "b")]), root)
+
+    real_load = txlog.load_snapshot
+    calls = []
+
+    def counting_load(*args, **kwargs):
+        calls.append(args)
+        return real_load(*args, **kwargs)
+
+    monkeypatch.setattr(txlog, "load_snapshot", counting_load)
+    folds = {}
+    for name, commit in [
+        ("merge", lambda: txlog.merge(
+            spark, _mk(spark, [(2, "z")]), root, ["k"], order_col=None
+        )),
+        ("append", lambda: txlog.append(spark, _mk(spark, [(3, "c")]), root)),
+        ("optimize", lambda: txlog.optimize(spark, root)),
+    ]:
+        calls.clear()
+        assert not commit()["skipped"]
+        folds[name] = len(calls)
+    monkeypatch.undo()
+    assert folds == {"merge": 1, "append": 1, "optimize": 1}
+    assert _rows(txlog.read_table(spark, root)) == [(1, "a"), (2, "z"), (3, "c")]
+
+
 def test_commit_staged_raises_on_mapping_drift(spark, tmp_path):
     """The DataSource writer stages executor files under the mapping it
     saw at job start; a concurrent overwrite resetting that mapping

@@ -71,6 +71,7 @@ def test_dv_delete_rewrites_zero_data_files(spark, tmp_path):
     assert res["rows_deleted"] == 5
     assert res["files_rewritten"] == 0 and res["files_dropped"] == 0
     assert res["files_masked"] == 1
+    assert res["rows_written"] == 0  # the swapped entry is not a write
     mt1 = _mtimes(root)
     assert set(mt1) == set(mt0), "data file set changed"
     assert all(mt1[p] == mt0[p] for p in mt0), "a data file was rewritten"

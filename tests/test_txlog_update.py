@@ -78,6 +78,7 @@ def test_dv_update_writes_only_updated_rows(spark, tmp_path):
         deletion_vectors=True,
     )
     assert res["rows_updated"] == 5
+    assert res["rows_written"] == 5  # only the updated rows were written
     snap = txlog.load_snapshot(root)
     # every pre-existing file byte-identical; new files carry ONLY the
     # 5 updated rows
