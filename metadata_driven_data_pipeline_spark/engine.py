@@ -42,7 +42,9 @@ from metadata_driven_data_pipeline_spark.manifest import (
     write_manifest,
 )
 from metadata_driven_data_pipeline_spark.operators.relational import TRANSFORM_TYPES
-from metadata_driven_data_pipeline_spark.plans.compiler import (
+# compile_dataflow is unused here but stays importable: perfbench's
+# tracer (perfbench/spans.py) wraps engine.compile_dataflow
+from metadata_driven_data_pipeline_spark.plans.compiler import (  # noqa: F401
     compile_dataflow,
     validate_metadata,
 )
@@ -68,7 +70,7 @@ class Engine:
         pipeline_name: str = "pipeline",
         log: RunLog | None = None,
     ):
-        validate_metadata(metadata)
+        self.compiled = validate_metadata(metadata)
         self.spark = spark
         self.metadata = metadata
         self.run_id = run_id or os.environ.get("RUN_ID") or uuid.uuid4().hex[:16]
@@ -82,7 +84,6 @@ class Engine:
         # on post_pipeline_tests, not on run_spark_pipeline).
         self._owns_log = log is None
         self.log = log if log is not None else RunLog(self.run_id, pipeline_name)
-        self.compiled = [compile_dataflow(f) for f in metadata["dataflows"]]
 
     # -- single-batch dataflow execution ------------------------------------
 

@@ -7,17 +7,24 @@ manifest holding ``last_processed_batch`` (the watermark),
 EVERY successful batch (the at-least-once commit point,
 ``pipeline/runner.py:461-463``).
 
-The reference stores it in MinIO via an SDK; we store it at any URI the
-filesystem layer supports (local path in tests, ``s3a://`` in prod via
-Hadoop FS) — same JSON shape so run logs stay comparable.
+The reference stores it in MinIO via an SDK; we store it on the driver's
+local filesystem, at a bare path or a ``file://`` URI — same JSON shape so
+run logs stay comparable. Any other scheme (``s3a://``, ``hdfs://``)
+raises ``ValueError``: plain file I/O would write it under a relative
+``./s3a:/...`` directory of the working directory, lost between runs on a
+cluster driver, and the watermark would silently reset.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from datetime import datetime, timezone
 from typing import Any, Optional
+from urllib.parse import unquote, urlparse
+
+_URI = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:/")
 
 
 def get_timestamp() -> str:
@@ -51,8 +58,23 @@ def update_manifest(
     return manifest
 
 
+def _local_path(path: str) -> str:
+    """The local path a manifest location names: a bare path as is, a
+    ``file:`` URI as its path; any other URI raises ``ValueError``."""
+    if not _URI.match(path):
+        return path
+    uri = urlparse(path)
+    if uri.scheme.lower() == "file" and uri.netloc in ("", "localhost"):
+        return unquote(uri.path)
+    raise ValueError(
+        f"manifest path {path!r}: only local paths and file:// URIs are "
+        "supported"
+    )
+
+
 def read_manifest(path: str) -> Optional[dict[str, Any]]:
     """None if the manifest doesn't exist yet (parity: NoSuchKey → None)."""
+    path = _local_path(path)
     if not os.path.exists(path):
         return None
     with open(path, encoding="utf-8") as f:
@@ -60,6 +82,7 @@ def read_manifest(path: str) -> Optional[dict[str, Any]]:
 
 
 def write_manifest(manifest: dict[str, Any], path: str) -> None:
+    path = _local_path(path)
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:

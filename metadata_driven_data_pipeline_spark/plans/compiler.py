@@ -118,11 +118,12 @@ def compile_dataflow(flow: dict[str, Any]) -> CompiledDataflow:
     )
 
 
-def validate_metadata(metadata: dict[str, Any]) -> None:
+def validate_metadata(metadata: dict[str, Any]) -> list[CompiledDataflow]:
     """Structural gate (parity with tests/test_pre_metadata_integrity.py):
     dataflows non-empty; processing_mode known; incremental requires
     batch_config with a '{date}' input_pattern + date_format; every flow has
-    name/sources/transformations/sinks with required non-empty fields."""
+    name/sources/transformations/sinks with required non-empty fields.
+    Returns the compiled dataflows, in document order."""
     if not isinstance(metadata, dict):
         raise ValueError("Metadata must be a dict")
     flows = metadata.get("dataflows")
@@ -142,6 +143,7 @@ def validate_metadata(metadata: dict[str, Any]) -> None:
         if not bc.get("date_format"):
             raise ValueError("batch_config.date_format is required")
 
+    compiled = []
     for flow in flows:
         if not flow.get("name"):
             raise ValueError("Every dataflow needs a non-empty 'name'")
@@ -161,4 +163,5 @@ def validate_metadata(metadata: dict[str, Any]) -> None:
                 raise ValueError(
                     f"Dataflow '{flow['name']}': every sink needs 'input' and 'path'"
                 )
-        compile_dataflow(flow)  # DAG-level validation
+        compiled.append(compile_dataflow(flow))  # DAG-level validation
+    return compiled

@@ -15,7 +15,7 @@ sink) or run a memory-sink smoke query for tests.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -199,6 +199,21 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str | None = None) -> N
     q.awaitTermination()
 
 
+def _drain(
+    df: DataFrame, checkpoint_dir: str, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Feed everything currently available in ``df`` through
+    ``foreachBatch(fn)``, then stop (``Trigger.AvailableNow``); progress
+    lives in ``checkpoint_dir``."""
+    q = (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def _committed_batch(existing: DataFrame) -> int | None:
     """Highest batch id already folded into a stored monitor grid (the
     ``last_batch_id`` column every grid row carries), or None for
@@ -285,13 +300,7 @@ def run_upsert_consolidated(
         )
         swap.replace(merged, output_path, fmt)
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, merge)
 
 
 def cms_monitor_merge_batch(
@@ -363,13 +372,7 @@ def run_cms_monitor(
             fmt=fmt,
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, merge)
 
 
 def run_upsert_partitioned(
@@ -408,13 +411,7 @@ def run_upsert_partitioned(
             fmt=fmt,
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, merge)
 
 
 def run_qhist_monitor(
@@ -452,13 +449,7 @@ def run_qhist_monitor(
             batch_df, batch_id, output_path, value_col, lo, hi, bins, fmt
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, merge)
 
 
 def qhist_monitor_merge_batch(
@@ -543,13 +534,7 @@ def run_ngram_model_monitor(
             batch_df, batch_id, output_path, text_col, buckets, fmt
         )
 
-    q = (
-        df.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, merge)
 
 
 def run_txlog_sink(
@@ -598,10 +583,4 @@ def run_txlog_sink(
                 order_by,
             )
 
-    q = (
-        df.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(df, checkpoint_dir, commit)

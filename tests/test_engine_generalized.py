@@ -112,31 +112,32 @@ def test_declarative_analytics_matches_duckdb(spark, tmp_path):
     assert got == want and len(got) == 5
 
 
+def two_flow_metadata(root: str, concurrent: bool) -> dict:
+    flows = []
+    for t, key in (("orders", "o_orderstatus"), ("customer", "c_mktsegment")):
+        flows.append({
+            "name": f"agg-{t}",
+            "sources": [{"name": t, "path": f"{SF}/{t}.parquet", "format": "parquet"}],
+            "transformations": [{
+                "name": f"counts_{t}",
+                "type": "aggregate",
+                "params": {"input": t, "groupBy": [key],
+                           "aggregations": [{"expr": "COUNT(*)", "alias": "n"}]},
+            }],
+            "sinks": [{"input": f"counts_{t}", "name": f"out-{t}",
+                       "path": f"{root}/{t}", "format": "parquet",
+                       "saveMode": "overwrite"}],
+        })
+    return {"processing_mode": "full", "concurrent_dataflows": concurrent,
+            "dataflows": flows, "consolidation": {"enabled": False}}
+
+
 def test_concurrent_dataflows_match_serial(spark, tmp_path):
     """Two independent dataflows run from threads must produce exactly the
     serial results (and the run log must contain both dataflows' stages)."""
-    def meta(root, concurrent):
-        flows = []
-        for t, key in (("orders", "o_orderstatus"), ("customer", "c_mktsegment")):
-            flows.append({
-                "name": f"agg-{t}",
-                "sources": [{"name": t, "path": f"{SF}/{t}.parquet", "format": "parquet"}],
-                "transformations": [{
-                    "name": f"counts_{t}",
-                    "type": "aggregate",
-                    "params": {"input": t, "groupBy": [key],
-                               "aggregations": [{"expr": "COUNT(*)", "alias": "n"}]},
-                }],
-                "sinks": [{"input": f"counts_{t}", "name": f"out-{t}",
-                           "path": f"{root}/{t}", "format": "parquet",
-                           "saveMode": "overwrite"}],
-            })
-        return {"processing_mode": "full", "concurrent_dataflows": concurrent,
-                "dataflows": flows, "consolidation": {"enabled": False}}
-
     ser, par = str(tmp_path / "ser"), str(tmp_path / "par")
-    Engine(spark, meta(ser, False), run_id="ser").run()
-    log = Engine(spark, meta(par, True), run_id="par").run()
+    Engine(spark, two_flow_metadata(ser, False), run_id="ser").run()
+    log = Engine(spark, two_flow_metadata(par, True), run_id="par").run()
     assert log["status"] == "success"
     for t in ("orders", "customer"):
         a = sorted(map(tuple, spark.read.parquet(f"{ser}/{t}").collect()))
@@ -144,3 +145,23 @@ def test_concurrent_dataflows_match_serial(spark, tmp_path):
         assert a == b and len(a) > 0
     names = [s["name"] for st in log["stages"] for s in st.get("sub_stages", [])]
     assert any("orders" in n for n in names) and any("customer" in n for n in names)
+
+
+def test_engine_compiles_each_dataflow_once(spark, tmp_path, monkeypatch):
+    """validate_metadata's compiled flows are the ones the Engine runs:
+    building an Engine compiles each dataflow once, not twice."""
+    from metadata_driven_data_pipeline_spark import engine as engine_mod
+    from metadata_driven_data_pipeline_spark.plans import compiler
+
+    calls = []
+    original = compiler.compile_dataflow
+
+    def counting(flow):
+        calls.append(flow["name"])
+        return original(flow)
+
+    monkeypatch.setattr(compiler, "compile_dataflow", counting)
+    monkeypatch.setattr(engine_mod, "compile_dataflow", counting)
+    engine = Engine(spark, two_flow_metadata(str(tmp_path), False))
+    assert calls == ["agg-orders", "agg-customer"]
+    assert [c.name for c in engine.compiled] == calls

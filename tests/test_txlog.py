@@ -733,6 +733,31 @@ def test_vacuum_age_guard_protects_inflight_staged_files(spark, tmp_path):
     assert not os.path.exists(staged) and rep0["deleted"] >= 1
 
 
+def test_vacuum_sweeps_only_old_staging_leftovers(spark, tmp_path):
+    """A crashed writer's _staging-* directory is reclaimed once past the
+    grace window; a fresh one may belong to a live writer and is kept."""
+    import time
+
+    root = str(tmp_path / "t")
+    txlog.append(spark, _mk(spark, [(1, "a")]), root)
+    old = os.path.join(root, "_staging-old")
+    young = os.path.join(root, "_staging-young")
+    for d in (old, young):
+        os.makedirs(d)
+        open(os.path.join(d, "part-0.parquet"), "wb").close()
+    past = time.time() - 7200
+    os.utime(old, (past, past))
+
+    dry = txlog.vacuum(root, keep_versions=1, dry_run=True)
+    assert dry["would_delete"] == ["_staging-old"]
+    assert dry["skipped_young"] == 1
+    assert os.path.isdir(old) and os.path.isdir(young)
+
+    rep = txlog.vacuum(root, keep_versions=1)
+    assert rep["skipped_young"] == 1
+    assert not os.path.exists(old) and os.path.isdir(young)
+
+
 # ---------------------------------------------------------- round 6: fixes
 
 
