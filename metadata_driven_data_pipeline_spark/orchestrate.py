@@ -286,7 +286,9 @@ def run_table_maintenance(
       debt) nightly pass); ``maskFraction`` additionally rewrites any
       file whose deletion-vector mask covers more than that fraction of
       its rows, folding accumulated mask debt away so point-deleted
-      files stop paying the scan-time anti-join forever;
+      files stop paying the scan-time anti-join forever — it modifies
+      the bin-packed pass only, so it requires ``smallFileBytes``
+      (alone it raises ``ValueError``);
       ``withinPartitions: true`` makes ``zorderBy`` re-cluster each
       partition value IN PLACE (layout kept) instead of the global
       layout-folding re-cluster;

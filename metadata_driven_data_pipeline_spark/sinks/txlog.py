@@ -3551,6 +3551,9 @@ def optimize(
     even alone in its partition) — folding the mask away stops the
     file paying the scan-time anti-join forever. Unmasked right-sized
     files keep their mtime untouched, preserving the O(debt) bound.
+    It only modifies a bin-packed compaction: without
+    ``small_file_bytes`` every file would be selected anyway, so
+    passing it alone raises.
 
     ``zorder_by`` + ``within_partitions=True`` (r9) is the public
     Delta ``OPTIMIZE ... ZORDER BY`` shape for partitioned tables:
@@ -3584,6 +3587,11 @@ def optimize(
         raise ValueError(
             "optimize: within_partitions only modifies zorder_by "
             "(plain compaction is always partition-aware)"
+        )
+    if mask_fraction is not None and small_file_bytes is None:
+        raise ValueError(
+            "optimize: mask_fraction only modifies a bin-packed "
+            "compaction (pass small_file_bytes too)"
         )
 
     def plan(cur: Snapshot):
@@ -4024,6 +4032,9 @@ def vacuum(
     snapshot (the latest ``keep_versions``), plus staging leftovers.
     Time travel keeps working within the horizon; older versions become
     unreadable — the standard retention trade. Driver-side O(files).
+    ``deleted`` counts every path reclaimed (data file, ``_dv/`` sidecar
+    directory or ``_staging-*`` directory), so a real run reports as
+    many as its dry run lists.
 
     ``min_age_seconds`` guards in-flight writers: the Python DataSource
     writer stages task files directly into ``data/`` that stay
@@ -4039,82 +4050,61 @@ def vacuum(
     deletes NOTHING: the report carries the same counts plus the
     candidate paths under ``would_delete`` — what an operator reviews
     before an irreversible sweep (``clean_log`` is skipped too)."""
+    import shutil
     import time as _time
 
     commits, _ = _list_log(root)
     if not commits:
         return {"deleted": 0}
     retained = commits[-keep_versions:]
-    live: set[str] = set()
-    live_dv: set[str] = set()
+    live: set[str] = set()  # data files and _dv/ sidecars still referenced
     for v in retained:
         snap_files = load_snapshot(root, v).files
         live |= set(snap_files)
-        live_dv |= {
-            e["dv"]["path"] for e in snap_files.values() if e.get("dv")
-        }
-    cutoff = _time.time() - min_age_seconds
-    data_dir = os.path.join(root, DATA_DIR)
-    deleted = skipped_young = 0
-    would_delete: list[str] = []
-    if os.path.isdir(data_dir):
-        # walk, not listdir: adopted Hive-partitioned files live under
-        # key=value subdirectories of data/ (convert_to_txlog, r7)
-        for dirpath, _dirnames, filenames in os.walk(data_dir):
-            for name in filenames:
-                path = os.path.join(dirpath, name)
-                rel = os.path.relpath(path, root)
-                if rel in live:
-                    continue
-                try:
-                    if os.path.getmtime(path) > cutoff:
-                        skipped_young += 1
-                        continue
-                    if dry_run:
-                        would_delete.append(rel)
-                        continue
-                    os.unlink(path)
-                except FileNotFoundError:
-                    continue  # another vacuum raced us
-                deleted += 1
-    import shutil
-
-    # deletion-vector sidecars: one directory per DV commit under _dv/;
-    # reclaim those no retained snapshot's entries reference (superseded
-    # by consolidation, orphaned by a conflict replan, or aged out of
-    # the horizon), behind the same writer grace window
+        live |= {e["dv"]["path"] for e in snap_files.values() if e.get("dv")}
+    # the sweep's candidates, as (root-relative name, path):
+    #  - data files: walk, not listdir — adopted Hive-partitioned files
+    #    live under key=value subdirectories of data/ (convert_to_txlog)
+    #  - deletion-vector sidecars: one directory per DV commit under
+    #    _dv/, superseded by consolidation, orphaned by a conflict
+    #    replan, or aged out of the horizon
+    #  - _staging-* directories a crashed writer left behind
+    candidates = [
+        (os.path.relpath(os.path.join(d, n), root), os.path.join(d, n))
+        for d, _dirs, names in os.walk(os.path.join(root, DATA_DIR))
+        for n in names
+    ]
     dv_root = os.path.join(root, DV_DIR)
     if os.path.isdir(dv_root):
-        for name in sorted(os.listdir(dv_root)):
-            rel = os.path.join(DV_DIR, name)
-            if rel in live_dv:
+        candidates += [
+            (os.path.join(DV_DIR, n), os.path.join(dv_root, n))
+            for n in os.listdir(dv_root)
+        ]
+    candidates += [
+        (n, os.path.join(root, n))
+        for n in os.listdir(root)
+        if n.startswith("_staging-")
+    ]
+    cutoff = _time.time() - min_age_seconds
+    deleted = skipped_young = 0
+    would_delete: list[str] = []
+    for rel, path in candidates:
+        if rel in live:
+            continue
+        try:
+            if os.path.getmtime(path) > cutoff:
+                skipped_young += 1
                 continue
-            path = os.path.join(dv_root, name)
-            try:
-                if os.path.getmtime(path) > cutoff:
-                    skipped_young += 1
-                    continue
-            except FileNotFoundError:
-                continue  # another vacuum raced us
             if dry_run:
                 would_delete.append(rel)
                 continue
-            shutil.rmtree(path, ignore_errors=True)
-            deleted += 1
-
-    for name in os.listdir(root):
-        if name.startswith("_staging-"):
-            path = os.path.join(root, name)
-            try:
-                if os.path.getmtime(path) > cutoff:
-                    skipped_young += 1
-                    continue
-            except FileNotFoundError:
-                continue
-            if dry_run:
-                would_delete.append(name)
-                continue
-            shutil.rmtree(path, ignore_errors=True)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                os.unlink(path)
+        except FileNotFoundError:
+            continue  # another vacuum raced us
+        deleted += 1
     out = {
         "deleted": deleted,
         "retained_versions": retained,
@@ -4199,23 +4189,82 @@ def list_changes(
     return out
 
 
-def _resolve_since(
-    root: str, commits: list[int], since_version, since_timestamp
-) -> int:
-    """Resolve a change-feed cursor: exactly one of ``since_version`` /
-    ``since_timestamp``. An instant resolves to the newest commit
-    at-or-before it (:func:`_resolve_timestamp`), so the feed emits
-    commits strictly AFTER the instant — the public
-    ``startingTimestamp`` shape."""
+def _feed_range(
+    root: str, since_version, since_timestamp, to_version, max_versions
+) -> tuple[int, int, list[int]]:
+    """Resolve a change-feed request to ``(since, hi, versions)``: the
+    cursor, the range end and the commits in ``(since, hi]``.
+
+    The cursor is exactly one of ``since_version`` / ``since_timestamp``.
+    An instant resolves to the newest commit at-or-before it
+    (:func:`_resolve_timestamp`), so the feed emits commits strictly
+    AFTER the instant — the public ``startingTimestamp`` shape. ``hi``
+    is ``to_version``, else the latest commit (0 on an empty log).
+    ``max_versions`` (≥ 1) keeps only the first that many commits."""
+    if max_versions is not None and max_versions < 1:
+        raise ValueError(f"max_versions must be >= 1: {max_versions}")
+    commits, _ = _list_log(root)
     if since_timestamp is not None:
         if since_version is not None:
             raise ValueError(
                 "pass since_version OR since_timestamp, not both"
             )
-        return _resolve_timestamp(root, commits, since_timestamp)
-    if since_version is None:
+        since_version = _resolve_timestamp(root, commits, since_timestamp)
+    elif since_version is None:
         raise ValueError("a change feed needs since_version or since_timestamp")
-    return since_version
+    hi = to_version if to_version is not None else (commits[-1] if commits else 0)
+    versions = [v for v in commits if since_version < v <= hi][:max_versions]
+    return since_version, hi, versions
+
+
+def _row_change_units(
+    root: str, since: int, versions: list[int]
+) -> list[tuple[int, str | None, dict, dict]]:
+    """The row-level change feed's one commit walk, shared by
+    :func:`read_row_changes` and the DataSource's ``rowLevel`` stream:
+    one ``(version, op, adds, before)`` unit per commit in ``versions``
+    (ascending, all after ``since``). ``adds`` maps each added rel to
+    its entry; ``before`` maps each rel the commit touched to its entry
+    as of the previous version — the removed files plus the previous
+    incarnation of any path re-added in place (a DV delete swaps the
+    entry, mask and all). An empty ``before`` is a pure append.
+
+    The walk folds forward from the full snapshot at ``since``, so that
+    state must be reconstructible: a retained commit, a retained
+    checkpoint, or v0 of a never-expired log. Anything below that
+    horizon raises with the earliest valid cursor instead of feeding a
+    short (or KeyError-ing) walk."""
+    if not versions:
+        return []
+    commits, checkpoints = _list_log(root)
+    if not (
+        since >= commits[0]
+        or since in checkpoints
+        or (since == 0 and commits[0] == 1)
+    ):
+        raise ValueError(
+            f"row change feed from v{since} at {root}: the "
+            f"before-state at v{since} was expired by log retention "
+            "(cleanup_log) and cannot be reconstructed — restart the "
+            "consumer from a full snapshot read; the "
+            f"earliest valid row-feed cursor is v{commits[0]}"
+        )
+    prev: dict = {} if since == 0 else dict(load_snapshot(root, since).files)
+    log_dir = _log_path(root)
+    units = []
+    for v in versions:
+        c = _read_json(os.path.join(log_dir, _commit_name(v)))
+        adds = {a["path"]: a for a in c.get("add", [])}
+        removes = c.get("remove", [])
+        before = {
+            p: prev[p]
+            for p in sorted(set(removes) | (set(adds) & set(prev)))
+        }
+        units.append((v, c.get("op"), adds, before))
+        for r in removes:
+            prev.pop(r, None)
+        prev.update(adds)
+    return units
 
 
 def read_changes(
@@ -4249,19 +4298,11 @@ def read_changes(
     consumed commit, so an uncapped 10,000-commit backlog is a
     10,000-leg union; capped consumers resume from
     ``max(_commit_version)`` of the returned frame."""
-    commits, _ = _list_log(root)
-    since_version = _resolve_since(
-        root, commits, since_version, since_timestamp
+    since_version, hi, versions = _feed_range(
+        root, since_version, since_timestamp, to_version, max_versions
     )
-    hi = to_version if to_version is not None else (commits[-1] if commits else 0)
-    if max_versions is not None:
-        if max_versions < 1:
-            raise ValueError(f"max_versions must be >= 1: {max_versions}")
-        consumed = sorted(
-            x for x in commits if since_version < x <= hi
-        )[:max_versions]
-        if consumed:
-            hi = consumed[-1]
+    if max_versions is not None and versions:
+        hi = versions[-1]
     snap = load_snapshot(root, hi)
     if snap.schema is None:
         raise ValueError(f"not a txlog table (no commits): {root}")
@@ -4322,9 +4363,12 @@ def read_row_changes(
 
     computed under the ``to``-snapshot schema with both sides read
     through the normal (DV-masked, partition-injecting, column-mapped)
-    read path. No CDC sidecar files, no write-time overhead on any
-    commit, and the multiset semantics of EXCEPT ALL keep duplicate
-    rows exact. What falls out for free:
+    read path, as ONE signed-count aggregate per feed (after rows +1,
+    before rows -1, grouped by commit and row). The commit walk is
+    :func:`_row_change_units`, which the ``rowLevel`` stream shares. No
+    CDC sidecar files, no write-time overhead on any commit, and the
+    multiset arithmetic keeps duplicate rows exact. What falls out for
+    free:
 
     - pure appends take a fast path (all added rows are inserts — no
       diff job at all);
@@ -4350,7 +4394,7 @@ def read_row_changes(
     ``max_versions`` (r9, VERDICT r8 'what's missing' #1) bounds
     CONSUMPTION the way the stream source's ``maxVersionsPerTrigger``
     does: only the first ``max_versions`` commits after ``since`` are
-    diffed, capping the plan at ≤2 EXCEPT-ALL legs per consumed commit
+    diffed, capping the plan at ≤2 signed read legs per consumed commit
     instead of building a 20,000-leg union over a 10,000-commit
     backlog. Consumers resume from ``max(_commit_version)`` of the
     returned frame — or use :func:`iter_row_changes`, which loops the
@@ -4366,39 +4410,14 @@ def read_row_changes(
     ``since_timestamp`` (r9) is the instant-addressed cursor — changes
     from commits strictly after that instant, mutually exclusive with
     ``since_version`` (the ``startingTimestamp`` shape)."""
-    commits, checkpoints = _list_log(root)
-    since_version = _resolve_since(
-        root, commits, since_version, since_timestamp
+    since_version, hi, versions = _feed_range(
+        root, since_version, since_timestamp, to_version, max_versions
     )
-    hi = to_version if to_version is not None else (commits[-1] if commits else 0)
-    if commits and since_version < hi:
-        # the feed's before-side is the FULL snapshot at since_version.
-        # The old guard admitted since == commits[0]-1, whose snapshot
-        # load then failed with a misleading 'no retained snapshot'
-        # error (ADVICE r8): state the earliest valid cursor here.
-        ok = (
-            since_version >= commits[0]
-            or since_version in checkpoints
-            or (since_version == 0 and commits[0] == 1)
-        )
-        if not ok:
-            raise ValueError(
-                f"row change feed from v{since_version} at {root}: the "
-                f"before-state at v{since_version} was expired by log "
-                "retention (cleanup_log) and cannot be reconstructed — "
-                "restart the consumer from a full snapshot read; the "
-                f"earliest valid row-feed cursor is v{commits[0]}"
-            )
-    versions = sorted(x for x in commits if since_version < x <= hi)
-    if max_versions is not None:
-        if max_versions < 1:
-            raise ValueError(f"max_versions must be >= 1: {max_versions}")
-        versions = versions[:max_versions]
+    units = _row_change_units(root, since_version, versions)
     # emit under the schema at the END of what is actually consumed —
     # a capped chunk resolves under its own end-snapshot, exactly what
     # a consumer applying chunks in order expects
-    hi_eff = versions[-1] if versions else (hi if commits else None)
-    snap_hi = load_snapshot(root, hi_eff)
+    snap_hi = load_snapshot(root, versions[-1] if versions else hi)
     if snap_hi.schema is None:
         raise ValueError(f"not a txlog table (no commits): {root}")
     schema = snap_hi.schema
@@ -4409,10 +4428,6 @@ def read_row_changes(
                 f"read_row_changes key_cols {missing} not in table "
                 f"schema {schema.fieldNames()}"
             )
-    prev_files: dict = (
-        {} if since_version == 0 else dict(load_snapshot(root, since_version).files)
-    )
-    log_dir = _log_path(root)
 
     def _tag(df: DataFrame, change: str, v: int, op: str) -> DataFrame:
         return df.select(
@@ -4476,18 +4491,8 @@ def read_row_changes(
                 # non-null values exist but bounds are unprovable
                 col_acc[lc] = None
 
-    for v in versions:
-        c = _read_json(os.path.join(log_dir, _commit_name(v)))
-        op = c.get("op")
-        adds = {a["path"]: a for a in c.get("add", [])}
-        removes = list(c.get("remove", []))
-        # an add whose path already existed is an ENTRY SWAP (a DV
-        # delete masking in place) — its previous incarnation belongs
-        # on the before side of the diff
-        before_paths = sorted(
-            set(removes) | (set(adds) & set(prev_files))
-        )
-        if not before_paths:
+    for v, op, adds, before in units:
+        if not before:
             if adds:  # pure append/convert: every added row is an insert
                 meta_pure_rows += sum(_live_rows(a) for a in adds.values())
                 for a in adds.values():
@@ -4500,47 +4505,30 @@ def read_row_changes(
                         op,
                     )
                 )
-        else:
-            # r11 optimization (guide §2.3/§2.4): the old shape ran the
-            # snapshot diff as TWO EXCEPT ALLs per commit (each its own
-            # aggregate+exchange) and keyed pairing as INTERSECT + four
-            # semi/anti joins — ~7 exchanges per commit. The same
-            # multiset arithmetic is ONE signed count per distinct row:
-            # rows tagged +1 (after) / -1 (before) aggregate to
-            # net = n_after - n_before; net > 0 emits that many inserts,
-            # net < 0 that many deletes — exactly what the EXCEPT ALL
-            # pair produced. Every commit's legs ride the SAME aggregate
-            # (version in the grouping key), so a whole chunk diffs in
-            # one exchange, plus one key-window pass for update pairing.
-            before = _read_files(
-                spark, root, schema, prev_files, before_paths
-            )
-            after_entries = dict(adds)
-            after = _read_files(
-                spark, root, schema, after_entries, sorted(after_entries)
-            )
-            before_live = sum(
-                _live_rows(prev_files[p]) for p in before_paths
-            )
-            after_live = sum(_live_rows(e) for e in after_entries.values())
-            if before_live != after_live:
-                meta_known_nonzero = True
-            for p in before_paths:
-                _fold_entry(prev_files[p])
-            for e in after_entries.values():
-                _fold_entry(e)
-            for df, wgt in ((after, 1), (before, -1)):
-                diff_legs.append(
-                    df.select(
-                        *[F.col(c2) for c2 in schema.fieldNames()],
-                        F.lit(v).alias("_commit_version"),
-                        F.lit(op).alias("_commit_op"),
-                        F.lit(wgt).alias("__w"),
-                    )
+            continue
+        # the diff is ONE signed count per distinct row: rows tagged +1
+        # (after) / -1 (before) aggregate to net = n_after - n_before;
+        # net > 0 emits that many inserts, net < 0 that many deletes —
+        # the EXCEPT ALL pair's multiset arithmetic. Every commit's legs
+        # ride the SAME aggregate (version in the grouping key), so a
+        # whole chunk diffs in one exchange, plus one key-window pass
+        # for update pairing.
+        if sum(map(_live_rows, before.values())) != sum(
+            map(_live_rows, adds.values())
+        ):
+            meta_known_nonzero = True
+        for e in (*before.values(), *adds.values()):
+            _fold_entry(e)
+        for entries, wgt in ((adds, 1), (before, -1)):
+            diff_legs.append(
+                _read_files(spark, root, schema, entries, sorted(entries))
+                .select(
+                    *[F.col(c2) for c2 in schema.fieldNames()],
+                    F.lit(v).alias("_commit_version"),
+                    F.lit(op).alias("_commit_op"),
+                    F.lit(wgt).alias("__w"),
                 )
-        for r in removes:
-            prev_files.pop(r, None)
-        prev_files.update(adds)
+            )
     if diff_legs:
         from pyspark.sql.window import Window
 
@@ -4643,21 +4631,16 @@ def iter_row_changes(
     checkpoint ``resume_version`` after applying each chunk so a crash
     resumes exactly where it stopped. Concatenating every chunk equals
     the one-shot feed multiset-exactly (pinned in tests)."""
-    if max_versions < 1:
-        raise ValueError(f"max_versions must be >= 1: {max_versions}")
-    commits, _ = _list_log(root)
-    cursor = _resolve_since(root, commits, since_version, since_timestamp)
-    hi = to_version if to_version is not None else (commits[-1] if commits else 0)
-    while cursor < hi:
-        versions = [x for x in commits if cursor < x <= hi][:max_versions]
-        if not versions:
-            break
+    cursor, hi, versions = _feed_range(
+        root, since_version, since_timestamp, to_version, max_versions
+    )
+    while versions:
         end = versions[-1]
         yield (
             read_row_changes(spark, root, cursor, end, key_cols=key_cols),
             end,
         )
-        cursor = end
+        cursor, _, versions = _feed_range(root, end, None, hi, max_versions)
 
 
 def _net_changes(

@@ -27,8 +27,10 @@ the standard reader surface instead of a module-level helper:
   change feed (``sinceVersion``) too. ``.option("rowLevel", "true")``
   (r9) streams the TRUE row-level CDC feed instead — exact per-commit
   insert/delete deltas tagged ``_change_type`` (the streaming form of
-  :func:`txlog.read_row_changes`), with the same admission control and
-  checkpointed resume; appends fan out per-file, rewrites diff to zero.
+  :func:`txlog.read_row_changes`, planned from the same commit walk,
+  ``txlog._row_change_units``, with the same retention check), with the
+  same admission control and checkpointed resume; appends fan out
+  per-file, rewrites diff to zero.
 - ``df.write.format("txlog").mode("append"|"overwrite").save(root)`` —
   executor tasks stage one parquet file each directly into ``data/``
   (invisible until referenced), and the driver-side commit folds every
@@ -42,7 +44,9 @@ the standard reader surface instead of a module-level helper:
   contract as Delta's txnAppId/txnVersion).
 
 Scale shape: planning is O(files-in-range) driver-side JSON folding (the
-same bounded work every log-structured table format does); the data
+same bounded work every log-structured table format does), and every
+reader turns log entries into slices through one builder (``_slice``)
+and reads them through one function (``_read_slice``); the data
 plane is one Arrow parquet read per partition, executed across the
 cluster, with unchanged-filter semantics — pushFilters returns every
 filter as unsupported so Spark re-applies them post-scan and pruning
@@ -117,6 +121,32 @@ class _FileSlice(InputPartition):
     # drops masked row positions
     dv_path: str | None = None
     rel: str | None = None
+
+
+# Spark requires at least one partition: an empty plan reads this no-op
+_NO_ROWS = _FileSlice("")
+
+
+def _slice(
+    root: str,
+    rel: str,
+    entry: dict,
+    version: int | None = None,
+    op: str | None = None,
+) -> _FileSlice:
+    """The one way a log entry becomes a read slice. ``version``/``op``
+    are commit tags for the change-feed lanes; snapshot slices carry
+    none, so a table column that happens to be named ``_commit_version``
+    still reads from the file."""
+    dv = entry.get("dv")
+    return _FileSlice(
+        os.path.join(root, rel),
+        version,
+        op,
+        entry.get("partition"),
+        dv_path=os.path.join(root, dv["path"]) if dv else None,
+        rel=rel,
+    )
 
 
 def _options_root(options) -> str:
@@ -227,6 +257,34 @@ def _read_file_batches(
     yield from out.to_batches()
 
 
+def _read_slice(
+    schema: StructType,
+    phys: dict | None,
+    part: _FileSlice,
+    change_type: str | None = None,
+) -> Iterator["pa.RecordBatch"]:
+    """Arrow batches of one slice under the reader schema: partition
+    values injected, commit tags injected when the slice carries them
+    and the schema names them, and ``change_type`` as the
+    ``_change_type`` value when given (the row stream's append lane)."""
+    if not part.path:
+        return iter(())
+    extras = _partition_extras(schema, part.partition, phys)
+    names = schema.fieldNames()
+    if part.commit_version is not None:
+        for col, val in (
+            (CDF_VERSION_COL, part.commit_version),
+            (CDF_OP_COL, part.commit_op),
+        ):
+            if col in names:
+                extras[col] = val
+    if change_type is not None and CHANGE_TYPE_COL in names:
+        extras[CHANGE_TYPE_COL] = change_type
+    return _read_file_batches(
+        part.path, schema, extras, phys, part.dv_path, part.rel
+    )
+
+
 class TxlogBatchReader(DataSourceReader):
     """Snapshot batch reader: stats-pruned, one partition per file."""
 
@@ -250,41 +308,18 @@ class TxlogBatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
-        parts = []
-        for rel in sorted(self._snap.files):
-            entry = self._snap.files[rel]
+        parts = [
+            _slice(self._snap.root, rel, entry)
+            for rel, entry in sorted(self._snap.files.items())
             if all(
                 txlog._file_may_match(entry, self._phys.get(c, c), op, v)
                 for c, op, v in self._prune
-            ):
-                dv = entry.get("dv")
-                parts.append(
-                    _FileSlice(
-                        os.path.join(self._snap.root, rel),
-                        partition=entry.get("partition"),
-                        dv_path=(
-                            os.path.join(self._snap.root, dv["path"])
-                            if dv
-                            else None
-                        ),
-                        rel=rel,
-                    )
-                )
-        # Spark requires at least one partition; a fully pruned (or empty)
-        # snapshot degrades to one no-op slice.
-        return parts or [_FileSlice("")]
+            )
+        ]
+        return parts or [_NO_ROWS]
 
     def read(self, partition: _FileSlice):
-        if not partition.path:
-            return iter(())
-        return _read_file_batches(
-            partition.path,
-            self._schema,
-            _partition_extras(self._schema, partition.partition, self._phys),
-            self._phys,
-            partition.dv_path,
-            partition.rel,
-        )
+        return _read_slice(self._schema, self._phys, partition)
 
 
 class TxlogChangeFeedReader(DataSourceReader):
@@ -311,19 +346,10 @@ class TxlogChangeFeedReader(DataSourceReader):
         parts = _change_slices(
             self._root, self._since, self._to, self._skip_changes
         )
-        return parts or [_FileSlice("")]
+        return parts or [_NO_ROWS]
 
     def read(self, partition: _FileSlice):
-        if not partition.path:
-            return iter(())
-        return _read_file_batches(
-            partition.path,
-            self._schema,
-            _cdf_extras(self._schema, partition, self._phys),
-            self._phys,
-            partition.dv_path,
-            partition.rel,
-        )
+        return _read_slice(self._schema, self._phys, partition)
 
 
 def _phys_of(root: str, version: int | None = None) -> dict:
@@ -342,29 +368,9 @@ def _change_slices(
     root: str, since: int, to: int | None, skip_changes: bool = False
 ) -> list[_FileSlice]:
     return [
-        _FileSlice(
-            u["path"],
-            u["version"],
-            u["op"],
-            u["partition"],
-            dv_path=(
-                os.path.join(root, u["dv"]["path"]) if u.get("dv") else None
-            ),
-            rel=u["rel"],
-        )
+        _slice(root, u["rel"], u, u["version"], u["op"])
         for u in txlog.list_changes(root, since, to, skip_changes)
     ]
-
-
-def _cdf_extras(
-    schema: StructType, part: _FileSlice, phys: dict | None = None
-) -> dict:
-    extras = _partition_extras(schema, part.partition, phys)
-    if CDF_VERSION_COL in schema.fieldNames():
-        extras[CDF_VERSION_COL] = part.commit_version
-    if CDF_OP_COL in schema.fieldNames():
-        extras[CDF_OP_COL] = part.commit_op
-    return extras
 
 
 def _partition_extras(
@@ -539,24 +545,15 @@ class TxlogStreamReader(DataSourceStreamReader):
                 RuntimeWarning,
                 stacklevel=2,
             )
-            return [_FileSlice("")]
+            return [_NO_ROWS]
         parts = self._slices(s, e)
-        return parts or [_FileSlice("")]
+        return parts or [_NO_ROWS]
 
     def _slices(self, s: int, e: int) -> list:
         return _change_slices(self._root, s, e, self._skip_changes)
 
     def read(self, partition: _FileSlice):
-        if not partition.path:
-            return iter(())
-        return _read_file_batches(
-            partition.path,
-            self._schema,
-            _cdf_extras(self._schema, partition, self._phys),
-            self._phys,
-            partition.dv_path,
-            partition.rel,
-        )
+        return _read_slice(self._schema, self._phys, partition)
 
     def commit(self, end: dict) -> None:
         # offsets live in Spark's checkpoint; the log is immutable —
@@ -568,11 +565,10 @@ class TxlogStreamReader(DataSourceStreamReader):
 class _DiffSlice(InputPartition):
     """One commit's ROW-LEVEL diff unit (rowLevel stream lane): the
     commit's touched files as-of the previous version (``before``) and
-    as-of this version (``after``), each a list of
-    ``(abs path, partition dict, dv abs path, rel)`` read refs. The
-    executor computes the multiset diff; per-commit granularity is the
-    parallel unit (pure-append commits bypass this and fan out
-    per-file)."""
+    as-of this version (``after``), each a list of untagged
+    :class:`_FileSlice`. The executor computes the multiset diff;
+    per-commit granularity is the parallel unit (pure-append commits
+    bypass this and fan out per-file)."""
 
     version: int
     op: str | None
@@ -587,7 +583,7 @@ def _diff_batches(
     key_cols: list[str] | None = None,
 ) -> Iterator["pa.RecordBatch"]:
     """Executor-side multiset diff of one commit — the Arrow-lane analog
-    of :func:`txlog.read_row_changes`'s per-commit EXCEPT ALL legs
+    of :func:`txlog.read_row_changes`'s signed-count aggregate
     (txlog.py): rows(after) minus rows(before) are inserts, the reverse
     are deletes, exact under duplicates via a counter keyed on a
     16-byte digest of the normalized row. Both sides read through the
@@ -600,9 +596,9 @@ def _diff_batches(
 
     - rows are NORMALIZED before hashing — ``-0.0`` maps to ``0.0``
       and every NaN to one canonical NaN, recursively — because
-      Spark's set-op equality treats them equal, so a rewrite that
+      Spark's grouping equality treats them equal, so a rewrite that
       flips a zero's sign bit must cancel here exactly as the batch
-      lane's EXCEPT ALL cancels it;
+      lane's signed count cancels it;
     - the counting pass stores ONLY the 16-byte digest per distinct
       row, and a second pass re-reads the commit to materialize row
       values solely for digests with a nonzero net count
@@ -643,15 +639,8 @@ def _diff_batches(
         return hashlib.blake2b(pk, digest_size=16).digest(), pk
 
     def _scan(files):
-        for path, partd, dvp, rel in files:
-            for b in _read_file_batches(
-                path,
-                base,
-                _partition_extras(base, partd, phys),
-                phys,
-                dvp,
-                rel,
-            ):
+        for f in files:
+            for b in _read_slice(base, phys, f):
                 yield from zip(*[c.to_pylist() for c in b.columns])
 
     counts: Counter = Counter()
@@ -772,89 +761,22 @@ class TxlogRowChangeStreamReader(TxlogStreamReader):
 
     def _slices(self, s: int, e: int) -> list:
         root = self._root
-        commits, checkpoints = txlog._list_log(root)
-        versions = [v for v in commits if s < v <= e]
-        if not versions:
-            return []
-        # before-state at s: the SAME reconstructibility contract as the
-        # batch feed (read_row_changes) — including s == 0, which is only
-        # an empty before-state when commit 1 is still retained; on an
-        # expired log it must raise the actionable error, not a KeyError
-        # deep in _refs (ADVICE r9)
-        ok = (
-            s >= commits[0]
-            or s in checkpoints
-            or (s == 0 and commits[0] == 1)
-        )
-        if not ok:
-            raise ValueError(
-                f"row change stream from v{s} at {root}: the "
-                f"before-state at v{s} was expired by log retention "
-                "(cleanup_log) and cannot be reconstructed — restart "
-                "the consumer from a full snapshot read; the earliest "
-                f"valid row-feed cursor is v{commits[0]}"
-            )
-        prev: dict = (
-            {} if s == 0 else dict(txlog.load_snapshot(root, s).files)
-        )
-        log_dir = txlog._log_path(root)
-
-        def _refs(entries: list[tuple[str, dict]]) -> list[tuple]:
-            return [
-                (
-                    os.path.join(root, rel),
-                    en.get("partition"),
-                    (
-                        os.path.join(root, en["dv"]["path"])
-                        if en.get("dv")
-                        else None
-                    ),
-                    rel,
-                )
-                for rel, en in entries
-            ]
-
+        _, _, versions = txlog._feed_range(root, s, None, e, None)
         out: list = []
-        for v in versions:
-            c = txlog._read_json(
-                os.path.join(log_dir, txlog._commit_name(v))
-            )
-            op = c.get("op")
-            adds = {a["path"]: a for a in c.get("add", [])}
-            removes = list(c.get("remove", []))
-            # an add over an existing path is an in-place DV entry swap:
-            # its previous incarnation is part of the before-state
-            before_paths = sorted(set(removes) | (set(adds) & set(prev)))
-            if not before_paths:
-                for rel in sorted(adds):
-                    a = adds[rel]
-                    dv = a.get("dv")
-                    out.append(
-                        _FileSlice(
-                            os.path.join(root, rel),
-                            v,
-                            op,
-                            a.get("partition"),
-                            dv_path=(
-                                os.path.join(root, dv["path"])
-                                if dv
-                                else None
-                            ),
-                            rel=rel,
-                        )
-                    )
-            else:
+        for v, op, adds, before in txlog._row_change_units(
+            root, s, versions
+        ):
+            if before:
                 out.append(
                     _DiffSlice(
                         v,
                         op,
-                        _refs([(p, prev[p]) for p in before_paths]),
-                        _refs(sorted(adds.items())),
+                        [_slice(root, r, before[r]) for r in before],
+                        [_slice(root, r, adds[r]) for r in sorted(adds)],
                     )
                 )
-            for r in removes:
-                prev.pop(r, None)
-            prev.update(adds)
+            else:
+                out += [_slice(root, r, adds[r], v, op) for r in sorted(adds)]
         return out
 
     def read(self, partition):
@@ -862,19 +784,9 @@ class TxlogRowChangeStreamReader(TxlogStreamReader):
             return _diff_batches(
                 partition, self._schema, self._phys, self._key_cols
             )
-        if not partition.path:
-            return iter(())
         # pure-append fast path: every added row is an insert
-        extras = _cdf_extras(self._schema, partition, self._phys)
-        if CHANGE_TYPE_COL in self._schema.fieldNames():
-            extras[CHANGE_TYPE_COL] = "insert"
-        return _read_file_batches(
-            partition.path,
-            self._schema,
-            extras,
-            self._phys,
-            partition.dv_path,
-            partition.rel,
+        return _read_slice(
+            self._schema, self._phys, partition, change_type="insert"
         )
 
 
@@ -1212,8 +1124,9 @@ class TxlogDataSource(DataSource):
                 _as_bool(self.options, "skipchangecommits"),
             )
         if _as_bool(self.options, "rowlevel"):
-            # the batch row-level feed is the JVM lane — EXCEPT ALL
-            # over DataFrames, which this Arrow reader can't express
+            # the batch row-level feed is the JVM lane — a signed-count
+            # aggregate over DataFrames, which this Arrow reader can't
+            # express
             raise ValueError(
                 "txlog: rowLevel=true is a readStream option; for a "
                 "batch row-level feed use txlog.read_row_changes()"

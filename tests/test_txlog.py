@@ -755,6 +755,7 @@ def test_vacuum_sweeps_only_old_staging_leftovers(spark, tmp_path):
 
     rep = txlog.vacuum(root, keep_versions=1)
     assert rep["skipped_young"] == 1
+    assert rep["deleted"] == len(dry["would_delete"]) == 1
     assert not os.path.exists(old) and os.path.isdir(young)
 
 
@@ -1684,6 +1685,19 @@ def test_datasource_timestamp_option_conflicts_raise(spark, tmp_path):
             .collect()
         )
     assert "cannot be combined" in str(ei.value)
+
+
+def test_datasource_snapshot_read_keeps_commit_named_columns(spark, tmp_path):
+    """Snapshot slices carry no commit tags: a table column named like a
+    change-feed tag (say, a copy of a CDC feed) reads its stored values."""
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, 7, "x")], "k int, _commit_version int, _commit_op string"
+    )
+    txlog.append(spark, df, root)
+    txlog.append(spark, df, root)
+    got = spark.read.format("txlog").load(root)
+    assert _rows(got) == [(1, 7, "x"), (1, 7, "x")]
 
 
 # --------------------------------- round 7: Hive-partitioned convert

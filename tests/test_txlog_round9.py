@@ -158,10 +158,35 @@ def test_row_feed_retention_guard_names_earliest_cursor(spark, tmp_path):
     bad = max(v for v in range(1, commits[0]) if v not in checkpoints)
     with pytest.raises(ValueError, match="earliest valid row-feed cursor"):
         txlog.read_row_changes(spark, root, bad)
-    # a retained CHECKPOINT below the commit horizon is a valid cursor
-    ck = [c for c in checkpoints if c >= bad]
-    if ck:
-        txlog.read_row_changes(spark, root, ck[0]).collect()
+    # a version retained only as a CHECKPOINT is a valid cursor, for the
+    # batch feed and the rowLevel stream alike: expire the horizon's own
+    # commit record so v{ck} survives as its checkpoint alone
+    ck = min(c for c in checkpoints if c >= bad)
+    os.unlink(os.path.join(txlog._log_path(root), txlog._commit_name(ck)))
+    assert ck not in txlog._list_log(root)[0]
+    batch = _rows(txlog.read_row_changes(spark, root, ck))
+    assert batch
+    seen: dict[int, list[tuple]] = {}
+
+    def record(df, bid):
+        seen[bid] = [tuple(r) for r in df.collect()]
+
+    q = (
+        spark.readStream.format("txlog")
+        .option("rowLevel", "true")
+        .option("sinceVersion", ck)
+        .load(root)
+        .writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="250 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination(120)
+    assert sorted(r for rows in seen.values() for r in rows) == batch
 
 
 # ------------------------------------------- CDC update pairing
@@ -367,6 +392,12 @@ def test_mask_fraction_rewrites_heavily_masked_file_only(spark, tmp_path):
     assert _rows(txlog.read_table(spark, root)) == [
         (i, "a") for i in range(60, 100)
     ] + [(i, "b") for i in range(1000, 1100)]
+    # alone, mask_fraction would select every file: it only modifies a
+    # bin-packed compaction, so it raises and commits nothing
+    with pytest.raises(ValueError, match="mask_fraction only modifies"):
+        txlog.optimize(spark, root, mask_fraction=0.5)
+    snap3 = txlog.load_snapshot(root)
+    assert (snap3.version, snap3.files) == (snap2.version, snap2.files)
 
 
 def test_mask_fraction_below_threshold_is_noop(spark, tmp_path):
