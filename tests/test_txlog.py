@@ -1402,6 +1402,35 @@ def test_merge_bootstrap_drops_marker_columns(spark, tmp_path):
     assert _rows(txlog.read_table(spark, root)) == [(1, "a2", 2), (3, "c", 2)]
 
 
+def test_merge_empty_batch_is_a_noop(spark, tmp_path):
+    """An empty batch merged into an existing table rewrites nothing and
+    commits nothing (its key range is empty, so no file overlaps it); a
+    first-ever empty merge still creates the table with its schema."""
+    root = str(tmp_path / "t")
+    schema = "k int, v string, ts int"
+    for lo in (0, 10):
+        txlog.append(
+            spark,
+            spark.createDataFrame(
+                [(i, "a", 1) for i in range(lo, lo + 10)], schema
+            ).coalesce(1),
+            root,
+        )
+    empty = spark.createDataFrame([], schema)
+    for order_col in ("ts", None):
+        res = txlog.merge(spark, empty, root, ["k"], order_col)
+        assert res["skipped"] and res["version"] == 2
+        assert res["files_rewritten"] == 0
+    assert len(txlog.history(root)) == 2
+    assert txlog.read_table(spark, root).count() == 20
+
+    fresh = str(tmp_path / "fresh")
+    res = txlog.merge(spark, empty, fresh, ["k"], "ts")
+    assert res["version"] == 1 and not res["skipped"]
+    got = txlog.read_table(spark, fresh)
+    assert got.columns == ["k", "v", "ts"] and got.count() == 0
+
+
 def test_convert_crash_mid_rename_is_resumable(spark, tmp_path):
     """Review r6 #4: a convert that dies after moving SOME part files is
     completed by simply re-running convert_to_txlog (manifest-driven

@@ -1,8 +1,10 @@
 """Commit-time guards for transaction-log tables (r8, ADVICE r7):
 
-- append() detects column-mapping drift between staging and commit (a
-  concurrent overwrite resets mapping history) and RE-STAGES instead of
-  committing files whose in-file names read back as NULL;
+- append() and merge() detect column-mapping drift between staging and
+  commit (a concurrent overwrite resets mapping history) and RE-STAGE
+  instead of committing files whose in-file names read back as NULL;
+- a first merge() or replace_where() is planned under its own conflict
+  rule, so a concurrent first commit it overlaps is replanned over;
 - commit_staged() (the DataSource-writer path — executor files cannot
   be re-staged) RAISES on the same drift;
 - restore() restores the target snapshot's RETIRED set (replace, not
@@ -26,6 +28,22 @@ def _mk(spark, rows, schema="k int, v string"):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _lose_first_claim_to(monkeypatch, concurrent):
+    """The next commit's first claim loses: ``concurrent()`` commits in
+    between."""
+    real_claim = txlog._try_claim
+    fired = {}
+
+    def claim_with_race(r, version, payload):
+        if not fired:
+            fired["x"] = True
+            concurrent()
+            return False
+        return real_claim(r, version, payload)
+
+    monkeypatch.setattr(txlog, "_try_claim", claim_with_race)
 
 
 def test_append_restages_on_concurrent_overwrite_mapping_reset(
@@ -70,6 +88,26 @@ def test_append_restages_on_concurrent_overwrite_mapping_reset(
         n for p in newest for n in pq.ParquetFile(p).schema_arrow.names
     }
     assert names == {"k", "value"}
+
+
+def test_merge_restages_on_concurrent_overwrite_mapping_reset(
+    spark, tmp_path, monkeypatch
+):
+    """The same drift under merge: a batch whose key range overlaps no
+    file rewrites nothing, so only the staging map shows the reset."""
+    root = str(tmp_path / "t")
+    # one data file per commit, whose stats keep it out of the merge
+    txlog.append(spark, _mk(spark, [(1, "a")]).coalesce(1), root)
+    txlog.rename_column(root, "v", "value")
+    _lose_first_claim_to(monkeypatch, lambda: txlog.overwrite(
+        spark, _mk(spark, [(9, "z")], "k int, value string").coalesce(1), root
+    ))
+    txlog.merge(
+        spark, _mk(spark, [(100, "new")], "k int, value string"), root,
+        ["k"], None,
+    )
+    monkeypatch.undo()
+    assert _rows(txlog.read_table(spark, root)) == [(9, "z"), (100, "new")]
 
 
 def test_overwrite_replans_on_concurrent_constraint(
@@ -214,3 +252,42 @@ def test_partition_by_validates_physical_names(spark, tmp_path):
             root,
             partition_by=["x"],
         )
+
+
+def test_first_merge_replans_against_concurrent_first_merge(
+    spark, tmp_path, monkeypatch
+):
+    """A first merge plans against the empty snapshot under merge's own
+    conflict rule: a concurrent first merge of the same key makes the
+    plan stale, and the replan keeps only the newer row for that key."""
+    root = str(tmp_path / "t")
+    schema = "k int, v string, ts int"
+    _lose_first_claim_to(monkeypatch, lambda: txlog.merge(
+        spark, _mk(spark, [(1, "old", 1)], schema), root, ["k"], "ts"
+    ))
+    res = txlog.merge(spark, _mk(spark, [(1, "new", 2)], schema), root, ["k"], "ts")
+    monkeypatch.undo()
+    # merged into the winner's files, not appended beside them
+    assert res["version"] == 2 and res["files_rewritten"] >= 1
+    assert _rows(txlog.read_table(spark, root)) == [(1, "new", 2)]
+    assert [h["op"] for h in txlog.history(root)] == ["merge", "merge"]
+
+
+def test_first_replace_where_replans_against_concurrent_first_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A first replace_where is planned against the empty snapshot with
+    its own predicate: a concurrent first commit inside the same scope
+    makes the plan stale, and the replan replaces those rows."""
+    root = str(tmp_path / "t")
+    where = [("k", "==", 1)]
+    _lose_first_claim_to(monkeypatch, lambda: txlog.replace_where(
+        spark, _mk(spark, [(1, "old")]), root, where
+    ))
+    res = txlog.replace_where(spark, _mk(spark, [(1, "new")]), root, where)
+    monkeypatch.undo()
+    assert res["version"] == 2 and res["rows_deleted"] == 1
+    assert _rows(txlog.read_table(spark, root)) == [(1, "new")]
+    assert [h["op"] for h in txlog.history(root)] == [
+        "replace_where", "replace_where"
+    ]
