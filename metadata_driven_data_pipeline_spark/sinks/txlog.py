@@ -127,7 +127,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.errors import SparkRuntimeException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
@@ -1256,16 +1256,29 @@ def _stage_adds(
     ``schema`` (``None``: a new generation, staged under its logical
     names) and return the files' add entries. ``partition_by`` (logical
     names, validated for ``op``) lays the files out ``key=value`` under
-    the physical names, each entry recording its directory's values."""
+    the physical names, each entry recording its directory's values.
+
+    A part whose footer counts 0 rows (Spark writes one when its first
+    write task gets no rows) is deleted, not added: with no min/max
+    stats it would overlap every later merge batch and be rewritten by
+    each. The commit still records the schema, so an empty first write
+    creates the table."""
     pdf = _to_physical_df(df, schema)
-    if not partition_by:
-        return _collect_adds(spark, root, _stage_files(spark, pdf, root))
-    pmap = _logical_to_physical(schema) if schema is not None else {}
-    _check_partition_by(partition_by, df.columns, op, pmap)
-    staged = _stage_files(spark, pdf, root, [pmap.get(c, c) for c in partition_by])
-    adds = _collect_adds(spark, root, staged)
-    for add, path in zip(adds, staged):
+    if partition_by:
+        pmap = _logical_to_physical(schema) if schema is not None else {}
+        _check_partition_by(partition_by, df.columns, op, pmap)
+        staged = _stage_files(
+            spark, pdf, root, [pmap.get(c, c) for c in partition_by]
+        )
+    else:
+        staged = _stage_files(spark, pdf, root)
+    adds = []
+    for add, path in zip(_collect_adds(spark, root, staged), staged):
+        if not add["rows"]:
+            os.remove(path)
+            continue
         _apply_partition_entry(add, _partition_values_of(root, path, pdf.schema))
+        adds.append(add)
     return adds
 
 
@@ -1382,6 +1395,7 @@ def _schema_compatible(
     schema: StructType,
     merge_schema: bool = False,
     retired=(),
+    op: str = "append",
 ) -> str:
     if existing_json is None:
         return schema.json()
@@ -1391,14 +1405,14 @@ def _schema_compatible(
     for f in schema.fields:
         if f.name in ex_names and existing[f.name].dataType != f.dataType:
             raise ValueError(
-                f"txlog append type mismatch on {f.name!r}: table has "
+                f"txlog {op} type mismatch on {f.name!r}: table has "
                 f"{existing[f.name].dataType.simpleString()}, batch has "
                 f"{f.dataType.simpleString()}"
             )
     if not merge_schema:
         if ex_names != batch_names:
             raise ValueError(
-                "txlog append schema mismatch: table has "
+                f"txlog {op} schema mismatch: table has "
                 f"{sorted(ex_names)}, batch has {sorted(batch_names)} "
                 "(pass merge_schema=True to evolve)"
             )
@@ -2836,10 +2850,10 @@ def merge(
     ``order_col=None`` (r9) is UNCONDITIONAL upsert — the public
     ``whenMatchedUpdateAll`` shape: a batch row always replaces its
     matched target row, no recency column needed. The batch must then
-    be KEY-UNIQUE (enforced with one bounded aggregate): with no
-    ordering column, "which duplicate wins" would be
-    partitioning-dependent — exactly the nondeterminism Delta rejects
-    with its multiple-matches error.
+    be KEY-UNIQUE (checked by the bounds pass): with no ordering
+    column, "which duplicate wins" would be partitioning-dependent —
+    exactly the nondeterminism Delta rejects with its multiple-matches
+    error.
 
     ``txn=(app_id, batch_id)`` (r9) gives the same per-app exactly-once
     contract as :func:`append`: a replayed batch_id at-or-below the
@@ -2878,11 +2892,20 @@ def merge(
     clauses already express per-column control, so evolution there is
     deliberately rejected rather than half-supported).
 
+    The bounds pass: merge takes the batch's key range, its row count
+    and, with ``order_col=None``, its largest per-key row count from one
+    ``observe()`` on a no-op write of the leading key (and the per-key
+    count) alone — one Spark job over the batch plan, no global-aggregate
+    stage, and no other batch column is computed. Outside
+    ``merge_schema`` and the conditional clauses, the batch's data
+    (non-``__``) columns must be the table's, names and types, as
+    :func:`append` requires.
+
     ``_validated_bounds=(lo, hi)`` (r11, internal): the caller
     certifies the batch is KEY-UNIQUE with non-NULL keys (it already
     ran :func:`_validate_net_batch`, or the batch is the output of a
     ``groupBy(*key_cols)``) and hands over the leading key's min/max —
-    merge then skips its own contract-check aggregate, saving one full
+    merge then skips its bounds pass, saving one full
     evaluation of the batch plan per call. Bounds may be WIDER than the
     batch's true range (both the file pruning and the concurrent-commit
     overlap check only get more conservative).
@@ -2973,6 +2996,12 @@ def merge(
                 )
             )
         else:
+            if not conditional:
+                # keep-latest lane: the batch's data columns must be the
+                # table's, as append checks (clauses pin their own)
+                _schema_compatible(
+                    cur.schema_json, batch_data, False, cur.retired, "merge"
+                )
             work_schema = cur.schema
 
         # footer stats are keyed by PHYSICAL names (what the files store)
@@ -3096,9 +3125,9 @@ def merge(
             report={"files_rewritten": len(candidates)},
         )
 
-    # r11 optimization (guide §1.2/§5): merge runs 2-3 actions over the
-    # batch (contract check + bounds, then the staged rewrite — and the
-    # whole body again on a version-race replan). For the CDC consumers
+    # r11 optimization (guide §1.2/§5): merge runs 2 actions over the
+    # batch (the observed bounds pass, then the staged rewrite — and the
+    # rewrite again on a version-race replan). For the CDC consumers
     # the batch plan is an expensive multi-window feed, so evaluate it
     # ONCE: persist for the duration of the merge, skip when the caller
     # already persisted it. The batch is O(changed bytes) by the merge
@@ -3119,22 +3148,27 @@ def merge(
             n = None
             lo, hi = _validated_bounds
         else:
-            # ONE aggregate serves the key-range bounds, the emptiness
-            # test and, with order_col None, the key-unique contract
-            # check (the group keys' min/max equal the row-level ones)
-            grouped = (
-                updates
-                if order_col is not None
-                else updates.groupBy(*key_cols).agg(
+            # ONE observed pass serves the key-range bounds, the
+            # emptiness test and, with order_col None, the key-unique
+            # contract check (the group keys' min/max equal the row-level
+            # ones). It writes the key (and group size) alone to the
+            # no-op sink: no other batch column is computed, and no
+            # global-aggregate stage runs
+            if order_col is not None:
+                grouped = updates.select(key)
+            else:
+                grouped = updates.groupBy(*key_cols).agg(
                     F.count(F.lit(1)).alias("__n")
-                )
-            )
-            row = grouped.agg(
+                ).select(key, "__n")
+            obs = Observation()
+            grouped.observe(
+                obs,
                 F.min(key).alias("lo"),
                 F.max(key).alias("hi"),
                 F.count(F.lit(1)).alias("n"),
                 *([] if order_col is not None else [F.max("__n").alias("mx")]),
-            ).collect()[0]
+            ).write.format("noop").mode("overwrite").save()
+            row = obs.get
             if order_col is None and row["mx"] is not None and row["mx"] > 1:
                 raise ValueError(
                     "merge(order_col=None) is unconditional upsert: the "

@@ -1431,6 +1431,75 @@ def test_merge_empty_batch_is_a_noop(spark, tmp_path):
     assert got.columns == ["k", "v", "ts"] and got.count() == 0
 
 
+def test_zero_row_parts_are_not_committed(spark, tmp_path):
+    """Spark writes a part file for an empty first write task. Such a part
+    has no key stats, so committing it made every later merge rewrite it."""
+    root = str(tmp_path / "t")
+    # two partitions, the row in the second: partition 0 writes an empty part
+    rows = spark.sparkContext.parallelize([(1, "a", 1)], 2)
+    one = spark.createDataFrame(rows, "k int, v string, ts int")
+    res = txlog.append(spark, one, root)
+    assert res["files_added"] == 1 and res["rows_written"] == 1
+    assert len(os.listdir(os.path.join(root, txlog.DATA_DIR))) == 1
+    far = spark.createDataFrame([(100, "b", 1)], "k int, v string, ts int")
+    res = txlog.merge(spark, far.coalesce(1), root, ["k"], "ts")
+    assert res["files_rewritten"] == 0
+    assert _rows(txlog.read_table(spark, root)) == [(1, "a", 1), (100, "b", 1)]
+
+    fresh = str(tmp_path / "fresh")
+    res = txlog.append(spark, spark.createDataFrame([], "k int, v string"), fresh)
+    assert res["version"] == 1 and res["files_added"] == 0
+    assert txlog.read_table(spark, fresh).columns == ["k", "v"]
+
+
+def test_merge_checks_the_batch_schema(spark, tmp_path):
+    """The keep-latest lane rejects a batch whose data columns are not the
+    table's, as append does; ``__`` marker columns stay merge-local."""
+    root = str(tmp_path / "t")
+    txlog.append(spark, _mk(spark, [(1, "a")]), root)
+    bad = {
+        "schema mismatch": [
+            ([(2, "b", "w")], "k int, v string, w string"),  # extra column
+            ([(2,)], "k int"),  # missing column
+        ],
+        "type mismatch": [([(2, 5)], "k int, v int")],
+    }
+    for error, batches in bad.items():
+        for rows, schema in batches:
+            batch = spark.createDataFrame(rows, schema)
+            with pytest.raises(ValueError, match=f"txlog merge {error}"):
+                txlog.merge(spark, batch, root, ["k"], None)
+    assert len(txlog.history(root)) == 1
+    marked = spark.createDataFrame(
+        [(1, "x", "D"), (2, "b", "U")], "k int, v string, __op string"
+    )
+    txlog.merge(spark, marked, root, ["k"], None, when_matched_delete="__op = 'D'")
+    assert _rows(txlog.read_table(spark, root)) == [(2, "b")]
+
+
+def test_keep_latest_merge_of_a_parquet_batch_job_count(spark, tmp_path):
+    """The bounds pass is one observed no-op write of the key: the merge
+    runs 4 Spark jobs (5 before, when a global aggregate took the bounds)
+    with the same result."""
+    root, src = str(tmp_path / "t"), str(tmp_path / "src")
+    schema = "k long, v string, ts long"
+    table = [(i, f"v{i}", i) for i in range(10)]
+    txlog.append(spark, spark.createDataFrame(table, schema).coalesce(1), root)
+    batch = [(3, "new", 100), (20, "ins", 100), (5, "old", 0)]
+    spark.createDataFrame(batch, schema).coalesce(1).write.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-job-count", "keep-latest merge")
+    try:
+        res = txlog.merge(spark, spark.read.parquet(src), root, ["k"], "ts")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("merge-job-count")) == 4
+    assert res["files_rewritten"] == 1 and res["rows_written"] == 11
+    want = dict((k, (k, v, ts)) for k, v, ts in table)
+    want.update({3: (3, "new", 100), 20: (20, "ins", 100)})
+    assert _rows(txlog.read_table(spark, root)) == sorted(want.values())
+
+
 def test_convert_crash_mid_rename_is_resumable(spark, tmp_path):
     """Review r6 #4: a convert that dies after moving SOME part files is
     completed by simply re-running convert_to_txlog (manifest-driven

@@ -229,20 +229,19 @@ def test_merge_schema_evolves_and_null_fills(spark, tmp_path):
     got2 = {r.k: r.tag for r in txlog.read_table(spark, root).collect()}
     assert got2[7] is None and got2[2] == "t2"
     # without merge_schema a widening batch does NOT evolve the table:
-    # the extra column is projected away (the documented table-schema
-    # projection that also drops __ markers) and the schema is unchanged
-    txlog.merge(
-        spark,
-        spark.createDataFrame(
-            [(9, 9.0, "x", 1)], "k int, v double, tag string, extra int"
-        ),
-        root,
-        ["k"],
-        order_col=None,
-    )
+    # it is rejected, as append rejects it, and the table is unchanged
+    with pytest.raises(ValueError, match="txlog merge schema mismatch"):
+        txlog.merge(
+            spark,
+            spark.createDataFrame(
+                [(9, 9.0, "x", 1)], "k int, v double, tag string, extra int"
+            ),
+            root,
+            ["k"],
+            order_col=None,
+        )
     t = txlog.read_table(spark, root)
-    assert "extra" not in t.columns
-    assert {r.k: r.tag for r in t.collect()}[9] == "x"
+    assert "extra" not in t.columns and 9 not in {r.k for r in t.collect()}
 
 
 # ------------------------------------------------- replicate round-10 fixes
