@@ -19,7 +19,7 @@ from __future__ import annotations
 import math
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_driven_data_pipeline_spark.sinks import swap
@@ -93,10 +93,12 @@ def merge_upsert(
 
     The 100 TB point: a mutable dimension or metadata table is petabytes
     across thousands of date/domain partitions, but a daily upsert
-    touches a handful — dynamic partition overwrite
-    (``spark.sql.sources.partitionOverwriteMode=dynamic``) replaces
-    exactly the partitions present in the written frame and leaves every
-    other partition's files untouched on disk. Plan: partition-pruned
+    touches a handful — dynamic partition overwrite replaces exactly
+    the partitions present in the written frame and leaves every other
+    partition's files untouched on disk. It is the
+    ``partitionOverwriteMode=dynamic`` option of the one final writer,
+    never the session setting, which a plain overwrite sink of another
+    dataflow on the same session would inherit. Plan: partition-pruned
     read of the affected slice (filter on ``partition_col`` reaches the
     scan), union with updates, one keep-latest window per key, write.
 
@@ -130,8 +132,9 @@ def merge_upsert(
 
     The affected-partition list crosses the driver (bounded by the
     number of touched partitions, not rows). Returns
-    ``{"partitions_rewritten": [...], "rows_written": n}`` — a NULL
-    partition appears as ``None`` in the list.
+    ``{"partitions_rewritten": [...], "rows_written": n}`` — ``n`` from
+    an ``observe()`` on the final write, and a NULL partition appears as
+    ``None`` in the list.
     """
     from metadata_driven_data_pipeline_spark.operators.consolidate import (
         dedup_keep_latest,
@@ -148,46 +151,32 @@ def merge_upsert(
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(table_path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    staging = None
+    if fs.exists(hpath):
+        touched = F.col(partition_col).isin(affected)
+        if has_null:
+            touched = touched | F.col(partition_col).isNull()
+        existing = spark.read.format(fmt).load(table_path).filter(touched)
+        merged = dedup_keep_latest(
+            existing.unionByName(updates.select(*existing.columns)),
+            key_cols,
+            order_col,
+        )
+        staging = f"{table_path}__upsert_{uuid.uuid4().hex[:8]}"
+        merged.write.format(fmt).mode("overwrite").save(staging)
+        landed = spark.read.format(fmt).load(staging)
+    else:
         # bootstrap: first batch creates the partitioned table outright
-        deduped = dedup_keep_latest(updates, key_cols, order_col)
-        (
-            deduped.write.format(fmt)
-            .mode("overwrite")
-            .partitionBy(partition_col)
-            .save(table_path)
-        )
-        return {
-            "partitions_rewritten": rewritten,
-            "rows_written": deduped.count(),
-        }
-    touched = F.col(partition_col).isin(affected)
-    if has_null:
-        touched = touched | F.col(partition_col).isNull()
-    existing = spark.read.format(fmt).load(table_path).filter(touched)
-    merged = dedup_keep_latest(
-        existing.unionByName(updates.select(*existing.columns)),
-        key_cols,
-        order_col,
+        landed = dedup_keep_latest(updates, key_cols, order_col)
+    obs = Observation()
+    (
+        landed.observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.format(fmt)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .save(table_path)
     )
-    staging = f"{table_path}__upsert_{uuid.uuid4().hex[:8]}"
-    merged.write.format(fmt).mode("overwrite").save(staging)
-    staged = spark.read.format(fmt).load(staging)
-    rows = staged.count()
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            staged.write.format(fmt)
-            .mode("overwrite")
-            .partitionBy(partition_col)
-            .save(table_path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
-        )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    return {"partitions_rewritten": rewritten, "rows_written": rows}
+    if staging is not None:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    return {"partitions_rewritten": rewritten, "rows_written": obs.get["rows"]}

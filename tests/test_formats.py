@@ -175,6 +175,39 @@ class TestMergeUpsert:
         }
         assert after == before
 
+    def test_upsert_leaves_the_session_overwrite_mode_alone(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Dynamic partition overwrite is an option of merge_upsert's own
+        writer: the session-wide mode, which a plain overwrite sink of a
+        concurrent dataflow on the same session would inherit, is never
+        set."""
+        from metadata_driven_data_pipeline_spark.sinks.maintenance import (
+            merge_upsert,
+        )
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        path = str(tmp_path / "modetbl")
+        self._mk_table(spark, path)
+        mode = spark.conf.get(key)
+        keys_set = []
+        real_set = spark.conf.set
+        monkeypatch.setattr(
+            spark.conf, "set",
+            lambda k, v: (keys_set.append(k), real_set(k, v))[1],
+        )
+        updates = spark.createDataFrame(
+            [(300, "2024-01-03", 2, "v2-300")],
+            "id long, day string, version int, payload string",
+        )
+        info = merge_upsert(spark, path, updates, ["id", "day"], "version", "day")
+        monkeypatch.undo()
+        assert key not in keys_set and spark.conf.get(key) == mode
+        assert info["rows_written"] == 10  # the rewritten 2024-01-03 slice
+        back = spark.read.parquet(path)
+        assert back.count() == 50  # the other partitions were kept
+        assert back.filter("id = 300").collect()[0].payload == "v2-300"
+
     def test_upsert_is_idempotent(self, spark, tmp_path):
         from metadata_driven_data_pipeline_spark.sinks.maintenance import (
             merge_upsert,

@@ -16,7 +16,10 @@ rows — the Delta DV-update shape). Pinned here:
   have to move directories);
 - NULL-predicate rows are untouched; unknown SET columns raise;
 - a concurrent commit that swaps a touched entry forces a replan
-  (entry identity).
+  (entry identity);
+- the Spark jobs each row-level DML lane runs (delete, update and
+  replace_where share one plan), and that a no-match plan leaves no
+  staged file or sidecar behind.
 """
 
 from __future__ import annotations
@@ -211,3 +214,72 @@ def test_update_replans_on_concurrent_entry_swap(spark, tmp_path):
     assert out.filter("id = 52").count() == 0
     got = sorted(r["v"] for r in out.filter("id >= 50 and id < 55").collect())
     assert got == [100.0, 102.0, 106.0, 108.0]
+
+
+_MATCH = [("id", ">=", 150), ("id", "<", 160)]
+_NO_MATCH = [("id", "==", 150.5)]  # inside file 2's [min, max], no row
+
+
+@pytest.mark.parametrize(
+    "op, dv, where, was, jobs",
+    [
+        ("delete", False, _MATCH, 1, 1),
+        ("delete", False, _NO_MATCH, 1, 1),
+        ("delete", True, _MATCH, 4, 4),
+        ("delete", True, _NO_MATCH, 3, 3),
+        ("update", False, _MATCH, 3, 1),
+        ("update", False, _NO_MATCH, 2, 1),
+        ("update", True, _MATCH, 5, 5),
+        ("update", True, _NO_MATCH, 4, 3),
+        ("replace_where", False, _MATCH, 3, 3),
+    ],
+)
+def test_row_dml_job_count_per_lane(spark, tmp_path, op, dv, where, was, jobs):
+    """Spark jobs per row-level DML lane on the 3-file, 300-row ``_mk``
+    table, counted by job group. ``was`` is the count under this
+    fixture before delete, update and replace_where shared one plan:
+    delete rewrite 1 (no match 1), delete DV 4 (3), update rewrite 3
+    (2), update DV 5 (4), replace_where 3. Update's rewrite lane now
+    counts its matches with an observe() on its one write instead of a
+    separate count(). A plan that matches no live row is a skipped no-op
+    that leaves neither a staged data file nor a deletion-vector sidecar
+    behind (the DV lanes used to leave a sidecar, and a rewrite-lane
+    delete committed an unchanged copy of the file)."""
+    root = str(tmp_path / "t")
+    _mk(spark, root)
+
+    def listing():
+        return {
+            d: sorted(os.listdir(os.path.join(root, d)))
+            if os.path.isdir(os.path.join(root, d))
+            else []
+            for d in ("data", "_dv")
+        }
+
+    before = listing()
+    call = {
+        "delete": lambda: txlog.delete(spark, root, where, deletion_vectors=dv),
+        "update": lambda: txlog.update(
+            spark, root, where, {"v": "v * 2"}, deletion_vectors=dv
+        ),
+        "replace_where": lambda: txlog.replace_where(
+            spark,
+            spark.range(150, 160).selectExpr("id", "cast(id * 3 as double) as v").coalesce(1),
+            root,
+            where,
+        ),
+    }[op]
+    sc = spark.sparkContext
+    group = f"row-dml-{op}-{dv}-{where is _MATCH}"
+    sc.setJobGroup(group, op)
+    try:
+        res = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs <= was
+    rows = res["rows_updated" if op == "update" else "rows_deleted"]
+    if where is _MATCH:
+        assert rows == 10 and not res["skipped"]
+    else:
+        assert rows == 0 and res["skipped"] and res["version"] == 3
+        assert listing() == before
