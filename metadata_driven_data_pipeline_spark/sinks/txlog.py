@@ -629,13 +629,23 @@ def _write_dv(
     mask chaining. Returns ``(rel, newly masked rows, masked entry)``
     for each of ``rel_paths`` whose mask grew; the entry is None when
     the mask covers every physical row (drop the file). When no mask
-    grew the sidecar is deleted again: nothing will reference it."""
+    grew the sidecar is deleted again: nothing will reference it. An
+    ``observe()`` count on the sidecar write that equals the old masks'
+    total means no mask grew, so the per-file count read is skipped.
+    (Observed above the ``distinct``: AQE drops an observation below a
+    shuffle whose output is empty.)"""
     all_pos = (
         new_pos if old_pos is None else new_pos.unionByName(old_pos)
     ).distinct()
     dv_rel = os.path.join(DV_DIR, f"dv-{uuid.uuid4().hex[:12]}")
     dv_abs = os.path.join(root, dv_rel)
-    all_pos.write.parquet(dv_abs)
+    obs = Observation()
+    all_pos.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(dv_abs)
+    if obs.get["n"] == sum(
+        (files[rel].get("dv") or {}).get("rows", 0) for rel in rel_paths
+    ):
+        shutil.rmtree(dv_abs)
+        return []
     counts = {
         r["rel"]: r["cnt"]
         for r in spark.read.schema(_DV_SCHEMA)
@@ -1145,46 +1155,49 @@ def _stage_files(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    data_dir = os.path.join(root, DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    out = []
-    if partition_by:
-        parts, _keys = _discover_convert_parts(staging)
-        if not parts:
-            # the walker prunes _/.-prefixed directories (Spark's own
-            # hidden-path convention) — if the staged write produced
-            # parquet anywhere we failed to discover it, raising beats
-            # silently committing an empty batch (review r7 #2)
-            import glob as _glob
+    try:
+        writer.parquet(staging)
+        data_dir = os.path.join(root, DATA_DIR)
+        os.makedirs(data_dir, exist_ok=True)
+        out = []
+        if partition_by:
+            parts, _keys = _discover_convert_parts(staging)
+            if not parts:
+                # the walker prunes _/.-prefixed directories (Spark's own
+                # hidden-path convention) — if the staged write produced
+                # parquet anywhere we failed to discover it, raising beats
+                # silently committing an empty batch
+                import glob as _glob
 
-            stray = _glob.glob(
-                os.path.join(staging, "**", "*.parquet"), recursive=True
-            )
-            if stray:
-                raise ValueError(
-                    "partitioned staging produced part files the layout "
-                    f"walker cannot adopt (e.g. {os.path.relpath(stray[0], staging)!r}) "
-                    "— partition column names must not start with '_' or '.'"
+                stray = _glob.glob(
+                    os.path.join(staging, "**", "*.parquet"), recursive=True
                 )
-        for i, p in enumerate(parts):
-            dst_dir = os.path.join(data_dir, *p["dirs"])
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, f"{tag}-{i:05d}.parquet")
-            os.rename(os.path.join(staging, p["src"]), dst)
-            out.append(dst)
-    else:
-        parts = sorted(
-            n
-            for n in os.listdir(staging)
-            if n.endswith(".parquet") and not n.startswith(("_", "."))
-        )
-        for i, name in enumerate(parts):
-            dst = os.path.join(data_dir, f"{tag}-{i:05d}.parquet")
-            os.rename(os.path.join(staging, name), dst)
-            out.append(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    return out
+                if stray:
+                    raise ValueError(
+                        "partitioned staging produced part files the layout "
+                        f"walker cannot adopt (e.g. {os.path.relpath(stray[0], staging)!r}) "
+                        "— partition column names must not start with '_' or '.'"
+                    )
+            for i, p in enumerate(parts):
+                dst_dir = os.path.join(data_dir, *p["dirs"])
+                os.makedirs(dst_dir, exist_ok=True)
+                dst = os.path.join(dst_dir, f"{tag}-{i:05d}.parquet")
+                os.rename(os.path.join(staging, p["src"]), dst)
+                out.append(dst)
+        else:
+            parts = sorted(
+                n
+                for n in os.listdir(staging)
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            )
+            for i, name in enumerate(parts):
+                dst = os.path.join(data_dir, f"{tag}-{i:05d}.parquet")
+                os.rename(os.path.join(staging, name), dst)
+                out.append(dst)
+        return out
+    finally:
+        # a write a row guard aborts leaves nothing under the root
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _check_partition_by(
@@ -1250,27 +1263,35 @@ def _stage_adds(
     schema: StructType | None,
     partition_by: list[str] | None = None,
     op: str | None = None,
+    rules: list = (),
 ) -> list[dict]:
     """Stage ``df`` under the physical column names of the table
     ``schema`` (``None``: a new generation, staged under its logical
     names) and return the files' add entries. ``partition_by`` (logical
     names, validated for ``op``) lays the files out ``key=value`` under
     the physical names, each entry recording its directory's values.
+    The write checks every row against ``rules`` (:func:`_guard` on the
+    first column, which is always written); a failed rule raises its
+    message as a ValueError and stages nothing.
 
     A part whose footer counts 0 rows (Spark writes one when its first
     write task gets no rows) is deleted, not added: with no min/max
     stats it would overlap every later merge batch and be rewritten by
     each. The commit still records the schema, so an empty first write
     creates the table."""
+    if rules and df.columns:
+        first = df.columns[0]
+        df = df.select(_guard(F.col(first), rules).alias(first), *df.columns[1:])
     pdf = _to_physical_df(df, schema)
-    if partition_by:
-        pmap = _logical_to_physical(schema) if schema is not None else {}
-        _check_partition_by(partition_by, df.columns, op, pmap)
-        staged = _stage_files(
-            spark, pdf, root, [pmap.get(c, c) for c in partition_by]
-        )
-    else:
-        staged = _stage_files(spark, pdf, root)
+    with _rule_errors(rules):
+        if partition_by:
+            pmap = _logical_to_physical(schema) if schema is not None else {}
+            _check_partition_by(partition_by, df.columns, op, pmap)
+            staged = _stage_files(
+                spark, pdf, root, [pmap.get(c, c) for c in partition_by]
+            )
+        else:
+            staged = _stage_files(spark, pdf, root)
     adds = []
     for add, path in zip(_collect_adds(spark, root, staged), staged):
         if not add["rows"]:
@@ -1442,34 +1463,72 @@ def _schema_compatible(
     return widened.json()
 
 
-def _check_constraints(df: DataFrame, constraints: dict) -> DataFrame:
-    """Enforce the table's CHECK constraints IN the write plan (r10):
-    the first output column is wrapped in ``coalesce(assert_true(...),
-    ..., col)`` so every row evaluates every constraint while the batch
-    is being written — a violating row aborts the write job with an
-    error naming the constraint, and a clean batch pays zero extra
-    passes (Delta enforces CHECK constraints the same in-plan way). A
+# ------------------------------------------------------------- row rules
+#
+# A row rule is an ``(ok Column, message)`` pair: a row satisfies it
+# where ``ok`` is TRUE. CHECK constraints (:func:`_check_rules`),
+# replace_where's scope and the CDC key contract (:func:`_key_rules`)
+# are all checked the same way: IN the job that already reads the rows
+# (:func:`_guard`, translated by :func:`_rule_errors`), or, where no job
+# runs anyway, by one probe job (:func:`_first_violation`).
+
+
+def _check_rules(constraints: dict, at: str = "") -> list:
+    """The table's CHECK constraints as row rules, in name order. A
     NULL-valued condition PASSES (SQL CHECK semantics: only FALSE
-    violates), hence the ``coalesce(cond, true)``. The wrapped column
-    is always materialized (every data column is written to parquet),
-    so the asserts can't be pruned away."""
-    if not constraints or not df.columns:
-        return df
-    guards = [
-        F.assert_true(
+    violates), hence the ``coalesce(cond, true)``."""
+    return [
+        (
             F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)),
-            F.lit(
-                f"txlog CHECK constraint {name!r} violated: {expr}"
-            ),
+            f"txlog CHECK constraint {name!r} violated{at}: {expr}",
         )
         for name, expr in sorted(constraints.items())
     ]
-    first = df.columns[0]
-    ftype = df.schema[first].dataType
-    wrapped = F.coalesce(
-        *[g.cast(ftype) for g in guards], F.col(first)
-    ).alias(first)
-    return df.select(wrapped, *df.columns[1:])
+
+
+def _guard(value: Column, rules: list) -> Column:
+    """``value``, wrapped in one ``assert_true`` per rule: evaluating it
+    on a row that fails a rule aborts the job with that rule's message,
+    and a clean batch pays zero extra passes (Delta enforces CHECK
+    constraints the same in-plan way). ``assert_true`` returns NULL or
+    raises, so the coalesce evaluates every guard, then yields
+    ``value``. The caller must wrap a column its job always
+    materializes, so the asserts can't be pruned away."""
+    return F.coalesce(*[F.assert_true(ok, F.lit(m)) for ok, m in rules], value)
+
+
+def _first_violation(df: DataFrame, rules: list) -> str | None:
+    """The message of the first rule (in list order) some row of ``df``
+    fails, or None: one Spark job that reads only the columns the rules
+    reference, an ``observe()`` on a no-op write of each row's first
+    failed rule index. For rows that no other job reads: existing rows
+    under a new constraint, and files already written by tasks."""
+    first = F.coalesce(
+        *[F.when(ok, None).otherwise(i) for i, (ok, _) in enumerate(rules)]
+    )
+    obs = Observation()
+    df.select(first.alias("__rule")).observe(
+        obs, F.min("__rule").alias("i")
+    ).write.format("noop").mode("overwrite").save()
+    i = obs.get["i"]
+    return None if i is None else rules[i][1]
+
+
+@contextmanager
+def _rule_errors(rules: list):
+    """Raise a :func:`_guard` failure as ``ValueError(message)``: a
+    ``SparkRuntimeException`` of condition ``USER_RAISED_EXCEPTION``
+    whose message is one of ``rules``' own. Every other error, another
+    rule set's included, propagates unchanged."""
+    try:
+        yield
+    except SparkRuntimeException as e:
+        msg = (e.getMessageParameters() or {}).get("errorMessage")
+        if e.getCondition() == "USER_RAISED_EXCEPTION" and msg in {
+            m for _, m in rules
+        }:
+            raise ValueError(msg) from e
+        raise
 
 
 def _apply_generated(df: DataFrame, snap: Snapshot) -> DataFrame:
@@ -1616,11 +1675,12 @@ def add_constraint(
 ) -> dict:
     """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` (r10, Delta
     parity): after verifying EVERY existing row satisfies ``expr``
-    (one stats-prunable scan — a table that already violates can never
-    gain the constraint), a metadata-only commit records it. From that
-    commit on, every write path that materializes rows (append, merge,
-    update, replace_where, overwrite) enforces it in-plan via
-    :func:`_check_constraints`; ``convert_to_txlog`` adoption is
+    (one column-pruned probe job, :func:`_first_violation` — a table
+    that already violates can never gain the constraint), a
+    metadata-only commit records it. From that commit on, every write
+    path that materializes rows (append, merge, update, replace_where,
+    overwrite) enforces it in-plan via :func:`_guard` and raises a
+    ValueError naming it; ``convert_to_txlog`` adoption is
     zero-copy and therefore NOT checked — add constraints after
     converting. Constraints survive checkpointing, ``overwrite`` (they
     are table properties, not data), and log retention."""
@@ -1633,13 +1693,10 @@ def add_constraint(
             f"expression {snap.constraints[name]!r} — drop it first"
         )
     def _validate(at_version: int | None) -> None:
-        violating = (
-            read_table(spark, root, version=at_version)
-            .filter(~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)))
-            .limit(1)
-            .count()
-        )
-        if violating:
+        if _first_violation(
+            read_table(spark, root, version=at_version),
+            _check_rules({name: expr}),
+        ):
             raise ValueError(
                 f"cannot add CHECK constraint {name!r} ({expr}): existing "
                 f"rows at {root} violate it"
@@ -1725,11 +1782,12 @@ def append(
         # drift the conflict rule replans on (ADVICE r7 #1)
         adds = _stage_adds(
             spark,
-            _check_constraints(batch, cur.constraints),
+            batch,
             root,
             cur.schema,
             partition_by,
             "append",
+            _check_rules(cur.constraints),
         )
         return _Plan(
             cur,
@@ -1788,11 +1846,12 @@ def overwrite(
                 )
         adds = _stage_adds(
             spark,
-            _check_constraints(batch, cur.constraints),
+            batch,
             root,
             None,
             partition_by,
             "overwrite",
+            _check_rules(cur.constraints),
         )
         return _Plan(
             cur,
@@ -1829,10 +1888,12 @@ def replace_where(
 
     Like Delta's ``replaceWhere``, the new rows must ALL satisfy the
     predicate — a scoped backfill that smuggles rows outside its scope
-    raises BEFORE staging anything. ``partition_by`` lays the new files
-    out Hive-partitioned (same lane as :func:`append`). A first-ever
-    call creates the table with the batch schema through this same plan
-    (against the empty snapshot there is nothing to delete).
+    raises before anything commits: the batch's staging write checks
+    the scope in-plan, next to the CHECK constraints. ``partition_by``
+    lays the new files out Hive-partitioned (same lane as
+    :func:`append`). A first-ever call creates the table with the batch
+    schema through this same plan (against the empty snapshot there is
+    nothing to delete).
     Concurrency: "Optimistic concurrency" in the module docstring (its
     predicate is ``where``, the first commit's included)."""
     _check_where(where, "replace_where", "use overwrite")
@@ -1840,17 +1901,14 @@ def replace_where(
     # scoped on a generated (derived-partition) column may omit it
     snap0 = load_snapshot(root)
     df = _apply_generated(df, snap0)
-    cond = _where_column(where)
-    # scope check: one aggregate over the batch, no driver-side rows.
-    # NULL predicate rows do NOT satisfy the scope (tri-valued logic) —
-    # they'd survive a re-run's delete half and duplicate.
-    n_out = df.filter(cond.isNull() | ~cond).limit(1).count()
-    if n_out:
-        raise ValueError(
-            "replace_where: the batch contains rows that do NOT satisfy "
-            f"the predicate {where!r} — a scoped overwrite must only "
-            "insert rows inside its scope"
-        )
+    # a NULL predicate row does NOT satisfy the scope (tri-valued logic):
+    # it would survive a re-run's delete half and duplicate
+    scope = (
+        _where_column(where),
+        "replace_where: the batch contains rows that do NOT satisfy "
+        f"the predicate {where!r} — a scoped overwrite must only "
+        "insert rows inside its scope",
+    )
 
     def plan(cur: Snapshot) -> _Plan:
         # a replan re-derives identity from the pristine batch
@@ -1858,11 +1916,12 @@ def replace_where(
         _schema_compatible(cur.schema_json, batch.schema, False, cur.retired)
         adds = _stage_adds(
             spark,
-            _check_constraints(batch, cur.constraints),
+            batch,
             root,
             cur.schema,
             partition_by,
             "replace_where",
+            [scope, *_check_rules(cur.constraints)],
         )
         p = _row_dml(spark, root, cur, where)
         p.adds = adds + p.adds
@@ -1913,11 +1972,13 @@ def commit_staged(
     ``partition_by=``.
 
     CHECK constraints (r11): the executor tasks stage raw Arrow batches
-    where the in-plan assert machinery can't run, so a table WITH
-    constraints is validated HERE — one scan over the staged files
-    (basePath-discovered, so partitioned stagings resolve their
-    directory columns) before anything is committed; a violation raises
-    and the caller's abort/vacuum path reclaims the staged files.
+    where the in-plan guard can't run, so a table WITH constraints is
+    validated HERE — one probe job over the staged files
+    (:func:`_first_violation`; basePath-discovered, so partitioned
+    stagings resolve their directory columns) before anything is
+    committed; a violation raises a ValueError naming the first failed
+    constraint and the caller's abort/vacuum path reclaims the staged
+    files.
     Called WITHOUT a session (``spark=None`` — the Python DataSource
     commit hook runs in a session-less worker), a constrained table
     REFUSES the commit instead of silently landing unvalidated rows:
@@ -2004,23 +2065,12 @@ def commit_staged(
                     for pf, f in zip(phys_schema.fields, schema.fields)
                 ]
             )
-            viol = [
-                ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
-                for e in cur.constraints.values()
-            ]
-            any_bad = logical.filter(
-                viol[0] if len(viol) == 1 else F.greatest(*viol)
+            bad = _first_violation(
+                logical,
+                _check_rules(cur.constraints, f" by staged write at {root}"),
             )
-            if any_bad.limit(1).count():
-                for name in sorted(cur.constraints):
-                    e = cur.constraints[name]
-                    if logical.filter(
-                        ~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))
-                    ).limit(1).count():
-                        raise ValueError(
-                            f"txlog CHECK constraint {name!r} violated by "
-                            f"staged write at {root}: {e}"
-                        )
+            if bad is not None:
+                raise ValueError(bad)
         adds = _collect_adds(spark, root, staged)
         for add in adds:
             _apply_partition_entry(
@@ -2874,8 +2924,8 @@ def merge(
     :func:`append` requires.
 
     ``_validated_bounds=(lo, hi)`` (r11, internal): the caller
-    certifies the batch is KEY-UNIQUE with non-NULL keys (it already
-    ran :func:`_validate_net_batch`, or the batch is the output of a
+    certifies the batch is KEY-UNIQUE with non-NULL keys (its rows
+    carry the :func:`_key_rules` guard, or the batch is the output of a
     ``groupBy(*key_cols)``) and hands over the leading key's min/max —
     merge then skips its bounds pass, saving one full
     evaluation of the batch plan per call. Bounds may be WIDER than the
@@ -3073,9 +3123,10 @@ def merge(
                 merged = merged.filter(~F.col("__del")).drop("__del")
         adds = _stage_adds(
             spark,
-            _check_constraints(merged, cur.constraints),
+            merged,
             root,
             work_schema,
+            rules=_check_rules(cur.constraints),
         )
         return _Plan(
             cur,
@@ -3218,10 +3269,9 @@ def _row_dml(
         ]
 
         def stage(rows: DataFrame) -> list[dict]:
-            checks = cur.constraints if set else {}
+            checks = _check_rules(cur.constraints) if set else []
             return _stage_adds(
-                spark, _check_constraints(rows.select(*proj), checks),
-                root, cur.schema,
+                spark, rows.select(*proj), root, cur.schema, rules=checks
             )
 
         if deletion_vectors:
@@ -4518,24 +4568,19 @@ def iter_row_changes(
 def _net_changes(
     feed: DataFrame,
     key_cols: list[str],
-    guard_ctx: str | None = None,
+    rules: list,
     per_version: bool = False,
 ) -> DataFrame:
     """Per-key NET change of one CDC chunk: the row at the highest
     ``(_commit_version, change precedence)`` — postimage/insert outrank
     preimage/delete within one commit, so an UPDATE nets to its new row
-    and a same-commit delete+insert nets to the insert. Uses RANK (not
-    row_number) so a contract-violating duplicate-keyed source leaves
-    a tie at the winning position for :func:`_validate_net_batch` to
-    detect, instead of silently collapsing to an arbitrary row
-    (ADVICE r9). Returns the data columns plus ``__tomb`` (the key's
-    final change is a delete).
-
-    ``guard_ctx`` (r11): embed the NULL-key / duplicate-key contract
-    checks IN-PLAN on ``__tomb`` (see :func:`_contract_guard`) so the
-    caller can skip the separate validation aggregate when emptiness
-    and bounds are already known from commit metadata
-    (:func:`_chunk_facts`).
+    and a same-commit delete+insert nets to the insert. Returns the data
+    columns plus ``__tomb`` (the key's final change is a delete), which
+    carries the :func:`_key_rules` guard: every consumer evaluates it
+    for every row, in the first job that reads the batch. RANK (not
+    row_number) leaves a duplicate-keyed source's tie at the winning
+    position for that guard to see, instead of silently collapsing it
+    to an arbitrary row.
 
     ``per_version`` (the SCD2 history shape): net each key per COMMIT
     instead of per chunk, keeping the commit as ``__v`` — the contract
@@ -4557,11 +4602,7 @@ def _net_changes(
         if per_version
         else []
     )
-    tomb = F.col("__prec") == 0
-    if guard_ctx is not None:
-        tomb = _contract_guard(
-            tomb, part, [*key_cols, "__v"] if per_version else key_cols, guard_ctx
-        )
+    tomb = _guard(F.col("__prec") == 0, rules)
     return (
         feed.withColumn("__prec", prec)
         .withColumn("__rk", F.rank().over(w))
@@ -4570,61 +4611,32 @@ def _net_changes(
     )
 
 
-def _contract_guard(
-    value: Column,
-    part_cols: list[str],
-    msg_cols: list[str],
-    ctx: str,
-) -> Column:
-    """Wrap ``value`` so that evaluating it on a row with a NULL key, or
-    on a key with more than one row surviving the winning rank, RAISES
-    with the exact :func:`_validate_net_batch` message — in-plan, during
-    the first job that evaluates the batch (the MERGE's staging write),
-    i.e. still strictly before any commit touches the target (a failed
-    staging write only leaks unreferenced files that vacuum sweeps).
-
-    This is the r11 job-fusion lever (guide §1.2): with bounds and
-    emptiness derived from commit metadata (:func:`_chunk_facts`), the
-    contract check no longer needs its own aggregate job per chunk —
-    it rides the write. The wrapped column must be one the merge plan
-    ALWAYS evaluates for every batch row: ``__tomb``, which feeds
-    merge's ``__del`` filter (and SCD2's insert filter). The count
-    window shares the rank window's partitioning, so no extra exchange
-    enters the plan.
-    Raised errors surface as Spark runtime exceptions; consumers
-    translate them back to the contractual ValueError with
-    :func:`_cdc_contract_errors`."""
+def _key_rules(key_cols: list[str], ctx: str, per_version: bool = False) -> list:
+    """The keyed-replication contract as row rules over the winning-rank
+    rows of :func:`_net_changes`: keys are non-NULL, and at most one row
+    per key survives (per (key, commit) with ``per_version``). Both
+    failures raise, never resolve silently: keyed replication cannot
+    carry positional identity, so an arbitrary pick would diverge the
+    replica. The count window shares the rank window's partitioning, so
+    no extra exchange enters the plan."""
     from pyspark.sql.window import Window
 
-    nullc = functools.reduce(
-        lambda a, b: a | b, [F.col(k).isNull() for k in part_cols]
-    )
-    n_at_rank1 = F.count(F.lit(1)).over(Window.partitionBy(*part_cols))
-    null_msg, dup_msg = _key_contract_msgs(msg_cols, ctx)
-    # assert_true returns NULL (or raises): coalesce evaluates both
-    # guards, then yields the real value
-    return F.coalesce(
-        F.assert_true(~nullc, F.lit(null_msg)).cast("boolean"),
-        F.assert_true(n_at_rank1 <= 1, F.lit(dup_msg)).cast("boolean"),
-        value,
-    )
-
-
-@contextmanager
-def _cdc_contract_errors():
-    """Translate an in-plan :func:`_contract_guard` failure (a Spark
-    runtime exception raised by ``assert_true`` during the merge's
-    staging write) back into the ValueError the keyed-replication
-    contract promises, preserving the message text the tests and
-    callers match on. Only that error class is translated: any other
-    exception propagates untouched, whatever its message says."""
-    try:
-        yield
-    except SparkRuntimeException as e:
-        m = re.search(r"replicate: (?:duplicate|NULL) key[^\n]*", str(e))
-        if e.getCondition() == "USER_RAISED_EXCEPTION" and m is not None:
-            raise ValueError(m.group(0)) from e
-        raise
+    part = [*key_cols, "_commit_version"] if per_version else key_cols
+    named = [*key_cols, "__v"] if per_version else key_cols
+    return [
+        (
+            functools.reduce(operator.and_, [F.col(k).isNotNull() for k in part]),
+            f"replicate: NULL key in {named} at {ctx} — keyed "
+            "replication requires non-NULL keys",
+        ),
+        (
+            F.count(F.lit(1)).over(Window.partitionBy(*part)) <= 1,
+            f"replicate: duplicate key in {named} at {ctx} — the "
+            "source is not key-unique (multiple rows tie at the "
+            "winning (_commit_version, precedence) rank); keyed "
+            "replication cannot represent a duplicate-keyed multiset",
+        ),
+    ]
 
 
 _CHUNK_FACT_TYPES = {
@@ -4633,9 +4645,8 @@ _CHUNK_FACT_TYPES = {
 
 
 def _chunk_facts(feed: DataFrame, key_cols: list[str]):
-    """Per-chunk (empty, lo, hi) derived from COMMIT METADATA alone —
-    the driver-side replacement for :func:`_validate_net_batch`'s
-    aggregate job (r11): :func:`read_row_changes` folds the touched
+    """Per-chunk (empty, lo, hi) derived from COMMIT METADATA alone, so
+    no job computes them (r11): :func:`read_row_changes` folds the touched
     entries' footer stats into per-column bounds and decides emptiness
     where multiset arithmetic makes it decidable (any pure-append rows,
     or any diff commit whose live row count changed ⇒ non-empty; no
@@ -4644,7 +4655,7 @@ def _chunk_facts(feed: DataFrame, key_cols: list[str]):
     emptiness (equal-count diffs can cancel, e.g. OPTIMIZE), unknown
     key bounds, or a key type whose JSON stat form is not directly
     comparable to the typed value (dates/decimals) — and the caller
-    falls back to the validation aggregate. Bounds are conservative-
+    observes them on the batch's cache fill. Bounds are conservative-
     WIDE over the chunk's touched rows, exactly what merge's
     ``_validated_bounds`` and the SCD2 closure scan allow. NULL keys
     are NOT pre-checked here: the in-plan guard raises exactly when a
@@ -4669,65 +4680,6 @@ def _chunk_facts(feed: DataFrame, key_cols: list[str]):
     except Exception:
         return None
     return (False, lo, hi)
-
-
-def _validate_net_batch(
-    batch: DataFrame, key_cols: list[str], ctx: str
-) -> tuple[bool, object, object]:
-    """Fail loudly on the two keyed-table contract violations a CDC
-    source can commit: NULL keys, and duplicate keys (>1 row surviving
-    at the winning rank — e.g. one commit inserting the same key twice).
-    Both are raised, never silently resolved: keyed replication cannot
-    carry positional identity, so an arbitrary pick would diverge the
-    replica (ADVICE r9, medium).
-
-    Returns ``(empty, lo, hi)`` — empty=True for a zero-row batch, and
-    the min/max of the LEADING key over the batch otherwise. All four
-    per-chunk facts (empty, NULL key, duplicate key, leading-key
-    bounds) ride ONE aggregate job (one shuffle on the keys, one
-    action): the bounds let the consumer hand :func:`merge` its
-    ``_validated_bounds`` so the downstream MERGE skips re-running the
-    same aggregate (r11, guide §1.2 — the chunk loops paid two
-    identical jobs per chunk)."""
-    nullc = functools.reduce(
-        lambda a, b: a | b, [F.col(k).isNull() for k in key_cols]
-    )
-    row = (
-        batch.groupBy(*key_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(nullc.cast("int")).alias("nl"),
-        )
-        .agg(
-            F.max("n").alias("mx"),
-            F.max("nl").alias("anynull"),
-            F.min(key_cols[0]).alias("lo"),
-            F.max(key_cols[0]).alias("hi"),
-        )
-        .first()
-    )
-    if row["mx"] is None:
-        return True, None, None  # empty chunk
-    null_msg, dup_msg = _key_contract_msgs(key_cols, ctx)
-    if row["anynull"]:
-        raise ValueError(null_msg)
-    if row["mx"] > 1:
-        raise ValueError(dup_msg)
-    return False, row["lo"], row["hi"]
-
-
-def _key_contract_msgs(key_cols: list[str], ctx: str) -> tuple[str, str]:
-    """The keyed-replication contract's (NULL key, duplicate key) error
-    texts — raised by :func:`_validate_net_batch`, embedded in-plan by
-    :func:`_contract_guard`, and matched by :func:`_cdc_contract_errors`."""
-    return (
-        f"replicate: NULL key in {key_cols} at {ctx} — keyed "
-        "replication requires non-NULL keys",
-        f"replicate: duplicate key in {key_cols} at {ctx} — the "
-        "source is not key-unique (multiple rows tie at the "
-        "winning (_commit_version, precedence) rank); keyed "
-        "replication cannot represent a duplicate-keyed multiset",
-    )
 
 
 def create_table(
@@ -5001,28 +4953,33 @@ def _keyed_net_batch(
 ):
     """Yield ``(batch, empty, lo, hi)`` for one CDC feed: its
     :func:`_net_changes` batch, whether it is empty, and the leading
-    key's bounds (for merge's ``_validated_bounds``). Where commit
-    metadata decides emptiness and bounds (:func:`_chunk_facts`, r11),
-    the key contract checks ride IN-PLAN on the consumer's write, no
-    validation job runs, and the batch is cached only if ``cache``.
-    Other feeds (stream epochs, snapshot diffs) are cached and checked
-    by :func:`_validate_net_batch`. Contract-error translation wraps
-    the whole block (r12, ADVICE r11): a guard firing on any action
-    (cache fill, probe, merge) surfaces as the contractual ValueError."""
+    key's bounds (for merge's ``_validated_bounds``). The key contract
+    (:func:`_key_rules`) rides the first job that reads the batch, and
+    its failure surfaces as the contractual ValueError on any action in
+    the block (cache fill, probe, merge). Where commit metadata decides
+    emptiness and bounds (:func:`_chunk_facts`, r11) the batch is
+    cached only if ``cache``. Other feeds (stream epochs, snapshot
+    diffs) are cached, and one ``observe()`` on the no-op write that
+    fills the cache yields the facts."""
     facts = _chunk_facts(feed, key_cols)
+    rules = _key_rules(key_cols, ctx, per_version)
     cache = cache or facts is None
-    with _aqe_cached_batches(spark), _cdc_contract_errors():
-        batch = _net_changes(
-            feed,
-            key_cols,
-            guard_ctx=ctx if facts is not None else None,
-            per_version=per_version,
-        )
+    with _aqe_cached_batches(spark), _rule_errors(rules):
+        batch = _net_changes(feed, key_cols, rules, per_version)
         if cache:
             batch = batch.cache()
-        unique = [*key_cols, "__v"] if per_version else key_cols
         try:
-            yield (batch, *(facts or _validate_net_batch(batch, unique, ctx)))
+            if facts is None:
+                key, obs = key_cols[0], Observation()
+                batch.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.min(key).alias("lo"),
+                    F.max(key).alias("hi"),
+                ).write.format("noop").mode("overwrite").save()
+                row = obs.get
+                facts = (row["n"] == 0, row["lo"], row["hi"])
+            yield (batch, *facts)
         finally:
             if cache:
                 batch.unpersist()
@@ -5238,7 +5195,7 @@ def _apply_scd2_feed(
     from pyspark.sql.window import Window
 
     key = key_cols[0]
-    # the validate aggregate's (or commit metadata's) leading-key bounds
+    # the cache fill's observed (or commit metadata's) leading-key bounds
     # double as (a) the target current-row scan range and (b) the
     # MERGE's _validated_bounds — the feed's changed-key range covers
     # every closure and insert key, so one job replaces the three
@@ -5314,7 +5271,7 @@ def _apply_scd2_feed(
             persist_batch=True,
             # (key, _scd2_start) uniqueness is structural, so merge's
             # contract aggregate is redundant here: inserts are unique
-            # per (key, __v) (validated above or guarded in-plan),
+            # per (key, __v) (guarded in-plan by _key_rules),
             # closures carry one current row per key (the SCD2
             # invariant this MERGE itself maintains), and a closure's
             # start (≤ the app watermark) can never equal an insert's

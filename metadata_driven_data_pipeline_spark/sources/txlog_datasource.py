@@ -308,13 +308,11 @@ class TxlogBatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
+        may = txlog._where_tests(self._snap, self._prune)[0]
         parts = [
             _slice(self._snap.root, rel, entry)
             for rel, entry in sorted(self._snap.files.items())
-            if all(
-                txlog._file_may_match(entry, self._phys.get(c, c), op, v)
-                for c, op, v in self._prune
-            )
+            if may(entry)
         ]
         return parts or [_NO_ROWS]
 

@@ -5,7 +5,9 @@
 - every row-materializing write path (append, merge — both lanes —,
   update, replace_where, overwrite) enforces in-plan via
   assert_true-wrapped first column: a violating batch ABORTS before the
-  commit, a clean batch pays zero extra passes;
+  commit with a ValueError naming the constraint, a clean batch pays
+  zero extra passes; files written by tasks (commit_staged) are checked
+  by one probe job;
 - NULL-valued conditions PASS (SQL CHECK semantics: only FALSE
   violates);
 - constraints survive checkpointing, log retention, and overwrite
@@ -156,3 +158,49 @@ def test_declarative_constraint_verbs(spark, tmp_path):
         spark, [{"table": root, "dropConstraint": {"name": "pp"}}]
     )
     assert txlog.load_snapshot(root).constraints == {}
+
+
+@pytest.mark.parametrize("lane", ["append", "commit_staged"])
+def test_second_constraint_violation_is_one_job(spark, tmp_path, lane):
+    """A batch that passes the first of two CHECK constraints and fails
+    the second raises a ValueError naming the second, in one Spark job
+    (counted by job group), and commits nothing: in the staging write
+    for append, in the probe over the written files for commit_staged
+    (the driver half of the txlog DataSource writer, called here with a
+    session)."""
+    root = _mk(tmp_path, "two")
+    _seed(spark, root)
+    txlog.add_constraint(spark, root, "a_positive", "price > 0")
+    txlog.add_constraint(spark, root, "b_below_100", "price < 100")
+    v0 = txlog.load_snapshot(root).version
+    bad = spark.createDataFrame([(3, 500.0)], "k int, price double")
+    if lane == "append":
+
+        def call():
+            return txlog.append(spark, bad, root)
+
+    else:
+        staged = os.path.join(str(tmp_path), "staged")
+        bad.coalesce(1).write.parquet(staged)
+        data = os.path.join(root, txlog.DATA_DIR)
+        paths = []
+        for n in sorted(os.listdir(staged)):
+            if n.endswith(".parquet"):
+                paths.append(os.path.join(data, f"w-{n}"))
+                os.replace(os.path.join(staged, n), paths[-1])
+        schema = txlog.load_snapshot(root).schema
+
+        def call():
+            return txlog.commit_staged(spark, root, paths, schema)
+
+    sc = spark.sparkContext
+    group = f"two-constraints-{lane}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="'b_below_100' violated"):
+            call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert txlog.load_snapshot(root).version == v0
+    assert txlog.read_table(spark, root).count() == 2

@@ -5,7 +5,8 @@ the new batch. Pinned here:
 - untouched partitions never move (same path AND same mtime);
 - stats/partition-proven all-match files drop metadata-only;
 - boundary (may-match) files rewrite only surviving rows;
-- a batch with rows outside the scope raises BEFORE staging;
+- a batch with rows outside the scope raises before anything commits,
+  and its aborted staging write leaves no file behind;
 - re-running the same backfill converges (idempotent);
 - time travel below the replace still sees the old partition.
 """
@@ -110,6 +111,27 @@ def test_replace_where_rejects_out_of_scope_rows(spark, tmp_path):
             spark, _df(spark, [(2, None)]), root, [("p", "==", "a")]
         )
     assert txlog.load_snapshot(root).version == v0  # nothing committed
+
+
+def test_out_of_scope_replace_where_leaves_no_files(spark, tmp_path):
+    """The scope is checked in the batch's staging write: the aborted
+    write commits nothing and leaves neither a staging directory under
+    the root nor a part file under ``data/``."""
+    root = str(tmp_path / "t")
+    txlog.append(spark, _df(spark, [(1, "a"), (2, "b")]), root)
+
+    def listing():
+        return sorted(os.listdir(root)), sorted(
+            os.listdir(os.path.join(root, txlog.DATA_DIR))
+        )
+
+    before, v0 = listing(), txlog.load_snapshot(root).version
+    with pytest.raises(ValueError, match="do NOT satisfy"):
+        txlog.replace_where(
+            spark, _df(spark, [(3, "a"), (4, "b")]), root, [("p", "==", "a")]
+        )
+    assert listing() == before
+    assert txlog.load_snapshot(root).version == v0
 
 
 def test_replace_where_idempotent_rerun_and_time_travel(spark, tmp_path):

@@ -226,12 +226,12 @@ _NO_MATCH = [("id", "==", 150.5)]  # inside file 2's [min, max], no row
         ("delete", False, _MATCH, 1, 1),
         ("delete", False, _NO_MATCH, 1, 1),
         ("delete", True, _MATCH, 4, 4),
-        ("delete", True, _NO_MATCH, 3, 3),
+        ("delete", True, _NO_MATCH, 3, 2),
         ("update", False, _MATCH, 3, 1),
         ("update", False, _NO_MATCH, 2, 1),
         ("update", True, _MATCH, 5, 5),
-        ("update", True, _NO_MATCH, 4, 3),
-        ("replace_where", False, _MATCH, 3, 3),
+        ("update", True, _NO_MATCH, 4, 2),
+        ("replace_where", False, _MATCH, 3, 2),
     ],
 )
 def test_row_dml_job_count_per_lane(spark, tmp_path, op, dv, where, was, jobs):
@@ -241,7 +241,10 @@ def test_row_dml_job_count_per_lane(spark, tmp_path, op, dv, where, was, jobs):
     delete rewrite 1 (no match 1), delete DV 4 (3), update rewrite 3
     (2), update DV 5 (4), replace_where 3. Update's rewrite lane now
     counts its matches with an observe() on its one write instead of a
-    separate count(). A plan that matches no live row is a skipped no-op
+    separate count(). The DV lanes skip their per-file count read when
+    an observe() on the sidecar write shows no new position, and
+    replace_where checks its scope in its staging write instead of in a
+    job of its own. A plan that matches no live row is a skipped no-op
     that leaves neither a staged data file nor a deletion-vector sidecar
     behind (the DV lanes used to leave a sidecar, and a rewrite-lane
     delete committed an unchanged copy of the file)."""
