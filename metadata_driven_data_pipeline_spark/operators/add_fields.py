@@ -63,10 +63,6 @@ FIELD_FUNCTIONS: dict[str, Callable[[dict[str, Any], Any], Column]] = {
 }
 
 
-def register_field_function(name: str, fn: Callable[[dict[str, Any], Any], Column]) -> None:
-    FIELD_FUNCTIONS[name] = fn
-
-
 def compile_field(
     name: str, function_name: str, ctx: dict[str, Any], params: Any = None
 ) -> Column:

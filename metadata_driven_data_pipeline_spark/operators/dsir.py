@@ -123,43 +123,6 @@ def merge_ngram_counts(
     return counts.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
 
-def dsir_bucket_ratios(
-    target_counts: DataFrame, raw_counts: DataFrame, buckets: int
-) -> DataFrame:
-    """Per-bucket log-likelihood ratio table ``(bucket, log_ratio)``
-    from the two hashed-ngram models, add-one smoothed:
-
-        log_ratio(b) = ln((t_b + 1)/(N_t + B)) − ln((r_b + 1)/(N_r + B))
-
-    Only buckets observed in EITHER corpus are materialized; an
-    unobserved bucket's ratio is the constant ln(N_r + B) − ln(N_t + B)
-    (both smoothed counts are 1), which :func:`dsir_weights` supplies
-    via coalesce — the table stays ≤ B rows and broadcasts.  A
-    token-free corpus contributes N = 0 (uniform add-one prior), not
-    NULL."""
-    t_tot = target_counts.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("__nt")
-    )
-    r_tot = raw_counts.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("__nr")
-    )
-    merged = (
-        target_counts.withColumnRenamed("cnt", "__t")
-        .join(raw_counts.withColumnRenamed("cnt", "__r"), "bucket", "full")
-        .crossJoin(F.broadcast(t_tot))
-        .crossJoin(F.broadcast(r_tot))
-    )
-    b = F.lit(float(buckets))
-    log_ratio = F.log(
-        (F.coalesce(F.col("__t"), F.lit(0)) + F.lit(1.0))
-        / (F.col("__nt") + b)
-    ) - F.log(
-        (F.coalesce(F.col("__r"), F.lit(0)) + F.lit(1.0))
-        / (F.col("__nr") + b)
-    )
-    return merged.select("bucket", log_ratio.alias("log_ratio"))
-
-
 def dsir_weights(
     raw_df: DataFrame,
     target_df: DataFrame | None = None,

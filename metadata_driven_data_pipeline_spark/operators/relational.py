@@ -916,10 +916,6 @@ TRANSFORM_TYPES: dict[str, TransformHandler] = {
 }
 
 
-def register_transform_type(name: str, fn: TransformHandler) -> None:
-    TRANSFORM_TYPES[name] = fn
-
-
 def grouped_topk(
     df: DataFrame,
     group_cols: list[str],

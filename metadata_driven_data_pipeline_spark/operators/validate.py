@@ -104,15 +104,6 @@ PARAMETERIZED_RULES: dict[str, Callable[[str, Any], Column]] = {
 }
 
 
-def register_simple_rule(name: str, fn: Callable[[str], Column]) -> None:
-    """Plugin point (parity: the reference's registries are module dicts)."""
-    SIMPLE_RULES[name] = fn
-
-
-def register_parameterized_rule(name: str, fn: Callable[[str, Any], Column]) -> None:
-    PARAMETERIZED_RULES[name] = fn
-
-
 # --- compilation -----------------------------------------------------------
 
 def _compile_field_errors(

@@ -152,31 +152,36 @@ def merge_upsert(
     hpath = jvm.org.apache.hadoop.fs.Path(table_path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     staging = None
-    if fs.exists(hpath):
-        touched = F.col(partition_col).isin(affected)
-        if has_null:
-            touched = touched | F.col(partition_col).isNull()
-        existing = spark.read.format(fmt).load(table_path).filter(touched)
-        merged = dedup_keep_latest(
-            existing.unionByName(updates.select(*existing.columns)),
-            key_cols,
-            order_col,
+    try:
+        if fs.exists(hpath):
+            touched = F.col(partition_col).isin(affected)
+            if has_null:
+                touched = touched | F.col(partition_col).isNull()
+            existing = spark.read.format(fmt).load(table_path).filter(touched)
+            merged = dedup_keep_latest(
+                existing.unionByName(updates.select(*existing.columns)),
+                key_cols,
+                order_col,
+            )
+            staging = f"{table_path}__upsert_{uuid.uuid4().hex[:8]}"
+            merged.write.format(fmt).mode("overwrite").save(staging)
+            landed = spark.read.format(fmt).load(staging)
+        else:
+            # bootstrap: first batch creates the partitioned table outright
+            landed = dedup_keep_latest(updates, key_cols, order_col)
+        obs = Observation()
+        (
+            landed.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.format(fmt)
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .save(table_path)
         )
-        staging = f"{table_path}__upsert_{uuid.uuid4().hex[:8]}"
-        merged.write.format(fmt).mode("overwrite").save(staging)
-        landed = spark.read.format(fmt).load(staging)
-    else:
-        # bootstrap: first batch creates the partitioned table outright
-        landed = dedup_keep_latest(updates, key_cols, order_col)
-    obs = Observation()
-    (
-        landed.observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.format(fmt)
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .save(table_path)
-    )
-    if staging is not None:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    finally:
+        # the staged slice is never needed again, even when a write failed
+        if staging is not None:
+            spath = jvm.org.apache.hadoop.fs.Path(staging)
+            if fs.exists(spath):
+                swap._check(fs.delete(spath, True), "delete", staging)
     return {"partitions_rewritten": rewritten, "rows_written": obs.get["rows"]}

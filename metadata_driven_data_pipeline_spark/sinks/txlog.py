@@ -3230,11 +3230,11 @@ def _row_dml(
       .select(proj)`` — a DELETE keeps the unmatched rows, an UPDATE
       every row with ``set`` applied to the matched ones — and an
       ``observe()`` on that one write counts the matched rows;
-    - deletion vectors: the matched rows' (file, position) pairs go to
-      one :func:`_write_dv` sidecar, whose per-file counts are the
-      matched rows, and only the SET rows are staged. A row an earlier
-      mask hides never matches, and a file whose mask reaches every
-      physical row is removed outright.
+    - deletion vectors: the matched rows, read once, become the staged
+      SET rows (with ``set``) and one :func:`_write_dv` sidecar of their
+      (file, position) pairs, whose per-file counts are the matched
+      rows. A row an earlier mask hides never matches, and a file whose
+      mask reaches every physical row is removed outright.
 
     If no live row of those files matched, they stay as they are and
     what was staged for them is deleted, so an empty ``remove`` means
@@ -3280,30 +3280,45 @@ def _row_dml(
             if old is not None:
                 old = old.filter(F.col("rel").isin(files))
                 rows = rows.join(old, ["rel", "pos"], "left_anti")
-            rows = rows.filter(cond)
-            hits = _write_dv(
-                spark, root, cur.files, files, rows.select("rel", "pos"), old
-            )
+            with _aqe_cached_batches(spark):
+                # an update writes the matched rows twice, as the SET rows
+                # and as the sidecar: cached, the files are read once. The
+                # SET rows go first because their write has no exchange,
+                # so it fills the cache inside its own job (an exchange
+                # above a cache makes AQE fill it in a job of its own)
+                rows = rows.filter(cond)
+                if set:
+                    rows = rows.cache()
+                try:
+                    if set:
+                        adds = stage(rows)
+                    hits = _write_dv(
+                        spark, root, cur.files, files,
+                        rows.select("rel", "pos"), old,
+                    )
+                finally:
+                    if set:
+                        rows.unpersist()
             for rel, n, entry in hits:
                 matched += n
                 remove.append(rel)
                 linked += [entry] if entry else []
-            if set and hits:
-                adds = stage(rows)
+            hit = bool(hits)
         else:
             obs = Observation()
             rows = _read_files(spark, root, cur.schema, cur.files, files)
             rows = rows.observe(obs, F.count_if(cond).alias("n"))
             adds = stage(rows if set else rows.filter(cond.isNull() | ~cond))
             n = obs.get["n"]
-            if n:
+            hit = n > 0
+            if hit:
                 matched += n
                 remove += files
                 rewritten = len(files)
-            else:
-                for a in adds:
-                    os.remove(os.path.join(root, a["path"]))
-                adds = []
+        if not hit:
+            for a in adds:
+                os.remove(os.path.join(root, a["path"]))
+            adds = []
     report = (
         {"rows_updated": matched}
         if set
@@ -4278,19 +4293,16 @@ def read_row_changes(
 
     Spark-first design: because data files are IMMUTABLE and every
     commit names exactly the files it removed/added, a commit's row
-    delta is a pure snapshot diff over its TOUCHED files only::
-
-        inserts(v) = rows(touched files at v)   EXCEPT ALL  rows(at v-1)
-        deletes(v) = rows(touched files at v-1) EXCEPT ALL  rows(at v)
-
+    delta is a pure diff of its TOUCHED files only: the rows of the
+    files it added (+1) against the rows of the files it removed (-1),
     computed under the ``to``-snapshot schema with both sides read
     through the normal (DV-masked, partition-injecting, column-mapped)
-    read path, as ONE signed-count aggregate per feed (after rows +1,
-    before rows -1, grouped by commit and row). The commit walk is
-    :func:`_row_change_units`, which the ``rowLevel`` stream shares. No
-    CDC sidecar files, no write-time overhead on any commit, and the
-    multiset arithmetic keeps duplicate rows exact. What falls out for
-    free:
+    read path, by :func:`_signed_diff` — the one row diff, shared with
+    :func:`snapshot_changes` — as ONE signed-count aggregate per feed.
+    The commit walk is :func:`_row_change_units`, which the ``rowLevel``
+    stream shares. No CDC sidecar files, no write-time overhead on any
+    commit, and the multiset arithmetic keeps duplicate rows exact.
+    What falls out for free:
 
     - pure appends take a fast path (all added rows are inserts — no
       diff job at all);
@@ -4304,7 +4316,7 @@ def read_row_changes(
 
     By default an UPDATE appears as its delete+insert pair. With
     ``key_cols`` (r9, Delta-CDF parity), each commit's delete and
-    insert halves are joined on the keys: matched rows are relabelled
+    insert halves are paired on the keys: matched rows are relabelled
     ``update_preimage`` / ``update_postimage``, unmatched rows keep
     their plain labels, and a non-keyed consumer still sees the plain
     delete+insert form. Pairing assumes the MERGE-key contract (keys
@@ -4428,13 +4440,10 @@ def read_row_changes(
                     )
                 )
             continue
-        # the diff is ONE signed count per distinct row: rows tagged +1
-        # (after) / -1 (before) aggregate to net = n_after - n_before;
-        # net > 0 emits that many inserts, net < 0 that many deletes —
-        # the EXCEPT ALL pair's multiset arithmetic. Every commit's legs
-        # ride the SAME aggregate (version in the grouping key), so a
-        # whole chunk diffs in one exchange, plus one key-window pass
-        # for update pairing.
+        # every commit's signed legs ride the SAME _signed_diff
+        # aggregate (version in the grouping key), so a whole chunk
+        # diffs in one exchange, plus one key-window pass for update
+        # pairing
         if sum(map(_live_rows, before.values())) != sum(
             map(_live_rows, adds.values())
         ):
@@ -4452,56 +4461,7 @@ def read_row_changes(
                 )
             )
     if diff_legs:
-        from pyspark.sql.window import Window
-
-        u = functools.reduce(DataFrame.unionByName, diff_legs)
-        cols = schema.fieldNames()
-        net = (
-            u.groupBy("_commit_version", "_commit_op", *cols)
-            .agg(F.sum("__w").alias("__net"))
-            .filter(F.col("__net") != 0)
-        )
-        base = F.when(F.col("__net") > 0, F.lit("insert")).otherwise(
-            F.lit("delete")
-        )
-        if key_cols:
-            # a key with rows on BOTH sides of one commit's diff is an
-            # update; NULL-keyed rows never pair (semantics identical to
-            # the old INTERSECT + USING-column-equality joins)
-            w2 = Window.partitionBy("_commit_version", *key_cols)
-            any_ins = F.max(
-                F.when(F.col("__net") > 0, 1).otherwise(0)
-            ).over(w2)
-            any_del = F.max(
-                F.when(F.col("__net") < 0, 1).otherwise(0)
-            ).over(w2)
-            nonnull = functools.reduce(
-                lambda a, b: a & b,
-                [F.col(k).isNotNull() for k in key_cols],
-            )
-            paired = (any_ins == 1) & (any_del == 1) & nonnull
-            label = (
-                F.when(
-                    paired & (F.col("__net") > 0),
-                    F.lit("update_postimage"),
-                )
-                .when(paired, F.lit("update_preimage"))
-                .otherwise(base)
-            )
-        else:
-            label = base
-        parts.append(
-            net.withColumn("_change_type", label)
-            .withColumn(
-                "__i",
-                F.explode(
-                    F.sequence(F.lit(1), F.abs(F.col("__net")).cast("int"))
-                ),
-            )
-            .select(
-                *cols, "_change_type", "_commit_version", "_commit_op"
-            )
-        )
+        parts.append(_signed_diff(diff_legs, schema.fieldNames(), key_cols))
     if meta_pure_rows > 0 or meta_known_nonzero:
         meta_empty: bool | None = False
     elif not diff_legs:
@@ -4532,6 +4492,55 @@ def read_row_changes(
         out = out.unionByName(p)
     out._txlog_chunk_meta = chunk_meta
     return out
+
+
+def _signed_diff(
+    legs: list[DataFrame], cols: list[str], key_cols: list[str] | None
+) -> DataFrame:
+    """The one row diff of the CDC feeds (:func:`read_row_changes`,
+    :func:`snapshot_changes`). ``legs`` carry ``cols`` plus
+    ``_commit_version``, ``_commit_op`` and ``__w``: +1 for an after
+    row, -1 for a before row. One signed count per distinct row and
+    commit gives ``net = n_after - n_before``; a row with ``net > 0``
+    is emitted that many times as an insert, one with ``net < 0`` that
+    many times as a delete. This is exact on multisets: duplicates
+    count, and unchanged rows cancel, NULLs included. With
+    ``key_cols``, a non-NULL key that has both an inserted and a
+    deleted row in one commit is an update: its rows are relabelled
+    ``update_postimage`` / ``update_preimage``."""
+    from pyspark.sql.window import Window
+
+    net = (
+        functools.reduce(DataFrame.unionByName, legs)
+        .groupBy("_commit_version", "_commit_op", *cols)
+        .agg(F.sum("__w").alias("__net"))
+        .filter(F.col("__net") != 0)
+    )
+    label = F.when(F.col("__net") > 0, F.lit("insert")).otherwise(
+        F.lit("delete")
+    )
+    if key_cols:
+        w = Window.partitionBy("_commit_version", *key_cols)
+        paired = (
+            (F.max((F.col("__net") > 0).cast("int")).over(w) == 1)
+            & (F.max((F.col("__net") < 0).cast("int")).over(w) == 1)
+            & functools.reduce(
+                operator.and_, [F.col(k).isNotNull() for k in key_cols]
+            )
+        )
+        label = (
+            F.when(paired & (F.col("__net") > 0), F.lit("update_postimage"))
+            .when(paired, F.lit("update_preimage"))
+            .otherwise(label)
+        )
+    return (
+        net.withColumn("_change_type", label)
+        .withColumn(
+            "__i",
+            F.explode(F.sequence(F.lit(1), F.abs(F.col("__net")).cast("int"))),
+        )
+        .select(*cols, "_change_type", "_commit_version", "_commit_op")
+    )
 
 
 def iter_row_changes(
@@ -4943,6 +4952,52 @@ def _consume_snapshot(
 
 
 @contextmanager
+def _observed_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    key: str,
+    rules: list,
+    facts: tuple | None = None,
+    cache: bool = False,
+    extra: dict | None = None,
+):
+    """The one facts pass of the CDC appliers: yield ``(batch, empty,
+    lo, hi, *extra)`` for one applier's batch — whether it is empty,
+    ``key``'s bounds (for merge's ``_validated_bounds``) and the
+    values of the ``extra`` named aggregates. ``rules`` are the row
+    rules the batch's plan guards (:func:`_guard`); a failed one
+    surfaces as its ValueError on any action in the block (cache
+    fill, probe, merge). ``facts`` already known from commit metadata
+    (:func:`_chunk_facts`) skip the pass, and the batch is cached
+    only if ``cache``. Otherwise the batch is cached, and one
+    ``observe()`` on the no-op write that fills the cache yields the
+    facts — the same job checks the rules."""
+    cache = cache or facts is None
+    extra = extra or {}
+    with _aqe_cached_batches(spark), _rule_errors(rules):
+        if cache:
+            batch = batch.cache()
+        try:
+            if facts is None:
+                obs = Observation()
+                batch.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.min(key).alias("lo"),
+                    F.max(key).alias("hi"),
+                    *[c.alias(name) for name, c in extra.items()],
+                ).write.format("noop").mode("overwrite").save()
+                row = obs.get
+                facts = (
+                    row["n"] == 0, row["lo"], row["hi"], *map(row.get, extra)
+                )
+            yield (batch, *facts)
+        finally:
+            if cache:
+                batch.unpersist()
+
+
+@contextmanager
 def _keyed_net_batch(
     spark: SparkSession,
     feed: DataFrame,
@@ -4951,38 +5006,21 @@ def _keyed_net_batch(
     cache: bool = False,
     per_version: bool = False,
 ):
-    """Yield ``(batch, empty, lo, hi)`` for one CDC feed: its
-    :func:`_net_changes` batch, whether it is empty, and the leading
-    key's bounds (for merge's ``_validated_bounds``). The key contract
-    (:func:`_key_rules`) rides the first job that reads the batch, and
-    its failure surfaces as the contractual ValueError on any action in
-    the block (cache fill, probe, merge). Where commit metadata decides
-    emptiness and bounds (:func:`_chunk_facts`, r11) the batch is
-    cached only if ``cache``. Other feeds (stream epochs, snapshot
-    diffs) are cached, and one ``observe()`` on the no-op write that
-    fills the cache yields the facts."""
-    facts = _chunk_facts(feed, key_cols)
+    """Yield ``(batch, empty, lo, hi)`` for one CDC feed through
+    :func:`_observed_batch`: its :func:`_net_changes` batch, guarded by
+    the key contract (:func:`_key_rules`), with the facts commit
+    metadata decides (r11) or the observed cache fill measures (stream
+    epochs, snapshot diffs)."""
     rules = _key_rules(key_cols, ctx, per_version)
-    cache = cache or facts is None
-    with _aqe_cached_batches(spark), _rule_errors(rules):
-        batch = _net_changes(feed, key_cols, rules, per_version)
-        if cache:
-            batch = batch.cache()
-        try:
-            if facts is None:
-                key, obs = key_cols[0], Observation()
-                batch.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(key).alias("lo"),
-                    F.max(key).alias("hi"),
-                ).write.format("noop").mode("overwrite").save()
-                row = obs.get
-                facts = (row["n"] == 0, row["lo"], row["hi"])
-            yield (batch, *facts)
-        finally:
-            if cache:
-                batch.unpersist()
+    with _observed_batch(
+        spark,
+        _net_changes(feed, key_cols, rules, per_version),
+        key_cols[0],
+        rules,
+        _chunk_facts(feed, key_cols),
+        cache,
+    ) as out:
+        yield out
 
 
 def replicate(
@@ -5545,132 +5583,119 @@ def _apply_mv_feed(
     for out in mm:
         keep.append(F.col(out).isNotNull())
         keep.append(F.col(f"__del_{out}").isNotNull())
-    deltas = deltas0.filter(functools.reduce(lambda a, b: a | b, keep))
+    # group columns must be non-NULL: one row rule, guarded on the live
+    # count every job over the deltas materializes
+    rules = [
+        (
+            functools.reduce(
+                operator.and_, [F.col(k).isNotNull() for k in group_cols]
+            ),
+            f"maintain_aggregate: NULL group value in {group_cols} "
+            f"at {ctx} — group columns must be non-NULL",
+        )
+    ]
+    deltas = deltas0.filter(functools.reduce(operator.or_, keep)).withColumn(
+        MV_COUNT, _guard(F.col(MV_COUNT), rules)
+    )
     view_schema = StructType(
         [f for f in deltas.schema.fields if not f.name.startswith("__")]
     )
-    # zero-net feed decided from COMMIT METADATA alone (r12, VERDICT r11
-    # #3: extend _chunk_facts coverage to the MV lanes): an empty feed
-    # has empty deltas, so the bootstrap + watermark advance needs NO
-    # probe job at all. Only the metadata-certain empty case short-
-    # circuits — a non-empty feed can still net to zero deltas (e.g. an
-    # update touching no maintained quantity), which only the probe
-    # aggregate below can decide.
-    facts = _chunk_facts(feed, group_cols)
-    if facts is not None and facts[0]:
-        _advance_watermark(target_root, view_schema, app_id, batch_id)
-        return False
-    with _aqe_cached_batches(spark):
-        deltas = deltas.cache()
-        try:
-            # ONE aggregate job answers every per-chunk question — NULL
-            # group values, emptiness, the leading group key's bounds
-            # (which feed the MERGE's _validated_bounds below), and for
-            # min/max views the DELETE-candidate key bounds too (r12,
-            # VERDICT r11 #3: the rescan lane ran its own bounds
-            # aggregate over the same cached deltas — one extra job per
-            # delete-carrying chunk). r11 fused the two limit(1).count()
-            # probes and merge's bounds/contract aggregate the same way.
-            g0 = group_cols[0]
-            nullg = functools.reduce(
-                lambda a, b: a | b,
-                [F.col(k).isNull() for k in group_cols],
+    # fold: counts add; sums add zero-based raw values and the exposed
+    # value reverts to NULL exactly when the folded non-null-contribution
+    # count is zero (SQL SUM semantics) — a NULL stored sum implies raw
+    # 0, so coalesce reconstructs
+    fold = {}
+    for out, (kind, _) in aggs.items():
+        if kind == "count":
+            fold[out] = f"t.{out} + s.{out}"
+        elif kind == "avg":
+            s_, c_ = avg_cols[out]
+            fold[s_] = f"COALESCE(t.{s_}, 0) + COALESCE(s.{s_}, 0)"
+            fold[c_] = f"t.{c_} + s.{c_}"
+            fold[out] = (
+                f"CASE WHEN t.{c_} + s.{c_} = 0 THEN NULL "
+                f"ELSE (COALESCE(t.{s_}, 0) + COALESCE(s.{s_}, 0)) "
+                f"/ (t.{c_} + s.{c_}) END"
             )
-            probe_aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.max(nullg.cast("int")).alias("anynull"),
-                F.min(g0).alias("lo"),
-                F.max(g0).alias("hi"),
-            ]
-            if mm:
-                dels_any = functools.reduce(
-                    lambda a, b: a | b,
-                    [F.col(f"__del_{o}").isNotNull() for o in mm],
-                )
-                probe_aggs += [
-                    F.min(F.when(dels_any, F.col(g0))).alias("dlo"),
-                    F.max(F.when(dels_any, F.col(g0))).alias("dhi"),
-                ]
-            probe = deltas.agg(*probe_aggs).first()
-            if probe["anynull"]:
-                raise ValueError(
-                    f"maintain_aggregate: NULL group value in {group_cols} "
-                    f"at {ctx} — group columns must be non-NULL"
-                )
-            if probe["n"] == 0:
-                _advance_watermark(target_root, view_schema, app_id, batch_id)
-                return False
-            batch = deltas
-            if mm:
-                batch = _mv_minmax_rescan(
-                    spark, deltas, target_root, group_cols, aggs, mm,
-                    rescan_src, stats,
-                    version=batch_id,
-                    dels_any=dels_any,
-                    cand_bounds=(probe["dlo"], probe["dhi"]),
-                )
-            # fold: counts add; sums add zero-based raw values and the
-            # exposed value reverts to NULL exactly when the folded
-            # non-null-contribution count is zero (SQL SUM semantics) —
-            # a NULL stored sum implies raw 0, so coalesce reconstructs
-            fold = {}
-            for out, (kind, _) in aggs.items():
-                if kind == "count":
-                    fold[out] = f"t.{out} + s.{out}"
-                elif kind == "avg":
-                    s_, c_ = avg_cols[out]
-                    fold[s_] = f"COALESCE(t.{s_}, 0) + COALESCE(s.{s_}, 0)"
-                    fold[c_] = f"t.{c_} + s.{c_}"
-                    fold[out] = (
-                        f"CASE WHEN t.{c_} + s.{c_} = 0 THEN NULL "
-                        f"ELSE (COALESCE(t.{s_}, 0) + COALESCE(s.{s_}, 0)) "
-                        f"/ (t.{c_} + s.{c_}) END"
-                    )
-                elif kind in ("min", "max"):
-                    # rescanned groups SET the recomputed extremum (it is
-                    # final — the rescan ran AS OF chunk end); everyone else
-                    # folds monotonically (LEAST/GREATEST skip NULLs, so a
-                    # delete-only group leaves the stored extremum alone)
-                    lg = "LEAST" if kind == "min" else "GREATEST"
-                    fold[out] = (
-                        f"CASE WHEN s.__mv_rescan THEN s.{out} "
-                        f"ELSE {lg}(t.{out}, s.{out}) END"
-                    )
-                else:
-                    c = nn[out]
-                    fold[out] = (
-                        f"CASE WHEN t.{c} + s.{c} = 0 THEN NULL "
-                        f"ELSE COALESCE(t.{out}, 0) + COALESCE(s.{out}, 0) "
-                        "END"
-                    )
-                    fold[c] = f"t.{c} + s.{c}"
-            fold[MV_COUNT] = f"t.{MV_COUNT} + s.{MV_COUNT}"
-            merge(
-                spark,
-                batch,
-                target_root,
-                group_cols,
-                order_col=None,
-                when_matched=[
-                    {
-                        "action": "delete",
-                        "condition": f"t.{MV_COUNT} + s.{MV_COUNT} = 0",
-                    },
-                    {"action": "update", "set": fold},
-                ],
-                when_not_matched_insert=True,
-                txn=(app_id, batch_id),
-                # min/max rescan joins make the delta batch plan expensive;
-                # plain-delta chunks ride the cached `deltas` unchanged
-                persist_batch=bool(mm),
-                # deltas is the output of groupBy(*group_cols) (and the
-                # rescan path only left-joins per-group frames onto it), so
-                # key-uniqueness is structural; bounds from the probe above
-                _validated_bounds=(probe["lo"], probe["hi"]),
+        elif kind in ("min", "max"):
+            # rescanned groups SET the recomputed extremum (it is final —
+            # the rescan ran AS OF chunk end); everyone else folds
+            # monotonically (LEAST/GREATEST skip NULLs, so a delete-only
+            # group leaves the stored extremum alone)
+            lg = "LEAST" if kind == "min" else "GREATEST"
+            fold[out] = (
+                f"CASE WHEN s.__mv_rescan THEN s.{out} "
+                f"ELSE {lg}(t.{out}, s.{out}) END"
             )
-            return True
-        finally:
-            deltas.unpersist()
+        else:
+            c = nn[out]
+            fold[out] = (
+                f"CASE WHEN t.{c} + s.{c} = 0 THEN NULL "
+                f"ELSE COALESCE(t.{out}, 0) + COALESCE(s.{out}, 0) "
+                "END"
+            )
+            fold[c] = f"t.{c} + s.{c}"
+    fold[MV_COUNT] = f"t.{MV_COUNT} + s.{MV_COUNT}"
+    # ONE facts pass answers every per-feed question: the observed cache
+    # fill checks the NULL-group rule and yields emptiness, the leading
+    # group key's bounds (merge's _validated_bounds below) and, for
+    # min/max views, the delete-candidate key bounds. Only a feed that
+    # commit metadata proves empty (r12) skips it: a non-empty feed can
+    # still net to zero deltas (e.g. an update touching no maintained
+    # quantity), which only the pass can decide.
+    g0 = group_cols[0]
+    extra = {}
+    if mm:
+        dels_any = functools.reduce(
+            operator.or_, [F.col(f"__del_{o}").isNotNull() for o in mm]
+        )
+        extra = {
+            "dlo": F.min(F.when(dels_any, F.col(g0))),
+            "dhi": F.max(F.when(dels_any, F.col(g0))),
+        }
+    meta = _chunk_facts(feed, group_cols)
+    known = None
+    if meta is not None and meta[0]:
+        known = (True, None, None, *[None] * len(extra))
+    with _observed_batch(spark, deltas, g0, rules, known, extra=extra) as (
+        deltas, empty, lo, hi, *cand_bounds
+    ):
+        if empty:
+            _advance_watermark(target_root, view_schema, app_id, batch_id)
+            return False
+        batch = deltas
+        if mm:
+            batch = _mv_minmax_rescan(
+                spark, deltas, target_root, group_cols, aggs, mm,
+                rescan_src, stats,
+                version=batch_id,
+                dels_any=dels_any,
+                cand_bounds=tuple(cand_bounds),
+            )
+        merge(
+            spark,
+            batch,
+            target_root,
+            group_cols,
+            order_col=None,
+            when_matched=[
+                {
+                    "action": "delete",
+                    "condition": f"t.{MV_COUNT} + s.{MV_COUNT} = 0",
+                },
+                {"action": "update", "set": fold},
+            ],
+            when_not_matched_insert=True,
+            txn=(app_id, batch_id),
+            # min/max rescan joins make the delta batch plan expensive;
+            # plain-delta chunks ride the cached `deltas` unchanged
+            persist_batch=bool(mm),
+            # deltas is the output of groupBy(*group_cols) (and the
+            # rescan path only left-joins per-group frames onto it), so
+            # key-uniqueness is structural; bounds from the facts pass
+            _validated_bounds=(lo, hi),
+        )
+        return True
 
 
 def _mv_minmax_rescan(
@@ -5703,10 +5728,10 @@ def _mv_minmax_rescan(
     cand = deltas.filter(dels_any).select(
         *group_cols, *[f"__del_{o}" for o in mm]
     )
-    # delete-candidate bounds arrive from the caller's fused probe
-    # aggregate (r12, VERDICT r11 #3) — this lane used to run its own
-    # min/max job over the same cached deltas; no deletes at all means
-    # nothing can invalidate, view or no view
+    # delete-candidate bounds arrive from the caller's facts pass
+    # (:func:`_observed_batch`) — this lane used to run its own min/max
+    # job over the same cached deltas; no deletes at all means nothing
+    # can invalidate, view or no view
     if cand_bounds[0] is None:
         invalid = None
     elif load_snapshot(target_root).schema_json is not None:
@@ -5849,23 +5874,24 @@ def snapshot_changes(
     sources that only deliver periodic dumps (vendor extracts, daily
     plain-parquet drops) instead of a txlog row feed.
 
-    ``key_cols`` given → KEYED pairing: one full-outer join on the keys
-    compares the non-key payload as a null-safe struct — key only in
-    ``curr`` is an ``insert``, only in ``prev`` a ``delete``, present
-    in both with a different payload an ``update_preimage`` +
-    ``update_postimage`` pair. ``key_cols=None`` → MULTISET diff
-    (``EXCEPT ALL`` both ways): inserts and deletes only, the shape
+    The diff is :func:`_signed_diff`, the row feed's own: ``curr`` rows
+    count +1 and ``prev`` rows -1, so the feed equals
+    :func:`read_row_changes` of an ``overwrite`` from ``prev`` to
+    ``curr``, exact on multisets (duplicates and NULL-keyed rows
+    included). ``key_cols`` given → a key with a deleted and an
+    inserted row is an ``update_preimage`` + ``update_postimage`` pair;
+    ``key_cols=None`` → inserts and deletes only, the shape
     :func:`maintain_aggregate` needs (aggregation is positional-
-    identity-free, so no keys required). Schemas may differ between
-    snapshots — columns are aligned by name, the missing side reads
-    NULL (same contract as the feed's schema evolution); a same-name
-    type conflict raises.
+    identity-free, so no keys required). ``prev=None`` → every ``curr``
+    row is an insert. Schemas may differ between snapshots — columns
+    are aligned by name, the missing side reads NULL (same contract as
+    the feed's schema evolution); a same-name type conflict raises.
 
-    ``version`` stamps ``_commit_version`` — the caller's monotonic
-    snapshot ordinal (a date-derived int works). Cost is inherent to
-    snapshot sources: O(|prev| + |curr|) — there is no log to read
-    deltas from; what the feed shape buys is that everything DOWNSTREAM
-    of the diff stays O(changed rows)."""
+    ``version`` stamps ``_commit_version`` (a long) — the caller's
+    monotonic snapshot ordinal (a date-derived int works). Cost is
+    inherent to snapshot sources: O(|prev| + |curr|) — there is no log
+    to read deltas from; what the feed shape buys is that everything
+    DOWNSTREAM of the diff stays O(changed rows)."""
     fields = list(curr.schema.fields)
     have = {f.name for f in fields}
     if prev is not None:
@@ -5879,79 +5905,28 @@ def snapshot_changes(
                     f"{curr.schema[f.name].dataType.simpleString()})"
                 )
     names = [f.name for f in fields]
-    by_name = {f.name: f for f in fields}
-
-    def aligned(df: DataFrame) -> DataFrame:
-        for n in names:
-            if n not in df.columns:
-                df = df.withColumn(n, F.lit(None).cast(by_name[n].dataType))
-        return df.select(*names)
-
-    c = aligned(curr)
-    tag = lambda df, t: df.select(  # noqa: E731
-        *names,
-        F.lit(t).alias("_change_type"),
-        F.lit(version).cast("long").alias("_commit_version"),
-        F.lit("snapshot").alias("_commit_op"),
-    )
-    if prev is None:
-        return tag(c, "insert")
-    p = aligned(prev)
-    if key_cols is None:
-        # multiset diff — positional identity not preserved, so only
-        # insert/delete rows (exactly what aggregate maintenance needs)
-        return tag(c.exceptAll(p), "insert").unionByName(
-            tag(p.exceptAll(c), "delete")
-        )
-    missing = [k for k in key_cols if k not in names]
+    missing = [k for k in key_cols or () if k not in names]
     if missing:
         raise ValueError(f"snapshot_changes: key columns {missing} absent")
-    data_cols = [n for n in names if n not in key_cols]
-    payload = (
-        F.struct(*[F.col(n) for n in data_cols])
-        if data_cols
-        else F.struct(F.lit(0).alias("__z"))  # key-only table
-    )
-    pj = p.select(*key_cols, payload.alias("__p"))
-    cj = c.select(*key_cols, payload.alias("__c"))
-    j = pj.join(cj, key_cols, "full_outer").filter(
-        ~(F.col("__p").eqNullSafe(F.col("__c")))
-    )
-    legs = (
-        F.when(
-            F.col("__p").isNull(),
-            F.array(
-                F.struct(F.col("__c").alias("r"), F.lit("insert").alias("t"))
-            ),
+
+    def leg(df: DataFrame, *change) -> DataFrame:
+        return df.select(
+            *[
+                F.col(f.name) if f.name in df.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in fields
+            ],
+            *change,
+            F.lit(version).cast("long").alias("_commit_version"),
+            F.lit("snapshot").alias("_commit_op"),
         )
-        .when(
-            F.col("__c").isNull(),
-            F.array(
-                F.struct(F.col("__p").alias("r"), F.lit("delete").alias("t"))
-            ),
-        )
-        .otherwise(
-            F.array(
-                F.struct(
-                    F.col("__p").alias("r"),
-                    F.lit("update_preimage").alias("t"),
-                ),
-                F.struct(
-                    F.col("__c").alias("r"),
-                    F.lit("update_postimage").alias("t"),
-                ),
-            )
-        )
-    )
-    exploded = j.select(*key_cols, F.explode(legs).alias("__e"))
-    return exploded.select(
-        *[
-            F.col(f"__e.r.{n}").alias(n) if n in data_cols else F.col(n)
-            for n in names
-        ],
-        F.col("__e.t").alias("_change_type"),
-        F.lit(version).cast("long").alias("_commit_version"),
-        F.lit("snapshot").alias("_commit_op"),
+
+    if prev is None:
+        return leg(curr, F.lit("insert").alias("_change_type"))
+    return _signed_diff(
+        [leg(curr, F.lit(1).alias("__w")), leg(prev, F.lit(-1).alias("__w"))],
+        names,
+        key_cols,
     )
 
 
@@ -6036,11 +6011,11 @@ def maintain_aggregate_from_snapshot(
     snapshot twin of :func:`maintain_aggregate`. Unlike the replica
     consumers, the view cannot reconstruct the previous snapshot, so
     the caller passes BOTH dumps (``prev=None`` for the first). The
-    diff is the UNKEYED multiset ``EXCEPT ALL`` (aggregation needs no
-    positional identity), folded through the same delta MERGE as the
-    CDC lane; min/max rescans run against ``curr``. Arguments are
-    checked as in :func:`maintain_aggregate`; replayed versions are
-    skipped by :func:`_consume_snapshot`."""
+    diff is the UNKEYED :func:`snapshot_changes` (inserts and deletes
+    only: aggregation needs no positional identity), folded through the
+    same delta MERGE as the CDC lane; min/max rescans run against
+    ``curr``. Arguments are checked as in :func:`maintain_aggregate`;
+    replayed versions are skipped by :func:`_consume_snapshot`."""
     _check_mv_aggs(aggs, group_cols)
     g0 = group_cols[0]
 

@@ -581,10 +581,13 @@ def _diff_batches(
     key_cols: list[str] | None = None,
 ) -> Iterator["pa.RecordBatch"]:
     """Executor-side multiset diff of one commit — the Arrow-lane analog
-    of :func:`txlog.read_row_changes`'s signed-count aggregate
-    (txlog.py): rows(after) minus rows(before) are inserts, the reverse
-    are deletes, exact under duplicates via a counter keyed on a
-    16-byte digest of the normalized row. Both sides read through the
+    of :func:`txlog._signed_diff`, the one row diff of
+    :func:`txlog.read_row_changes` and :func:`txlog.snapshot_changes`.
+    It stays separate because the ``rowLevel`` stream diffs on
+    executors, where there is no Spark session. rows(after) minus
+    rows(before) are inserts, the reverse are deletes, exact under
+    duplicates via a counter keyed on a 16-byte digest of the
+    normalized row. Both sides read through the
     normal Arrow path (DV masks, partition injection, column mapping,
     schema evolution). ``key_cols`` mirrors the batch feed's update
     pairing: keys present in BOTH halves relabel

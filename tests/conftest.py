@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -25,6 +26,25 @@ def sf_dir():
 
 def load(spark, sf_dir, table):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+def in_job_group(spark, fn):
+    """(fn(), id of the fresh job group fn ran under); the group is
+    cleared again even when fn raises."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted by the test suite")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, group
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    out, group = in_job_group(spark, fn)
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 # -- DAG-gate run-log hooks (reference tests/conftest.py:72-136 parity) -----

@@ -5,7 +5,6 @@ KO never consolidated, and the folded-files watermark."""
 import glob
 import json
 import os
-import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -15,6 +14,8 @@ from metadata_driven_data_pipeline_spark.operators.consolidate import (
     consolidate_ok_records,
     dedup_keep_latest,
 )
+
+from conftest import count_jobs
 
 
 @pytest.fixture()
@@ -259,22 +260,17 @@ def test_noop_call_is_up_to_date_and_runs_no_job(spark, tmp_path):
     root = str(tmp_path)
     _write_batches(spark, root)
     cfg = consolidation_config(root)
-    sc = spark.sparkContext
-    fold_group, noop_group = (f"cons-{uuid.uuid4().hex[:8]}" for _ in range(2))
     out = f"{root}/consolidated/output"
-    try:
-        sc.setJobGroup(fold_group, "consolidation that folds")
-        consolidate_ok_records(spark, cfg)
-        before = _snapshot(out)
-        sc.setJobGroup(noop_group, "consolidation with nothing new")
-        result = consolidate_ok_records(spark, cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, fold_jobs = count_jobs(spark, lambda: consolidate_ok_records(spark, cfg))
+    before = _snapshot(out)
+    result, noop_jobs = count_jobs(
+        spark, lambda: consolidate_ok_records(spark, cfg)
+    )
     assert result["consolidation_mode"] == "up_to_date"
     assert result["files_folded"] == 0
     assert result["total_records_after"] == 3
-    assert sc.statusTracker().getJobIdsForGroup(fold_group)
-    assert sc.statusTracker().getJobIdsForGroup(noop_group) == []
+    assert fold_jobs
+    assert noop_jobs == 0
     assert _snapshot(out) == before
 
 

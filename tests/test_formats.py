@@ -229,6 +229,37 @@ class TestMergeUpsert:
         )
         assert first == second
 
+    def test_upsert_removes_its_staging_when_the_final_write_fails(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The staged slice is deleted even when the final dynamic
+        partition overwrite raises, and the table keeps its rows."""
+        import os
+
+        from pyspark.sql import DataFrameWriter
+
+        from metadata_driven_data_pipeline_spark.sinks.maintenance import (
+            merge_upsert,
+        )
+
+        path = str(tmp_path / "failtbl")
+        self._mk_table(spark, path)
+
+        def fail(self, *cols):
+            raise RuntimeError("final write failed")
+
+        # only the final write partitions; the staging write does not
+        monkeypatch.setattr(DataFrameWriter, "partitionBy", fail)
+        updates = spark.createDataFrame(
+            [(100, "2024-01-01", 2, "v2-100")],
+            "id long, day string, version int, payload string",
+        )
+        with pytest.raises(RuntimeError, match="final write failed"):
+            merge_upsert(spark, path, updates, ["id", "day"], "version", "day")
+        monkeypatch.undo()
+        assert not [n for n in os.listdir(tmp_path) if "__upsert_" in n]
+        assert spark.read.parquet(path).count() == 50
+
     def test_upsert_no_updates_is_noop(self, spark, tmp_path):
         from metadata_driven_data_pipeline_spark.sinks.maintenance import (
             merge_upsert,

@@ -8,7 +8,6 @@ import datetime
 import decimal
 import json
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -21,17 +20,7 @@ from metadata_driven_data_pipeline_spark.sources.reader import (
     read_source,
 )
 
-
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn started)."""
-    sc = spark.sparkContext
-    group = f"reader-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "parquet source read")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from conftest import count_jobs
 
 
 def _source(path, **extra):
@@ -71,7 +60,7 @@ def _arrow_table():
 def test_footer_schema_matches_inference_with_no_job(spark, tmp_path):
     path = str(tmp_path / "types.parquet")
     pq.write_table(_arrow_table(), path)
-    res, jobs = _jobs(spark, lambda: read_source(spark, _source(path)))
+    res, jobs = count_jobs(spark, lambda: read_source(spark, _source(path)))
     assert jobs == 0
     assert res.status == "success" and not res.schema_enforced
     assert res.df.schema == spark.read.parquet(path).schema
@@ -89,7 +78,7 @@ def test_spark_written_non_nullable_columns_read_as_inferred(spark, tmp_path):
     row_schema = json.loads(footer[b"org.apache.spark.sql.parquet.row.metadata"])
     assert row_schema["fields"][0]["nullable"] is False
     path = f"{out}/part-*.parquet"
-    res, jobs = _jobs(spark, lambda: read_source(spark, _source(path)))
+    res, jobs = count_jobs(spark, lambda: read_source(spark, _source(path)))
     assert jobs == 0
     assert res.df.schema == spark.read.parquet(path).schema
     assert res.df.schema["id"].nullable
@@ -99,7 +88,7 @@ def test_glob_reads_the_first_match_by_path(spark, tmp_path):
     pq.write_table(pa.table({"z": [1.0]}), str(tmp_path / "c.parquet"))
     pq.write_table(pa.table({"a": [1], "s": ["x"]}), str(tmp_path / "b.parquet"))
     path = f"{tmp_path}/*.parquet"
-    res, jobs = _jobs(spark, lambda: read_source(spark, _source(path)))
+    res, jobs = count_jobs(spark, lambda: read_source(spark, _source(path)))
     assert jobs == 0
     assert res.df.schema == spark.read.parquet(path).schema
     assert res.df.columns == ["a", "s"]
@@ -134,7 +123,7 @@ def test_fallback_cases_still_infer(spark, tmp_path, case):
         }[case]
         spark.conf.set(conf, "true")
     try:
-        res, jobs = _jobs(spark, lambda: read_source(spark, source))
+        res, jobs = count_jobs(spark, lambda: read_source(spark, source))
     finally:
         if conf:
             spark.conf.unset(conf)

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from metadata_driven_data_pipeline_spark.sinks import txlog
 
+from conftest import count_jobs
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -1487,13 +1489,10 @@ def test_keep_latest_merge_of_a_parquet_batch_job_count(spark, tmp_path):
     txlog.append(spark, spark.createDataFrame(table, schema).coalesce(1), root)
     batch = [(3, "new", 100), (20, "ins", 100), (5, "old", 0)]
     spark.createDataFrame(batch, schema).coalesce(1).write.parquet(src)
-    sc = spark.sparkContext
-    sc.setJobGroup("merge-job-count", "keep-latest merge")
-    try:
-        res = txlog.merge(spark, spark.read.parquet(src), root, ["k"], "ts")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("merge-job-count")) == 4
+    res, jobs = count_jobs(
+        spark, lambda: txlog.merge(spark, spark.read.parquet(src), root, ["k"], "ts")
+    )
+    assert jobs == 4
     assert res["files_rewritten"] == 1 and res["rows_written"] == 11
     want = dict((k, (k, v, ts)) for k, v, ts in table)
     want.update({3: (3, "new", 100), 20: (20, "ins", 100)})

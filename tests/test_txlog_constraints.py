@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 
 from metadata_driven_data_pipeline_spark.sinks import txlog
 
+from conftest import count_jobs
+
 
 def _mk(tmp_path, name):
     return os.path.join(str(tmp_path), name)
@@ -193,14 +195,10 @@ def test_second_constraint_violation_is_one_job(spark, tmp_path, lane):
         def call():
             return txlog.commit_staged(spark, root, paths, schema)
 
-    sc = spark.sparkContext
-    group = f"two-constraints-{lane}"
-    sc.setJobGroup(group, group)
-    try:
+    def rejected():
         with pytest.raises(ValueError, match="'b_below_100' violated"):
             call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    assert count_jobs(spark, rejected)[1] == 1
     assert txlog.load_snapshot(root).version == v0
     assert txlog.read_table(spark, root).count() == 2

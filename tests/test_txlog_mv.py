@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 
 from metadata_driven_data_pipeline_spark.sinks import txlog
 
+from conftest import count_jobs
+
+
 AGGS = {
     "n": ("count", "*"),
     "n_v": ("count", "v"),
@@ -139,6 +142,37 @@ def test_mv_rejects_unsupported_kinds_and_null_groups(spark, tmp_path):
         txlog.maintain_aggregate(spark, src, tgt, ["g"], AGGS)
 
 
+def test_mv_chunk_facts_and_null_group_check_ride_one_cache_fill(
+    spark, tmp_path
+):
+    """One observed cache fill measures a chunk's deltas (emptiness, group
+    bounds, delete-candidate bounds) and guards its group columns: a
+    delete-carrying min/max chunk runs 15 Spark jobs, as many as when a
+    separate probe aggregate took those facts, and a NULL group fails the
+    guard as a ValueError before anything commits."""
+    from pyspark.errors import SparkRuntimeException
+
+    src, tgt = _mk(tmp_path, "mv_src_guard"), _mk(tmp_path, "mv_tgt_guard")
+    aggs = {**AGGS, "lo_v": ("min", "v")}
+    schema = "g int, k int, v double"
+    rows = [(1, 1, 1.0), (1, 2, 2.0), (2, 3, 3.0)]
+    txlog.append(spark, spark.createDataFrame(rows, schema), src)
+    txlog.maintain_aggregate(spark, src, tgt, ["g"], aggs)
+    txlog.delete(spark, src, [("k", "==", 1)])
+    res, jobs = count_jobs(
+        spark, lambda: txlog.maintain_aggregate(spark, src, tgt, ["g"], aggs)
+    )
+    assert res["chunks_applied"] == 1 and res["groups_rescanned"] == 1
+    assert jobs == 15
+    _assert_equal(spark, src, tgt)
+    v = txlog.load_snapshot(tgt).version
+    txlog.append(spark, spark.createDataFrame([(None, 9, 9.0)], schema), src)
+    with pytest.raises(ValueError, match="NULL group") as info:
+        txlog.maintain_aggregate(spark, src, tgt, ["g"], aggs)
+    assert isinstance(info.value.__cause__, SparkRuntimeException)
+    assert txlog.load_snapshot(tgt).version == v
+
+
 @pytest.mark.parametrize("lane", ["batch", "stream", "snapshot"])
 @pytest.mark.parametrize(
     "group_cols, aggs, match",
@@ -168,15 +202,11 @@ def test_mv_lanes_reject_the_same_arguments_before_any_job(
             spark, None, None, tgt, group_cols, aggs, 1
         ),
     }
-    sc = spark.sparkContext
-    group = f"mv-args-{lane}-{os.path.basename(str(tmp_path))}"
-    try:
-        sc.setJobGroup(group, "aggregate-view argument check")
+    def rejected():
         with pytest.raises(ValueError, match=match):
             calls[lane]()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    assert count_jobs(spark, rejected)[1] == 0
 
 
 def test_declarative_maintain_aggregate_verb(spark, tmp_path):

@@ -240,6 +240,39 @@ def test_snapshot_changes_unkeyed_multiset(spark):
     assert got == [("delete", 1), ("insert", 2)]
 
 
+@pytest.mark.parametrize("keys", [["k"], None], ids=["keyed", "unkeyed"])
+def test_snapshot_changes_equals_the_row_feed_of_an_overwrite(
+    spark, tmp_path, keys
+):
+    """A snapshot diff is the row feed's own signed-count diff: an
+    unchanged NULL-keyed row cancels and a lost duplicate is one delete,
+    exactly as read_row_changes reports the same overwrite."""
+    from collections import Counter
+
+    schema = "k int, s string"
+    prev = spark.createDataFrame(
+        [(None, "n"), (1, "a"), (2, "b"), (2, "b")], schema
+    )
+    curr = spark.createDataFrame(
+        [(None, "n"), (1, "A"), (2, "b"), (3, "c")], schema
+    )
+    root = _mk(tmp_path, "overwritten")
+    txlog.append(spark, prev, root)
+    v = txlog.overwrite(spark, curr, root)["version"]
+
+    def changes(feed):
+        return Counter((r["k"], r["s"], r["_change_type"]) for r in feed.collect())
+
+    feed = changes(txlog.read_row_changes(spark, root, v - 1, v, key_cols=keys))
+    assert changes(txlog.snapshot_changes(prev, curr, keys, v)) == feed
+    pre, post = ("update_preimage", "update_postimage") if keys else (
+        "delete", "insert"
+    )
+    assert feed == Counter(
+        [(1, "a", pre), (1, "A", post), (2, "b", "delete"), (3, "c", "insert")]
+    )
+
+
 def test_replicate_from_snapshot_converges(spark, tmp_path):
     tgt = _mk(tmp_path, "rsnap_tgt")
     s1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string")

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from metadata_driven_data_pipeline_spark.sinks import txlog
 from metadata_driven_data_pipeline_spark.operators import similarity as sim
 
+from conftest import count_jobs
+
 
 def _assert_facts_available(spark, root, key_cols):
     feed = txlog.read_row_changes(spark, root, 0)
@@ -158,14 +160,10 @@ def test_snapshot_diff_apply_job_count(spark, tmp_path):
     s1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, s string")
     s2 = spark.createDataFrame([(2, "B"), (3, "c")], "k int, s string")
     txlog.replicate_from_snapshot(spark, s1, tgt, ["k"], 1)
-    sc = spark.sparkContext
-    group = "snapshot-diff-apply"
-    sc.setJobGroup(group, group)
-    try:
-        res = txlog.replicate_from_snapshot(spark, s2, tgt, ["k"], 2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    res, jobs = count_jobs(
+        spark, lambda: txlog.replicate_from_snapshot(spark, s2, tgt, ["k"], 2)
+    )
+    assert jobs == 7
     assert res["applied"]
     got = sorted(map(tuple, txlog.read_table(spark, tgt).collect()))
     assert got == [(2, "B"), (3, "c")]

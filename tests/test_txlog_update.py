@@ -30,6 +30,8 @@ import pytest
 
 from metadata_driven_data_pipeline_spark.sinks import txlog
 
+from conftest import count_jobs, in_job_group
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -272,17 +274,40 @@ def test_row_dml_job_count_per_lane(spark, tmp_path, op, dv, where, was, jobs):
             where,
         ),
     }[op]
-    sc = spark.sparkContext
-    group = f"row-dml-{op}-{dv}-{where is _MATCH}"
-    sc.setJobGroup(group, op)
-    try:
-        res = call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs <= was
+    res, n = count_jobs(spark, call)
+    assert n == jobs <= was
     rows = res["rows_updated" if op == "update" else "rows_deleted"]
     if where is _MATCH:
         assert rows == 10 and not res["skipped"]
     else:
         assert rows == 0 and res["skipped"] and res["version"] == 3
         assert listing() == before
+
+
+def test_dv_update_reads_its_boundary_file_once(spark, tmp_path):
+    """A deletion-vector update writes its matched rows twice, as the SET
+    rows and as the sidecar. They are cached, so ten matched rows of a
+    1,000-row file cost one scan of the file: the stages of the
+    update's job group read about 1,000 records (about 2,000 before the
+    cache), in the same 5 Spark jobs."""
+    root = str(tmp_path / "t")
+    _mk(spark, root, n_files=1, rows_per_file=1000)
+    where = [("id", ">=", 100), ("id", "<", 110)]
+    res, group = in_job_group(
+        spark,
+        lambda: txlog.update(
+            spark, root, where, {"v": "v * 2"}, deletion_vectors=True
+        ),
+    )
+    sc = spark.sparkContext
+    # stage metrics reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    records = sum(store.lastStageAttempt(s).inputRecords() for s in stages)
+    assert res["rows_updated"] == 10 and len(jobs) == 5
+    assert 1000 <= records < 1100, records
+    assert _rows(txlog.read_table(spark, root).filter("id in (99, 100, 109)")) == [
+        (99, 99.0), (100, 200.0), (109, 218.0)
+    ]
